@@ -110,15 +110,6 @@ def shingles_of_tokens(toks: Column, k: int = 3) -> Column:
     )
 
 
-def shingles(text: Column, k: int = 3) -> Column:
-    """k-word shingles via a sequence/slice HOF — no explode, no
-    shuffle; the MinHash building block. NOTE: inlines tokenization
-    into the per-position lambda — fine for k=1 or one-shot use, but
-    hot paths should materialize the token array and call
-    shingles_of_tokens (see that docstring)."""
-    return shingles_of_tokens(tokens(text), k)
-
-
 def shingle_fingerprint_of_tokens(toks: Column, k: int = 3) -> Column:
     """Rolling-hash document fingerprint over an ALREADY-MATERIALIZED
     token-array column: the minimum md5 over k-word shingles
@@ -127,9 +118,3 @@ def shingle_fingerprint_of_tokens(toks: Column, k: int = 3) -> Column:
     (the shingles_of_tokens aliased-fold rule)."""
     return F.array_min(F.transform(shingles_of_tokens(toks, k), F.md5))
 
-
-def shingle_fingerprint(text: Column, k: int = 3) -> Column:
-    """shingle_fingerprint_of_tokens with inline tokenization — fine
-    for one-shot use; hot paths should materialize the token array
-    (the per-position shingle lambda re-tokenizes otherwise)."""
-    return F.array_min(F.transform(shingles(text, k), F.md5))

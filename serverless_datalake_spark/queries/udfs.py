@@ -228,8 +228,8 @@ def udtf_ngram_generator(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-expanding shape contamination/dedup pipelines use when the
     generator logic outgrows HOFs (custom tokenizers, byte-aware
     windows). Like the tokenizer UDTF, this exact shape HAS a codegen
-    twin (textops.shingles + posexplode, used by the minhash family) —
-    the UDTF exists to prove the escape hatch carries the same
+    twin (textops.shingles_of_tokens + posexplode, used by the minhash
+    family) — the UDTF exists to prove the escape hatch carries the same
     semantics when the built-ins stop being expressive enough."""
     from pyspark.sql.functions import udtf
 

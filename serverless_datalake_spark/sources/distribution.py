@@ -1,103 +1,47 @@
 """Distribution topics (reference E3, SURVEY.md §3): per-source
 delivery with late-bound topic resolution.
 
-The reference publishes each record to an SNS topic whose ARN is
-resolved at publish time from SSM (`/{stack}/DistributionTopics/
-{source}`, stack.py:240–246, recorder:59–60) — producers carry no
-topic configuration. Here the registry is a config mapping
-source → sink path, resolved at delivery time with the same
-late-binding property: registering a new source requires no change to
-the ingest job.
+The reference publishes each record to its source's SNS topic, whose
+ARN is resolved at publish time from SSM (`/{stack}/DistributionTopics/
+{source}`, stack.py:240–246, recorder:59–60), and the test subscriber
+reads that topic (stack.py:251–265). Here delivery has one writer:
+`ingest.fan_out` appends each ingested batch (and each replay) to one
+Hive-partitioned table, ``<root>/source=<s>/``, so a topic is a
+partition of the delivery root. A subscriber reads the root filtered
+on its source, and partition pruning keeps that scan to one directory.
 
-A delivery is one partitioned write per topic. The loop is over
-SOURCES (bounded, like the reference's topic count), not records —
-each iteration is a fully distributed pruned write.
+Source names are event DATA. Spark escapes partition values on write
+(``../../x`` → ``source=..%2F..%2Fx``, ``a:b`` → ``source=a%3Ab``) and
+unescapes them on read, so every topic stays one directory under the
+root: no path is ever built from a source name.
+
+Late binding stays with the registry: an operator may register a
+source to another sink path, which its subscriber then reads instead
+(the analog of the SSM parameter-by-name lookup). Registering a new
+source needs no change to the ingest job.
 """
 
 from __future__ import annotations
-
-import os
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
 class TopicRegistry:
-    """source → sink path, with a default-root fallback (the analog of
-    the SSM parameter-by-name lookup)."""
+    """The delivery root, plus operator-registered per-source sink
+    paths that override it."""
 
     def __init__(self, default_root: str, overrides: dict[str, str] | None = None):
         self.default_root = default_root
         self.overrides = dict(overrides or {})
 
-    def resolve(self, source: str) -> str:
-        if source in self.overrides:
-            return self.overrides[source]
-        # source values come straight from event DATA; reject anything
-        # that would escape the topics root (path traversal / absolute
-        # paths — os.path.join discards the root for an absolute second
-        # argument) instead of writing to a data-controlled location
-        if (
-            not source
-            or os.path.isabs(source)
-            or ".." in source.split("/")
-            or "\\" in source
-        ):
-            raise ValueError(f"unsafe topic source name: {source!r}")
-        return os.path.join(self.default_root, source)
+    def resolve(self, source: str) -> str | None:
+        """The sink registered for ``source``; None means its partition
+        of ``default_root``."""
+        return self.overrides.get(source)
 
     def register(self, source: str, path: str) -> None:
         self.overrides[source] = path
-
-
-def deliver(
-    events: DataFrame,
-    registry: TopicRegistry,
-    source_col: str = "source",
-) -> dict[str, str]:
-    """R11 fan-out: every record lands in its source's topic sink.
-    Returns {source: delivered_path}."""
-    # one materialization serves the distinct-collect AND every
-    # per-topic write (unpersisted, Spark recomputed the batch S+1
-    # times — micro-batch latency multiplied by the topic count)
-    events = events.persist()
-    try:
-        sources = [r[0] for r in events.select(source_col).distinct().collect()]
-        # resolve EVERY topic before the first write: a ValueError
-        # raised mid-loop would leave earlier topics already appended,
-        # so a retried batch duplicates them (append mode has no batch
-        # partitioning to overwrite). Unsafe source names are data, not
-        # caller bugs — route them to the quarantine topic like nulls,
-        # so only a genuine registry failure aborts, and it aborts
-        # before any row lands.
-        resolved: list[tuple[object, str, str]] = []  # (match value, topic, path)
-        quarantined: list[str] = []
-        for s in sorted(sources, key=str):
-            # null source: route to an explicit quarantine topic with a
-            # null-safe match (equality never matches NULL rows — they
-            # would silently reach no topic, breaking conservation)
-            topic = s if s is not None else "__unknown__"
-            try:
-                resolved.append((s, topic, registry.resolve(topic)))
-            except ValueError:
-                quarantined.append(s)
-        delivered = {}
-        for s, topic, path in resolved:
-            events.where(F.col(source_col).eqNullSafe(F.lit(s))).write.mode(
-                "append"
-            ).parquet(path)
-            delivered[topic] = path
-        if quarantined:
-            qpath = registry.resolve("__unknown__")
-            events.where(F.col(source_col).isin(quarantined)).write.mode(
-                "append"
-            ).parquet(qpath)
-            for s in quarantined:
-                delivered[s] = qpath
-    finally:
-        events.unpersist()
-    return delivered
 
 
 def subscribe(
@@ -106,15 +50,7 @@ def subscribe(
     """E3 consumption: a subscriber reads exactly its topic (the
     test_subscriber analog, stack.py:251–265 — but a real reader, not
     a log line)."""
-    return spark.read.parquet(registry.resolve(source))
-
-
-def make_foreach_batch_deliverer(
-    registry: TopicRegistry, source_col: str = "source"
-) -> Callable[[DataFrame, int], None]:
-    """Adapter for streaming: writeStream.foreachBatch(this)."""
-
-    def _deliver(batch: DataFrame, _batch_id: int) -> None:
-        deliver(batch, registry, source_col)
-
-    return _deliver
+    path = registry.resolve(source)
+    if path is not None:
+        return spark.read.parquet(path)
+    return spark.read.parquet(registry.default_root).where(F.col("source") == source)

@@ -6,7 +6,7 @@ One declarative job replaces the reference's five-service hop chain
 
   events.json.gz ──read──► lake (partitionBy source, sorted by ts)
                       ├──► catalog append (source, ingest_ts, file_key)
-                      └──► fan-out: per-source delivery (sink per source)
+                      └──► fan-out: delivery root, one partition per source
 
 The catalog is itself a partitioned Parquet table, so the DynamoDB
 (pk=Source, sk=Timestamp) query shape (stack.py:63–77) becomes
@@ -15,7 +15,7 @@ partition pruning + min/max skipping.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from serverless_datalake_spark.sources import lake
@@ -46,19 +46,24 @@ def read_catalog(spark: SparkSession, catalog_path: str) -> DataFrame:
     return spark.read.parquet(catalog_path)
 
 
-def fan_out(events: DataFrame, delivery_root: str) -> list[str]:
-    """R10/R11: per-source delivery. The reference loops SNS publishes
-    per record (recorder:55–65); here one partitioned write delivers
-    every record to its source's directory — subscribers read their
-    own partition. Returns the source list delivered."""
+def with_source(events: DataFrame, source_col: str) -> DataFrame:
+    """The routing column: ``source`` = ``source_col`` as a string, with
+    null and empty values sent to an explicit ``__unknown__`` quarantine
+    source. Spark writes both as the Hive default partition and reads
+    them back as NULL, so such rows would reach no subscriber and their
+    catalog file_key (a concat with the source) would be NULL, out of
+    reach of every replay."""
+    name = F.nullif(F.col(source_col).cast("string"), F.lit(""))
+    return events.withColumn("source", F.coalesce(name, F.lit("__unknown__")))
+
+
+def fan_out(events: DataFrame, delivery_root: str) -> None:
+    """R10/R11: per-source delivery, the one delivery writer. The
+    reference loops SNS publishes per record (recorder:55–65); here one
+    partitioned write delivers every record to its source's directory
+    ``<delivery_root>/source=<s>/``, and subscribers read their own
+    partition (distribution.subscribe)."""
     events.write.mode("append").partitionBy("source").parquet(delivery_root)
-    # key=str survives a non-string source column; nulls are
-    # normalized to __unknown__ upstream (ingest_batch) so no None
-    # reaches the sort — but don't crash if a caller skipped that
-    return sorted(
-        (r["source"] for r in events.select("source").distinct().collect()),
-        key=str,
-    )
 
 
 def ingest_batch(
@@ -73,28 +78,26 @@ def ingest_batch(
     """E1 end-to-end: read staging JSON, land in the lake partitioned
     by source, append catalog entries, fan out. Returns counts."""
     raw = lake.read_json_events(spark, staging_path)
-    # null source (missing event_type) routes to an explicit quarantine
-    # partition: a NULL partition value would land under Hive's default
-    # dir and then crash the post-write source listing (None < str),
-    # reporting failure AFTER the writes committed — a retry would
-    # duplicate the batch
-    events = raw.withColumn(
-        "source", F.coalesce(F.col(source_col).cast("string"), F.lit("__unknown__"))
-    ).withColumn("batch_id", F.lit(batch_id))
-    # ONE materialization feeds the lake write, the catalog aggregate,
-    # the fan-out, and the count: unpersisted, each action re-read and
-    # re-parsed the staging JSON (~5x the scan cost), and a file
-    # landing in staging between actions made lake/catalog/count
-    # mutually inconsistent
+    events = with_source(raw, source_col).withColumn("batch_id", F.lit(batch_id))
+    # ONE materialization feeds the lake write, the catalog aggregate
+    # and the fan-out: unpersisted, each action re-read and re-parsed
+    # the staging JSON, and a file landing in staging between actions
+    # made lake and catalog mutually inconsistent
     events = events.persist()
     try:
         lake.write_partitioned(events, lake_path)
-        entries = build_catalog_entries(events, batch_id)
+        # the counts come from the catalog write itself (one row per
+        # source, n_records each), not from extra jobs over the batch
+        counts = Observation()
+        entries = build_catalog_entries(events, batch_id).observe(
+            counts,
+            F.coalesce(F.sum("n_records"), F.lit(0)).alias("n_events"),
+            F.count(F.lit(1)).alias("n_sources"),
+        )
         append_catalog(entries, catalog_path)
-        delivered: list[str] = []
         if delivery_root:
-            delivered = fan_out(events, delivery_root)
-        n = events.count()
+            fan_out(events, delivery_root)
     finally:
         events.unpersist()
-    return {"n_events": n, "n_sources": len(delivered), "batch_id": batch_id}  # type: ignore[dict-item]
+    n = counts.get
+    return {"n_events": n["n_events"], "n_sources": n["n_sources"], "batch_id": batch_id}  # type: ignore[dict-item]

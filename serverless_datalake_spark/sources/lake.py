@@ -58,10 +58,6 @@ def write_partitioned(
     )
 
 
-def read_lake(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def read_json_events(spark: SparkSession, path: str) -> DataFrame:
     """R6/R7: scan+parse. Spark decompresses .gz transparently and
     parses JSON-lines natively — the reference's fetch+gunzip+

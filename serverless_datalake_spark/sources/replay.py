@@ -14,10 +14,10 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from serverless_datalake_spark.sources.ingest import read_catalog
+from serverless_datalake_spark.sources.ingest import fan_out, read_catalog
 
 
 def select_replay_keys(
@@ -88,7 +88,8 @@ def replay(
     interval_start: dt.datetime | str,
     interval_end: dt.datetime | str,
 ) -> dict[str, int]:
-    """R13: re-read the selected batches from the lake and re-deliver.
+    """R13: re-read the selected batches from the lake and re-deliver
+    them through ingest's fan-out, the one delivery writer.
 
     The lake is partitioned by source, so the re-read is a pruned scan
     filtered to the cataloged batch keys; no catalog write happens."""
@@ -106,13 +107,11 @@ def replay(
             f"lake at {lake_path} has no batch_id column; replay cannot "
             "select the requested interval"
         )
-    # distributed key selection (see read_lake_as_of for rationale)
+    # distributed key selection (see read_lake_as_of for rationale);
+    # the delivered row count comes from the delivery write itself
+    delivered = Observation()
     events = events.join(
         F.broadcast(_batch_id_keys(keys)), on="batch_id", how="left_semi"
-    ).persist()  # one materialization feeds the write AND the count
-    try:
-        events.write.mode("append").partitionBy("source").parquet(delivery_root)
-        n_events = events.count()
-    finally:
-        events.unpersist()
-    return {"n_batches": n_batches, "n_events": n_events}
+    ).observe(delivered, F.count(F.lit(1)).alias("n_events"))
+    fan_out(events, delivery_root)
+    return {"n_batches": n_batches, "n_events": delivered.get["n_events"]}

@@ -709,8 +709,7 @@ def txlog_write_partitioned(
     # non-deterministic or moving source (a staging dir receiving
     # files mid-commit) could surface values the distinct pass never
     # saw — rows silently absent from every slice and therefore from
-    # the committed entry (round-7 review finding; deliver() and
-    # ingest_batch already persist for exactly this reason)
+    # the committed entry (ingest_batch persists for the same reason)
     df = df.persist()
     try:
         values = [r[0] for r in df.select(part_col).distinct().collect()]

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from serverless_datalake_spark.sources.ingest import build_catalog_entries
+from serverless_datalake_spark.sources.ingest import build_catalog_entries, with_source
 from serverless_datalake_spark.sources.lake import EVENTS_JSON_SCHEMA
 
 
@@ -45,9 +45,8 @@ def read_event_stream(
         spark.readStream.schema(EVENTS_JSON_SCHEMA)
         .option("maxFilesPerTrigger", 16)
         .json(staging_path)
-        .withColumn("source", F.col(source_col))
     )
-    stream = stream.withWatermark("ts", watermark)
+    stream = with_source(stream, source_col).withWatermark("ts", watermark)
     if dedup:
         # late-beyond-watermark re-deliveries age out of the state
         # store; within-watermark duplicates are dropped exactly-once

@@ -13,7 +13,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from serverless_datalake_spark.sources import ingest, lake, replay
+from serverless_datalake_spark.sources import distribution, ingest, lake, replay
 from serverless_datalake_spark.streaming import pipeline as streaming_pipeline
 
 
@@ -150,6 +150,9 @@ def test_replay_selects_exact_range_and_does_not_recatalog(spark, paths):
     assert res["n_events"] == 20  # 40 events, half clicks
     delivered = spark.read.parquet(paths["delivery"])
     assert delivered.count() == 20
+    # re-delivery goes through the fan-out layout subscribers read
+    reg = distribution.TopicRegistry(paths["delivery"])
+    assert distribution.subscribe(spark, reg, "clicks").count() == res["n_events"]
     assert delivered.where(F.col("event_id") >= 1000).count() == 0
 
     # recorder:94-99 — replay writes NO new catalog entries
@@ -213,30 +216,82 @@ def test_snapshot_read_as_of(spark, paths):
     assert "batch_id IN (" not in plan
 
 
-def test_topic_registry_fanout_and_subscribe(spark, tmp_path):
-    """E3: late-bound per-source topics — every record reaches exactly
-    its source's topic; a subscriber sees only its own topic; a newly
-    registered source needs no producer change."""
-    from serverless_datalake_spark.sources import distribution
-
-    reg = distribution.TopicRegistry(str(tmp_path / "topics"))
-    reg.register("tweets", str(tmp_path / "special-tweets-sink"))  # override
-
-    _write_staging(str(tmp_path / "stg"), _mk_events(80))
-    events = (
-        lake.read_json_events(spark, str(tmp_path / "stg"))
-        .withColumn("source", F.col("event_type"))
+def test_subscribe_reads_ingest_fanout_by_partition(spark, tmp_path):
+    """E3 without overrides: a subscriber reads ingest's fan-out as its
+    partition of the delivery root. Every record reaches exactly its
+    source's subscriber, including null and empty sources (routed to
+    __unknown__) and names that look like paths: Spark escapes them
+    into one directory each, so nothing lands outside the root."""
+    want = {"clicks": 6, "tweets": 5, "../../tmp/evil": 3, "ads/click": 2, "a:b": 1, "/etc/cron.d/x": 1}
+    types = [t for t, n in want.items() for _ in range(n)] + [None] * 3 + [""]
+    want["__unknown__"] = 4  # the 3 null event_types and the empty one
+    evs = _mk_events(len(types))
+    for e, t in zip(evs, types):
+        e["event_type"] = t
+    _write_staging(str(tmp_path / "stg"), evs)
+    delivery = tmp_path / "delivery"
+    res = ingest.ingest_batch(
+        spark, str(tmp_path / "stg"), str(tmp_path / "lake"), str(tmp_path / "cat"), str(delivery), "b0"
     )
-    delivered = distribution.deliver(events, reg)
-    assert set(delivered) == {"clicks", "tweets"}
-    assert delivered["tweets"].endswith("special-tweets-sink")
+    assert res == {"n_events": len(evs), "n_sources": len(want), "batch_id": "b0"}
 
+    reg = distribution.TopicRegistry(str(delivery))
+    got = {}
+    for source in want:
+        df = distribution.subscribe(spark, reg, source)
+        got[source] = df.count()
+        assert df.where(F.col("source") != source).count() == 0, source
+    assert got == want
+    assert sum(got.values()) == len(evs)
+
+    # one escaped directory per source, all of them directly under the
+    # delivery root; no other directory was created
+    assert sorted(os.listdir(tmp_path)) == ["cat", "delivery", "lake", "stg"]
+    topics = [d for d in os.listdir(delivery) if (delivery / d).is_dir()]
+    assert len(topics) == len(want) and all(d.startswith("source=") for d in topics)
+    for d in topics:
+        assert all((delivery / d / f).is_file() for f in os.listdir(delivery / d))
+
+
+def test_topic_registry_fanout_and_subscribe(spark, tmp_path):
+    """E3 late binding: a source registered to another sink is read
+    from that sink, with no change to the producer; unregistered
+    sources still read their partition of the delivery root."""
+    stg, lk, cat = (str(tmp_path / d) for d in ("stg", "lake", "cat"))
+    delivery = str(tmp_path / "delivery")
+    _write_staging(stg, _mk_events(80))
+    ingest.ingest_batch(spark, stg, lk, cat, delivery, "b0")
+    # a replay of clicks into a separate sink, registered as its topic
+    sink = str(tmp_path / "special-clicks-sink")
+    replay.replay(spark, cat, lk, sink, "clicks", "2000-01-01", "2100-01-01")
+
+    reg = distribution.TopicRegistry(delivery)
+    reg.register("clicks", sink)
+    assert reg.resolve("clicks") == sink and reg.resolve("tweets") is None
     clicks = distribution.subscribe(spark, reg, "clicks")
     tweets = distribution.subscribe(spark, reg, "tweets")
     assert clicks.count() == 40 and tweets.count() == 40
     assert clicks.where(F.col("source") != "clicks").count() == 0
-    # totals conserved: fan-out delivers every record exactly once
-    assert clicks.count() + tweets.count() == events.count()
+    assert tweets.where(F.col("source") != "tweets").count() == 0
+
+
+def test_ingest_empty_staging_blob_counts_zero(spark, paths):
+    _write_staging(paths["staging"], [])
+    res = ingest.ingest_batch(
+        spark, paths["staging"], paths["lake"], paths["catalog"], paths["delivery"], "b0"
+    )
+    assert res == {"n_events": 0, "n_sources": 0, "batch_id": "b0"}
+
+
+def test_ingest_without_delivery_counts_sources(spark, paths):
+    """n_sources comes from the catalog rows written, so it is the
+    batch's source count whether or not the batch is delivered."""
+    _write_staging(paths["staging"], _mk_events(10))
+    res = ingest.ingest_batch(
+        spark, paths["staging"], paths["lake"], paths["catalog"], None, "b0"
+    )
+    assert res == {"n_events": 10, "n_sources": 2, "batch_id": "b0"}
+    assert not os.path.exists(paths["delivery"])
 
 
 def test_json_gz_roundtrip_reference_format(spark, tmp_path, sf_dir):
@@ -326,14 +381,32 @@ def test_streaming_ingest_dedup_and_catalog(spark, paths):
     assert spark.read.parquet(paths["lake"]).count() == 100
 
 
+def test_streaming_null_source_is_catalogued_as_unknown(spark, paths):
+    """The streaming ingest routes a null event_type to __unknown__ as
+    the batch ingest does: a NULL source would give its catalog row a
+    NULL file_key, which no replay can select."""
+    evs = _mk_events(10)
+    evs[3]["event_type"] = None
+    _write_staging(paths["staging"], evs)
+    streaming_pipeline.run_ingest_available_now(
+        spark,
+        paths["staging"],
+        paths["lake"],
+        paths["catalog"],
+        None,
+        paths["checkpoint"],
+    )
+    cat = ingest.read_catalog(spark, paths["catalog"])
+    unknown = cat.where(F.col("source") == "__unknown__").collect()
+    assert len(unknown) == 1 and unknown[0]["n_records"] == 1
+    assert unknown[0]["file_key"] is not None
+    assert cat.where(F.col("file_key").isNull()).count() == 0
+
+
 def test_null_source_routes_to_quarantine_not_crash(spark, tmp_path):
     """A record missing event_type (null source) must land in an
     explicit __unknown__ partition/topic — not a NULL Hive partition
-    followed by a TypeError AFTER the writes committed (a retry would
-    then duplicate the whole batch), and not a row no topic equality
-    can ever match."""
-    from serverless_datalake_spark.sources import distribution, ingest
-
+    that no catalog key or subscriber filter can ever match."""
     evs = _mk_events(6)
     evs[2]["event_type"] = None
     staging = str(tmp_path / "staging")
@@ -351,43 +424,32 @@ def test_null_source_routes_to_quarantine_not_crash(spark, tmp_path):
     assert lakedf.where(F.col("source") == "__unknown__").count() == 1
     assert lakedf.count() == 6  # conservation incl. the null-source row
 
-    # streaming-style topic delivery: null source reaches a quarantine
-    # topic via a null-safe match, totals conserved
-    reg = distribution.TopicRegistry(str(tmp_path / "topics"))
-    batch = spark.createDataFrame(
-        [(1, "clicks", 1.0), (2, None, 2.0)], "event_id long, source string, value double"
-    )
-    delivered = distribution.deliver(batch, reg)
-    assert "__unknown__" in delivered
-    assert spark.read.parquet(delivered["__unknown__"]).count() == 1
+    # the quarantine source is an ordinary topic for subscribers
+    reg = distribution.TopicRegistry(str(tmp_path / "deliv"))
+    assert distribution.subscribe(spark, reg, "__unknown__").count() == 1
 
 
 def test_deliver_quarantines_unsafe_source_names_atomically(spark, tmp_path):
-    """deliver() used to validate topic names INSIDE the write loop: an
-    unsafe name raised after earlier topics were appended, so a retried
-    batch duplicated them. Now every topic resolves before the first
-    write and unsafe names route to the quarantine topic like nulls —
-    rows conserved, no exception, nothing half-delivered."""
-    from serverless_datalake_spark.sources import distribution
-
-    reg = distribution.TopicRegistry(str(tmp_path / "topics"))
+    """Delivery of a batch mixing a safe, a traversal-shaped and a null
+    source is one partitioned write: no exception, nothing
+    half-delivered, the null row in the __unknown__ quarantine topic,
+    the unsafe name kept as one escaped directory under the root, and
+    every row delivered exactly once."""
     batch = spark.createDataFrame(
         [(1, "clicks", 1.0), (2, "../../tmp/evil", 2.0), (3, None, 3.0)],
-        "event_id long, source string, value double",
+        "event_id long, event_type string, value double",
     )
-    delivered = distribution.deliver(batch, reg)
-    assert spark.read.parquet(delivered["clicks"]).count() == 1
-    # unsafe + null rows both land in quarantine (2 rows), keyed so the
-    # caller can see which raw names were quarantined
-    assert delivered["../../tmp/evil"] == delivered["__unknown__"]
-    q = spark.read.parquet(delivered["__unknown__"])
-    assert q.count() == 2
-    assert {r["event_id"] for r in q.collect()} == {2, 3}
-    # idempotence of the conservation property: total rows out == in
-    total = sum(
-        spark.read.parquet(p).count() for p in sorted(set(delivered.values()))
-    )
-    assert total == 3
+    root = tmp_path / "topics"
+    ingest.fan_out(ingest.with_source(batch, "event_type"), str(root))
+
+    assert sorted(os.listdir(tmp_path)) == ["topics"]
+    reg = distribution.TopicRegistry(str(root))
+    ids = {
+        s: sorted(r["event_id"] for r in distribution.subscribe(spark, reg, s).collect())
+        for s in ("clicks", "../../tmp/evil", "__unknown__")
+    }
+    assert ids == {"clicks": [1], "../../tmp/evil": [2], "__unknown__": [3]}
+    assert spark.read.parquet(str(root)).count() == 3
 
 
 def test_concatenated_json_resyncs_after_midline_corruption(spark, tmp_path):
@@ -410,21 +472,26 @@ def test_concatenated_json_resyncs_after_midline_corruption(spark, tmp_path):
     assert got == [0, 1, 2]
 
 
-def test_topic_registry_rejects_unsafe_source_names(tmp_path):
-    """Topic names come from event DATA: traversal/absolute paths must
-    not resolve to a write location outside the topics root."""
-    import pytest as _pytest
+def test_topic_registry_rejects_unsafe_source_names(spark, tmp_path):
+    """Topic names come from event DATA: a traversal or absolute name
+    must not resolve to a read location outside the topics root. The
+    registry builds no path from a name; only operator-registered
+    overrides resolve to a path."""
+    root = tmp_path / "topics"
+    spark.createDataFrame([(1, "clicks")], "event_id long, source string").write.partitionBy(
+        "source"
+    ).parquet(str(root))
+    # a table planted where the traversal name would point
+    spark.createDataFrame([(9,)], "event_id long").write.parquet(str(tmp_path / "evil"))
 
-    from serverless_datalake_spark.sources.distribution import TopicRegistry
-
-    reg = TopicRegistry(str(tmp_path / "topics"))
-    for bad in ("../../tmp/evil", "/etc/cron.d/x", "a/../../b", ""):
-        with _pytest.raises(ValueError, match="unsafe topic source"):
-            reg.resolve(bad)
+    reg = distribution.TopicRegistry(str(root))
+    for bad in ("../evil", str(tmp_path / "evil"), "a/../../b", ""):
+        assert reg.resolve(bad) is None
+        assert distribution.subscribe(spark, reg, bad).count() == 0
     # explicit overrides are operator-configured, not data — allowed
     reg.register("weird", "/elsewhere/ok")
     assert reg.resolve("weird") == "/elsewhere/ok"
-    assert reg.resolve("clicks").endswith("topics/clicks")
+    assert distribution.subscribe(spark, reg, "clicks").count() == 1
 
 
 def test_replay_batch_keys_survive_slash_in_source(spark):

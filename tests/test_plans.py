@@ -529,14 +529,17 @@ def test_dpp_join_prunes_partitions_at_runtime(spark, sf_dir):
 
 
 def test_bootstrap_single_pass_no_generate(spark, sf_dir):
-    """sample_poisson_bootstrap folds all 32 replicas into one scan
-    with agg columns: no row-expanding Generate/Expand node anywhere
-    (the 32x explode alone measured ~11 s at sf0.1), and exactly the
-    two aggregate exchanges (partial -> single-partition final)."""
+    """sample_poisson_bootstrap folds all 32 replicas into agg columns
+    over one digest projection: no row-expanding Generate/Expand node
+    anywhere (the 32x explode alone measured ~11 s at sf0.1). The
+    replicas are split into 4 slice aggregates whose 1-row results are
+    combined by broadcast nested-loop cross joins; no shuffle join and
+    no cartesian product ever touches the fact rows."""
     plan = plan_of(spark, sf_dir, "sample_poisson_bootstrap")
-    assert "Generate" not in plan, plan[:1500]
-    assert "Expand" not in plan
-    assert "Join" not in plan
+    for node in ("Generate", "Expand", "SortMergeJoin", "CartesianProduct"):
+        assert node not in plan, (node, plan[:1500])
+    # the only joins are the 3 that combine the 4 single-row slices
+    assert plan.count("Join") == plan.count("BroadcastNestedLoopJoin") == 3, plan[:1500]
 
 
 def test_ngram_lambdas_tokenize_once(spark, sf_dir):
