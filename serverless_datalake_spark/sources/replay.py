@@ -17,7 +17,7 @@ import datetime as dt
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from serverless_datalake_spark.sources.ingest import fan_out, read_catalog
+from serverless_datalake_spark.sources.ingest import concurrently, fan_out, read_catalog
 
 
 def select_replay_keys(
@@ -92,11 +92,11 @@ def replay(
     them through ingest's fan-out, the one delivery writer.
 
     The lake is partitioned by source, so the re-read is a pruned scan
-    filtered to the cataloged batch keys; no catalog write happens."""
+    filtered to the cataloged batch keys; no catalog write happens.
+    The batch count and the re-delivery run as concurrent jobs."""
     keys = select_replay_keys(
         spark, catalog_path, source, interval_start, interval_end
     ).select("file_key")
-    n_batches = keys.count()
 
     events = spark.read.parquet(lake_path).where(F.col("source") == source)
     if "batch_id" not in events.columns:
@@ -113,5 +113,7 @@ def replay(
     events = events.join(
         F.broadcast(_batch_id_keys(keys)), on="batch_id", how="left_semi"
     ).observe(delivered, F.count(F.lit(1)).alias("n_events"))
-    fan_out(events, delivery_root)
+    n_batches, _ = concurrently(
+        spark, keys.count, lambda: fan_out(events, delivery_root)
+    )
     return {"n_batches": n_batches, "n_events": delivered.get["n_events"]}

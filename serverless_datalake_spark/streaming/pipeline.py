@@ -9,8 +9,8 @@ Mapping (SURVEY.md §2a):
 * R3/R4 gzip + per-source prefix → partitioned Parquet sink;
 * R9/R10/R11 catalog append + fan-out → ``foreachBatch``: one
   transaction-shaped function per micro-batch that (a) lands data
-  partitioned by source, (b) appends catalog entries keyed by the
-  batch id, (c) delivers per source;
+  partitioned by source, (b) delivers per source, (c) appends catalog
+  entries keyed by the batch id;
 * §1.4 at-least-once gap → ``withWatermark`` + ``dropDuplicates``
   makes delivery exactly-once downstream of the dedup state store;
   checkpointing makes the whole query restartable.
@@ -54,6 +54,17 @@ def read_event_stream(
     return stream
 
 
+def _overwrite_batch(df: DataFrame, path: str) -> None:
+    """Write one micro-batch's (source, batch_id) partitions, replacing
+    only those partitions (dynamic partition overwrite)."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("source", "batch_id")
+        .parquet(path)
+    )
+
+
 def start_ingest_query(
     stream: DataFrame,
     lake_path: str,
@@ -84,32 +95,19 @@ def start_ingest_query(
         # write re-ran the whole batch plan — JSON scan + the stateful
         # dedup — so the steady ingest cost was up to 3x for nothing
         # (round-7 review finding; the multi-sink persist is the
-        # documented foreachBatch pattern)
+        # documented foreachBatch pattern). Data before metadata: the
+        # catalog rows are written last, so they name committed lake
+        # data and deliveries.
         batch = batch.withColumn("batch_id", F.lit(bid)).persist()
         try:
-            (
-                batch.repartition("source")
-                .sortWithinPartitions("source", "ts")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("source", "batch_id")
-                .parquet(lake_path)
-            )
-            entries = build_catalog_entries(batch, bid)
-            (
-                entries.withColumn("batch_id", F.lit(bid))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("source", "batch_id")
-                .parquet(catalog_path)
+            _overwrite_batch(
+                batch.repartition("source").sortWithinPartitions("source", "ts"),
+                lake_path,
             )
             if delivery_root:
-                (
-                    batch.write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("source", "batch_id")
-                    .parquet(delivery_root)
-                )
+                _overwrite_batch(batch, delivery_root)
+            entries = build_catalog_entries(batch, bid)
+            _overwrite_batch(entries.withColumn("batch_id", F.lit(bid)), catalog_path)
         finally:
             batch.unpersist()
 

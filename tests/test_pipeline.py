@@ -5,10 +5,13 @@ ingest format (§1.3), streaming ingest with dedup (§1.4)."""
 
 from __future__ import annotations
 
+import ast
 import glob
 import gzip
 import json
 import os
+import pathlib
+import warnings
 
 import pytest
 from pyspark.sql import functions as F
@@ -233,7 +236,12 @@ def test_subscribe_reads_ingest_fanout_by_partition(spark, tmp_path):
     res = ingest.ingest_batch(
         spark, str(tmp_path / "stg"), str(tmp_path / "lake"), str(tmp_path / "cat"), str(delivery), "b0"
     )
-    assert res == {"n_events": len(evs), "n_sources": len(want), "batch_id": "b0"}
+    assert res == {
+        "n_events": len(evs),
+        "n_sources": len(want),
+        "n_quarantined": want["__unknown__"],
+        "batch_id": "b0",
+    }
 
     reg = distribution.TopicRegistry(str(delivery))
     got = {}
@@ -280,7 +288,7 @@ def test_ingest_empty_staging_blob_counts_zero(spark, paths):
     res = ingest.ingest_batch(
         spark, paths["staging"], paths["lake"], paths["catalog"], paths["delivery"], "b0"
     )
-    assert res == {"n_events": 0, "n_sources": 0, "batch_id": "b0"}
+    assert res == {"n_events": 0, "n_sources": 0, "n_quarantined": 0, "batch_id": "b0"}
 
 
 def test_ingest_without_delivery_counts_sources(spark, paths):
@@ -290,7 +298,7 @@ def test_ingest_without_delivery_counts_sources(spark, paths):
     res = ingest.ingest_batch(
         spark, paths["staging"], paths["lake"], paths["catalog"], None, "b0"
     )
-    assert res == {"n_events": 10, "n_sources": 2, "batch_id": "b0"}
+    assert res == {"n_events": 10, "n_sources": 2, "n_quarantined": 0, "batch_id": "b0"}
     assert not os.path.exists(paths["delivery"])
 
 
@@ -537,3 +545,134 @@ def test_replay_requires_batch_ids(spark, tmp_path):
             dt.datetime(2024, 1, 1),
             dt.datetime(2024, 1, 2),
         )
+
+
+def test_ingest_counts_quarantined_records(spark, paths):
+    """n_quarantined is the number of records routed to the quarantine
+    source: null, empty and unparseable event types alike, and equal
+    to the quarantine source's catalog n_records."""
+    evs = _mk_events(8)
+    evs[1]["event_type"] = None
+    evs[4]["event_type"] = ""
+    os.makedirs(paths["staging"], exist_ok=True)
+    with gzip.open(os.path.join(paths["staging"], "part-0.json.gz"), "wt") as f:
+        for e in evs:
+            f.write(json.dumps(e) + "\n")
+        f.write('{"event_id": 99, "event_type": "clicks", "ts":\n')  # malformed
+    res = ingest.ingest_batch(
+        spark, paths["staging"], paths["lake"], paths["catalog"], paths["delivery"], "b0"
+    )
+    assert res["n_events"] == 9 and res["n_quarantined"] == 3
+    cat = ingest.read_catalog(spark, paths["catalog"])
+    unknown = cat.where(F.col("source") == ingest.QUARANTINE_SOURCE).collect()
+    assert [r["n_records"] for r in unknown] == [3]
+
+
+def _jobs_after(sc, job_id: int) -> list:
+    """Status-store records of the jobs with an id above ``job_id``."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc._jsc.sc().statusStore().jobsList(None)
+    return [jobs.apply(i) for i in range(jobs.size()) if jobs.apply(i).jobId() > job_id]
+
+
+def test_concurrent_sinks_keep_the_callers_job_group(spark, paths):
+    """Every job that ingest_batch and replay run, on whatever thread,
+    carries the caller's job group, so it can be cancelled and
+    attributed with the caller's other work."""
+    sc = spark.sparkContext
+    _write_staging(paths["staging"], _mk_events(20))
+    last = max((j.jobId() for j in _jobs_after(sc, -1)), default=-1)
+    sc.setJobGroup("g", "concurrent sinks")
+    try:
+        with warnings.catch_warnings():
+            # without the session, thread wrapping drops the tags
+            warnings.filterwarnings("error", message=".*Tags will not be inherited")
+            ingest.ingest_batch(
+                spark, paths["staging"], paths["lake"], paths["catalog"], paths["delivery"], "b0"
+            )
+            res = replay.replay(
+                spark,
+                paths["catalog"],
+                paths["lake"],
+                paths["delivery"] + "2",
+                "clicks",
+                "2000-01-01",
+                "2100-01-01",
+            )
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert res == {"n_batches": 1, "n_events": 10}
+    jobs = _jobs_after(sc, last)
+    assert len(jobs) >= 5  # three ingest sinks, replay's count and fan-out
+    assert sorted(j.jobId() for j in jobs) == sorted(
+        j for j in sc.statusTracker().getJobIdsForGroup("g") if j > last
+    )
+
+
+def _files_under(root: str) -> list[str]:
+    return [os.path.join(b, n) for b, _, names in os.walk(root) for n in names]
+
+
+def test_ingest_lake_failure_writes_no_catalog_or_delivery(spark, paths):
+    """Catalog rows and deliveries are published only once the lake has
+    committed: a failed lake write leaves no catalog row naming missing
+    data, no delivery a retry would duplicate, and no persisted batch."""
+    _write_staging(paths["staging"], _mk_events(10))
+    pathlib.Path(paths["lake"]).write_text("not a directory")
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with pytest.raises(Exception) as err:
+        ingest.ingest_batch(
+            spark, paths["staging"], paths["lake"], paths["catalog"], paths["delivery"], "b0"
+        )
+    assert paths["lake"] in str(err.value)
+    assert _files_under(paths["catalog"]) == []
+    assert _files_under(paths["delivery"]) == []
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+
+
+def test_ingest_sink_failure_is_raised_after_the_other_sinks(spark, paths):
+    """A failing catalog write is raised only after the lake and the
+    delivery writes have finished: the lake keeps its committed rows,
+    the staged delivery is dropped unpublished, no job is left running
+    and the batch is unpersisted."""
+    sc = spark.sparkContext
+    _write_staging(paths["staging"], _mk_events(10))
+    pathlib.Path(paths["catalog"]).write_text("not a directory")
+    persisted = sc._jsc.getPersistentRDDs().size()
+    with pytest.raises(Exception) as err:
+        ingest.ingest_batch(
+            spark, paths["staging"], paths["lake"], paths["catalog"], paths["delivery"], "b0"
+        )
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getActiveJobsIds()) == []
+    assert paths["catalog"] in str(err.value)
+    assert spark.read.parquet(paths["lake"]).count() == 10
+    assert _files_under(paths["delivery"]) == []
+    assert sc._jsc.getPersistentRDDs().size() == persisted
+
+
+def test_spark_threads_only_through_concurrently():
+    """Concurrent Spark actions go through ingest.concurrently, which
+    carries the caller's job group and tags into its threads; a bare
+    ThreadPoolExecutor or Thread elsewhere in the package would run
+    jobs outside them."""
+    pkg = pathlib.Path(ingest.__file__).resolve().parents[1]
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        allowed = set()
+        if path.resolve() == pathlib.Path(ingest.__file__).resolve():
+            helper = next(
+                n for n in tree.body
+                if isinstance(n, ast.FunctionDef) and n.name == "concurrently"
+            )
+            allowed = {id(n) for n in ast.walk(helper)}
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call) or id(node) in allowed:
+                continue
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+            if name in ("ThreadPoolExecutor", "Thread"):
+                offenders.append(f"{path.relative_to(pkg)}:{node.lineno}")
+    assert offenders == []
