@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from serverless_datalake_spark.sources import lake
+
 
 class TopicRegistry:
     """The delivery root, plus operator-registered per-source sink
@@ -49,8 +51,10 @@ def subscribe(
 ) -> DataFrame:
     """E3 consumption: a subscriber reads exactly its topic (the
     test_subscriber analog, stack.py:251–265 — but a real reader, not
-    a log line)."""
+    a log line). The delivery root is read with the lake's schema; a
+    registered path's layout is the operator's, so its schema is read
+    from the files."""
     path = registry.resolve(source)
     if path is not None:
         return spark.read.parquet(path)
-    return spark.read.parquet(registry.default_root).where(F.col("source") == source)
+    return lake.read_lake(spark, registry.default_root).where(F.col("source") == source)

@@ -99,7 +99,9 @@ def append_catalog(entries: DataFrame, catalog_path: str) -> None:
 
 
 def read_catalog(spark: SparkSession, catalog_path: str) -> DataFrame:
-    return spark.read.parquet(catalog_path)
+    """Schema-first, like ``lake.read_lake``; the streaming sink's
+    ``batch_id=`` partitions still come through as a column."""
+    return spark.read.schema(CATALOG_SCHEMA).parquet(catalog_path)
 
 
 def with_source(events: DataFrame, source_col: str) -> DataFrame:

@@ -12,6 +12,15 @@ The reference stores gzip JSON blobs under one S3 prefix per source
   sort key (SURVEY.md §4);
 * compression is a writer option (GZIP in the reference; snappy
   default here — better scan speed, similar ratio for Parquet).
+
+The schema is part of the contract. The engine fixes the shape of its
+own tables (the lake and the delivery root hold ``LAKE_SCHEMA`` rows,
+the catalog ``ingest.CATALOG_SCHEMA`` rows), so it reads them with that
+schema instead of inferring it: inference is a Spark job that opens a
+data file's footer (one more serial GET per read on an object store),
+and it fails outright on a table that has no data file yet. Of these
+tables' readers only ``read_with_evolved_schema`` still reads the
+footers, for lakes whose batches were written with differing schemas.
 """
 
 from __future__ import annotations
@@ -27,6 +36,10 @@ EVENTS_JSON_SCHEMA = (
     "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, "
     "value DOUBLE, props STRING"
 )
+
+# a lake or delivery row: the parsed event plus the two columns ingest
+# adds, the routing source and the batch id
+LAKE_SCHEMA = EVENTS_JSON_SCHEMA + ", source STRING, batch_id STRING"
 
 
 def write_partitioned(
@@ -56,6 +69,14 @@ def write_partitioned(
         .partitionBy(partition_col)
         .parquet(path)
     )
+
+
+def read_lake(spark: SparkSession, path: str) -> DataFrame:
+    """Schema-first scan of a lake or delivery root, in either writer's
+    layout (``source=`` partitions, plus ``batch_id=`` ones from the
+    streaming sink); needs no job to learn the shape. A column missing
+    from a file reads as NULL."""
+    return spark.read.schema(LAKE_SCHEMA).parquet(path)
 
 
 def read_json_events(spark: SparkSession, path: str) -> DataFrame:

@@ -575,6 +575,11 @@ def _jobs_after(sc, job_id: int) -> list:
     return [jobs.apply(i) for i in range(jobs.size()) if jobs.apply(i).jobId() > job_id]
 
 
+def _clear_job_group(sc) -> None:
+    for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+        sc.setLocalProperty(key, None)
+
+
 def test_concurrent_sinks_keep_the_callers_job_group(spark, paths):
     """Every job that ingest_batch and replay run, on whatever thread,
     carries the caller's job group, so it can be cancelled and
@@ -600,11 +605,10 @@ def test_concurrent_sinks_keep_the_callers_job_group(spark, paths):
                 "2100-01-01",
             )
     finally:
-        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(key, None)
+        _clear_job_group(sc)
     assert res == {"n_batches": 1, "n_events": 10}
     jobs = _jobs_after(sc, last)
-    assert len(jobs) >= 5  # three ingest sinks, replay's count and fan-out
+    assert len(jobs) >= 5  # three ingest sinks, replay's catalog totals and fan-out
     assert sorted(j.jobId() for j in jobs) == sorted(
         j for j in sc.statusTracker().getJobIdsForGroup("g") if j > last
     )
@@ -676,3 +680,102 @@ def test_spark_threads_only_through_concurrently():
             if name in ("ThreadPoolExecutor", "Thread"):
                 offenders.append(f"{path.relative_to(pkg)}:{node.lineno}")
     assert offenders == []
+
+
+def test_tables_of_an_empty_batch_read_as_empty(spark, paths):
+    """A lake whose only batch was empty has no data file to infer a
+    schema from; the engine reads its tables with their own schemas,
+    so every read returns nothing instead of failing."""
+    _write_staging(paths["staging"], [])
+    ingest.ingest_batch(
+        spark, paths["staging"], paths["lake"], paths["catalog"], paths["delivery"], "b0"
+    )
+    assert ingest.read_catalog(spark, paths["catalog"]).count() == 0
+    res = replay.replay(
+        spark, paths["catalog"], paths["lake"], paths["delivery"], "clicks", "2000-01-01", "2100-01-01"
+    )
+    assert res == {"n_batches": 0, "n_events": 0}
+    assert replay.read_lake_as_of(spark, paths["catalog"], paths["lake"], "2100-01-01").count() == 0
+    reg = distribution.TopicRegistry(paths["delivery"])
+    assert distribution.subscribe(spark, reg, "clicks").count() == 0
+
+
+def test_reading_engine_tables_launches_no_job(spark, paths):
+    """The engine's tables are read with their fixed schemas: building
+    a read of the catalog, the lake or the delivery root runs no Spark
+    job (schema inference would run one per table to read a footer)."""
+    sc = spark.sparkContext
+    _write_staging(paths["staging"], _mk_events(20))
+    ingest.ingest_batch(
+        spark, paths["staging"], paths["lake"], paths["catalog"], paths["delivery"], "b0"
+    )
+    sc.setJobGroup("schema-first-reads", "reads without an action")
+    try:
+        ingest.read_catalog(spark, paths["catalog"])
+        lake.read_lake(spark, paths["lake"])
+        distribution.subscribe(spark, distribution.TopicRegistry(paths["delivery"]), "clicks")
+        replay.read_lake_as_of(spark, paths["catalog"], paths["lake"], "2100-01-01")
+    finally:
+        _clear_job_group(sc)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("schema-first-reads")) == []
+
+
+def _sorted_rows(df) -> list:
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+@pytest.mark.parametrize("writer", ["batch", "streaming"])
+def test_schema_constants_match_what_the_writers_produce(spark, paths, writer):
+    """LAKE_SCHEMA and CATALOG_SCHEMA describe what ingest writes: for
+    the lake, the catalog and the delivery root, in the batch layout
+    and in the streaming one (which adds a batch_id partition to every
+    sink), the schema-first read returns the same columns, types and
+    rows as reading the schema from the files."""
+    evs = _mk_events(30)
+    evs[3]["event_type"] = None
+    _write_staging(paths["staging"], evs)
+    if writer == "batch":
+        ingest.ingest_batch(
+            spark, paths["staging"], paths["lake"], paths["catalog"], paths["delivery"], "b0"
+        )
+    else:
+        streaming_pipeline.run_ingest_available_now(
+            spark, paths["staging"], paths["lake"], paths["catalog"], paths["delivery"], paths["checkpoint"]
+        )
+    tables = {
+        "lake": lake.read_lake(spark, paths["lake"]),
+        "catalog": ingest.read_catalog(spark, paths["catalog"]),
+        "delivery": lake.read_lake(spark, paths["delivery"]),
+    }
+    for name, fixed in tables.items():
+        inferred = spark.read.parquet(paths[name])
+        assert [(f.name, f.dataType) for f in fixed.schema] == [
+            (f.name, f.dataType) for f in inferred.schema
+        ], name
+        assert _sorted_rows(fixed) == _sorted_rows(inferred), name
+        assert fixed.count() == (3 if name == "catalog" else 30), name
+
+
+def test_replay_raises_when_catalogued_rows_are_missing(spark, paths):
+    """Replay checks that it re-delivered every record the selected
+    catalog rows count: with a data file of a selected batch gone from
+    the lake it raises, naming both numbers, instead of re-delivering a
+    silent subset."""
+    import pyarrow.parquet as pq
+
+    _write_staging(paths["staging"], _mk_events(40), "part-0.json.gz")
+    ingest.ingest_batch(spark, paths["staging"], paths["lake"], paths["catalog"], None, "b0")
+    b0_files = sorted(glob.glob(paths["lake"] + "/source=clicks/*.parquet"))
+    staging2 = paths["staging"] + "2"
+    _write_staging(staging2, _mk_events(60, start_id=1000), "part-1.json.gz")
+    ingest.ingest_batch(spark, staging2, paths["lake"], paths["catalog"], None, "b1")
+
+    lost = pq.ParquetFile(b0_files[0]).metadata.num_rows
+    assert lost > 0
+    os.remove(b0_files[0])
+    with pytest.raises(ValueError, match=f"delivered {50 - lost} events .* records 50 ") as err:
+        replay.replay(
+            spark, paths["catalog"], paths["lake"], paths["delivery"], "clicks", "2000-01-01", "2100-01-01"
+        )
+    assert "no batch_id" in str(err.value)
