@@ -5,7 +5,9 @@ on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
 
 Each query is forced end-to-end with the noop sink (full execution,
 no driver collect cost). A warmup query amortizes JVM/codegen startup
-out of the first measurement.
+out of the first measurement. That protocol (``session``, ``warmup``,
+``run_once``, ``samples``) is the one measurement core: the timing and
+checking scripts under scripts/ call it instead of keeping their own.
 """
 
 from __future__ import annotations
@@ -18,6 +20,8 @@ import time
 
 from serverless_datalake_spark.queries import load_registry
 from serverless_datalake_spark.session import get_spark
+
+DEFAULT_SF_DIR = "/root/testdata/sf0.1"
 
 # Headline set: one per operator family, weighted toward the shapes
 # that dominate real workloads (scan+agg, join+agg, windows, dedup,
@@ -154,30 +158,50 @@ def calibration_run(spark) -> float:
     return min(once() for _ in range(3))
 
 
+def session(app_name: str, **conf):
+    """(SparkSession, query registry): the one measurement session;
+    ``conf`` goes to ``get_spark`` (e.g. ``shuffle_partitions=16``)."""
+    return get_spark(app_name=app_name, **conf), load_registry()
+
+
+def run_once(spark, reg, name: str, sf_dir: str) -> float:
+    """One noop-sink execution of registry query ``name``, in wall
+    seconds: full execution, no driver collect cost."""
+    t0 = time.time()
+    reg[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    return time.time() - t0
+
+
+def warmup(spark, reg, sf_dir: str) -> None:
+    """JVM + codegen + parquet footer cache, paid by a query that is
+    never timed (a registry without ``scan_project`` fails here)."""
+    run_once(spark, reg, "scan_project", sf_dir)
+
+
+def samples(spark, reg, name: str, sf_dir: str) -> list[float]:
+    """Three ``run_once`` times of ``name``.
+
+    Min of three executions: the first pays per-query codegen /
+    Python-worker spawn and any transient host-load spike; the min is
+    the reproducible steady-state cost of the plan. The spread
+    (max−min over the min) is reported per query so host noise (±30%
+    observed on this box) is visible instead of masquerading as a plan
+    regression."""
+    return [run_once(spark, reg, name, sf_dir) for _ in range(3)]
+
+
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
-    spark = get_spark(app_name="bench")
-    reg = load_registry()
-
-    def run_once(name: str) -> float:
-        t0 = time.time()
-        reg[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return time.time() - t0
+    spark, reg = session("bench")
 
     def run(name: str) -> tuple[float, float]:
-        # min of three executions: the first pays per-query codegen /
-        # Python-worker spawn and any transient host-load spike; the
-        # min is the reproducible steady-state cost of the plan. The
-        # spread (max−min over the min) is reported per query so host
-        # noise (±30% observed on this box) is visible instead of
-        # masquerading as a plan regression.
-        samples = [run_once(name) for _ in range(3)]
-        lo = min(samples)
-        return lo, (max(samples) - lo) / lo if lo else 0.0
+        s = samples(spark, reg, name, sf_dir)
+        lo = min(s)
+        return lo, (max(s) - lo) / lo if lo else 0.0
 
-    run_once("scan_project")  # warmup: JVM + codegen + parquet footer cache
+    warmup(spark, reg, sf_dir)
     calibration = round(calibration_run(spark), 3)
     measured = {name: run(name) for name in HEADLINE}
     times = {name: round(lo, 3) for name, (lo, _) in measured.items()}

@@ -1,12 +1,13 @@
-"""Full-registry driver simulation at an arbitrary sf_dir (default
-sf0.01, the driver's correctness-gate scale): run every registry
-query through the same compare() the tests use (row count + sorted
-column names + normalized value multiset vs the DuckDB oracle) and
-print one line per failure plus a summary.  Used to pre-verify the
-rounds-6..9 DRIVER_WINDOW blocks against the current round's
-fixtures before the driver ever sees them.
+"""Driver simulation at an arbitrary sf_dir (default sf0.01, the
+driver's correctness-gate scale): run registry queries through the
+same compare() the tests use (row count + sorted column names +
+normalized value multiset vs the DuckDB oracle) and print one line per
+failure plus a JSON summary; exit 1 on any failure. With no selection
+it runs the whole registry (pre-verifying DRIVER_WINDOW blocks against
+the current fixtures before the driver ever sees them); with names it
+is the per-change correctness gate for the queries a change touched.
 
-Usage: python scripts/driver_sim_all.py [sf_dir] [start:stop]
+Usage: python scripts/driver_sim_all.py [sf_dir] [start:stop | name ...]
 """
 
 from __future__ import annotations
@@ -21,26 +22,23 @@ sys.path.insert(0, REPO)
 
 from tests.oracle_harness import compare, duckdb_conn  # noqa: E402
 
-from serverless_datalake_spark.queries import load_registry  # noqa: E402
-from serverless_datalake_spark.session import get_spark  # noqa: E402
+import bench  # noqa: E402
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    sl = slice(None)
-    if len(sys.argv) > 2:
-        a, b = sys.argv[2].split(":")
-        sl = slice(int(a) if a else None, int(b) if b else None)
-    spark = get_spark(app_name="driver-sim-all", shuffle_partitions=16)
+    spark, reg = bench.session("driver-sim-all", shuffle_partitions=16)
     con = duckdb_conn(sf_dir)
-    reg = load_registry()
-    names = list(reg)[sl]
+    names = sys.argv[2:] or list(reg)
+    if len(sys.argv) == 3 and ":" in sys.argv[2]:
+        a, b = sys.argv[2].split(":")
+        names = list(reg)[slice(int(a) if a else None, int(b) if b else None)]
     fails: dict[str, list[str]] = {}
     zero_rows: list[str] = []
     t0 = time.time()
     for i, name in enumerate(names):
-        q = reg[name]
         try:
+            q = reg[name]
             df = q.fn(spark, sf_dir)
             if q.oracle is None:
                 n = df.count()
@@ -72,6 +70,7 @@ def main() -> None:
         ),
         flush=True,
     )
+    sys.exit(1 if fails else 0)
 
 
 if __name__ == "__main__":

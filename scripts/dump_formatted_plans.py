@@ -15,21 +15,18 @@ import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
-from bench import HEADLINE  # noqa: E402
-from serverless_datalake_spark.queries import load_registry  # noqa: E402
-from serverless_datalake_spark.session import get_spark  # noqa: E402
+import bench  # noqa: E402
 
 TAG = os.environ.get("SPARK_GRAFT_PLAN_TAG", "r09")
 
 
 def main() -> None:
     suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or list(HEADLINE)
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    names = sys.argv[2:] or list(bench.HEADLINE)
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", bench.DEFAULT_SF_DIR)
     out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", TAG)
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark(app_name=f"dump-plans-{suffix}")
-    reg = load_registry()
+    spark, reg = bench.session(f"dump-plans-{suffix}")
     for name in names:
         df = reg[name].fn(spark, sf_dir)
         # capture the public explain() output instead of reaching into

@@ -9,16 +9,13 @@ import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
-from bench import HEADLINE  # noqa: E402
-from serverless_datalake_spark.plans import plan_report
-from serverless_datalake_spark.queries import load_registry
-from serverless_datalake_spark.session import get_spark
+import bench  # noqa: E402
+from serverless_datalake_spark.plans import plan_report  # noqa: E402
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(app_name="dump-plans")
-    reg = load_registry()
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", bench.DEFAULT_SF_DIR)
+    spark, reg = bench.session("dump-plans")
     lines = [
         "# PLANS — physical-plan summaries for the headline queries",
         "",
@@ -30,7 +27,7 @@ def main() -> None:
         "| query | joins (bcast/SMJ/SHJ/cart) | exchanges | codegen stages | partial agg | pushed filters |",
         "|---|---|---|---|---|---|",
     ]
-    for name in HEADLINE:
+    for name in bench.HEADLINE:
         df = reg[name].fn(spark, sf_dir)
         r = plan_report(df, finalize=True)
         pushed = "; ".join(r.pushed_filters)[:80] or "—"
@@ -41,7 +38,7 @@ def main() -> None:
         )
     with open(os.path.join(os.path.dirname(__file__), "..", "PLANS.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
-    print(f"wrote PLANS.md ({len(HEADLINE)} queries)")
+    print(f"wrote PLANS.md ({len(bench.HEADLINE)} queries)")
 
 
 if __name__ == "__main__":

@@ -9,7 +9,9 @@ JIT code cache fills and HOF expressions drop to interpreted eval
 (observed: a 6 s query taking 25+ min as query #76 of one session).
 The per-chunk JVM restart costs ~10 s and keeps every measurement at
 codegen speed — which is also the honest number, since production jobs
-don't run 330 unrelated queries in one driver.
+don't run 330 unrelated queries in one driver. A chunk is this file
+run as ``--chunk <sf_dir> <names-json>``; it times through bench.py's
+protocol (``bench.warmup``, then one ``bench.run_once`` per query).
 
 Writes SWEEP_sf0.1.json: per-query wall seconds. Queries whose FIRST
 run exceeds 5 s are run a second time in the same chunk session and
@@ -33,48 +35,60 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+import bench  # noqa: E402
+
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", bench.DEFAULT_SF_DIR)
 CHUNK = 40
-
-_CHILD = """
-import json, sys, time
-sys.path.insert(0, {repo!r})
-from serverless_datalake_spark.queries import load_registry
-from serverless_datalake_spark.session import get_spark
-
-names = json.loads(sys.argv[1])
-spark = get_spark(app_name="sweep-chunk")
-reg = load_registry()
-reg["scan_project"].fn(spark, {sf_dir!r}).write.format("noop").mode("overwrite").save()
-times, cold, errs = {{}}, {{}}, {{}}
-for name in names:
-    t0 = time.time()
-    try:
-        reg[name].fn(spark, {sf_dir!r}).write.format("noop").mode("overwrite").save()
-    except Exception as ex:
-        # errs only — a time-to-failure in `times` would inflate
-        # total_sec and could list a BROKEN query in over_5s as if it
-        # were a slow success (round-7 review finding)
-        errs[name] = repr(ex)[:300]
-        continue
-    t1 = time.time() - t0
-    if t1 > 5.0:
-        # steady-state rerun: first runs pay whole-stage-codegen
-        # compilation (once per JVM), which is not data-proportional
-        t0 = time.time()
-        reg[name].fn(spark, {sf_dir!r}).write.format("noop").mode("overwrite").save()
-        times[name] = round(time.time() - t0, 3)
-        cold[name] = round(t1, 3)
-    else:
-        times[name] = round(t1, 3)
-print("CHUNK_RESULT " + json.dumps({{"times": times, "cold": cold, "errs": errs}}), flush=True)
-"""
+TIMEOUT_S = 1800
 
 
 BASELINE_SF_DIR = "/root/testdata/sf0.01"
 
 
+def time_chunk(sf_dir: str, names: list[str]) -> dict:
+    """The child's work: time ``names`` in this process's own session."""
+    spark, reg = bench.session("sweep-chunk")
+    bench.warmup(spark, reg, sf_dir)
+    times, cold, errs = {}, {}, {}
+    for name in names:
+        try:
+            t1 = bench.run_once(spark, reg, name, sf_dir)
+        except Exception as ex:
+            # errs only — a time-to-failure in `times` would inflate
+            # total_sec and could list a BROKEN query in over_5s as if it
+            # were a slow success (round-7 review finding)
+            errs[name] = repr(ex)[:300]
+            continue
+        if t1 > 5.0:
+            # steady-state rerun: first runs pay whole-stage-codegen
+            # compilation (once per JVM), which is not data-proportional
+            times[name] = round(bench.run_once(spark, reg, name, sf_dir), 3)
+            cold[name] = round(t1, 3)
+        else:
+            times[name] = round(t1, 3)
+    return {"times": times, "cold": cold, "errs": errs}
+
+
+def run_chunk(sf_dir: str, names: list[str]) -> dict:
+    """Time ``names`` at ``sf_dir`` in a fresh child process (its own
+    JVM). A child that hangs or dies without a result reports every
+    name under ``errs``, so a dead chunk never reads as one that ran."""
+    cmd = [sys.executable, os.path.abspath(__file__), "--chunk", sf_dir, json.dumps(names)]
+    try:
+        proc = subprocess.run(cmd, capture_output=True, text=True, timeout=TIMEOUT_S)
+    except subprocess.TimeoutExpired:
+        why = f"chunk timed out at {TIMEOUT_S}s (one query likely hung)"
+    else:
+        out = [l for l in proc.stdout.splitlines() if l.startswith("CHUNK_RESULT ")]
+        if out:
+            return json.loads(out[0][len("CHUNK_RESULT ") :])
+        why = f"chunk died rc={proc.returncode}: {(proc.stderr or '')[-200:]}"
+    return {"times": {}, "cold": {}, "errs": dict.fromkeys(names, why)}
+
+
 def main() -> None:
+    # names and tags only: every query runs in a child, so the parent
+    # holds no session (it would sit idle for the whole sweep)
     from serverless_datalake_spark.queries import load_registry
 
     reg = load_registry()
@@ -86,59 +100,19 @@ def main() -> None:
     times: dict[str, float] = {}
     cold: dict[str, float] = {}
     errs: dict[str, str] = {}
-    child_src = _CHILD.format(repo=REPO, sf_dir=SF_DIR)
     for lo in range(0, len(names), CHUNK):
-        chunk = names[lo : lo + CHUNK]
         t0 = time.time()
-        try:
-            proc = subprocess.run(
-                [sys.executable, "-c", child_src, json.dumps(chunk)],
-                capture_output=True,
-                text=True,
-                timeout=1800,
-            )
-        except subprocess.TimeoutExpired:
-            for n in chunk:
-                errs[n] = "chunk timed out at 1800s (one query likely hung)"
-            print(f"{min(lo + CHUNK, len(names))}/{len(names)} CHUNK TIMEOUT", flush=True)
-            continue
-        out = [l for l in proc.stdout.splitlines() if l.startswith("CHUNK_RESULT ")]
-        if not out:
-            for n in chunk:
-                errs[n] = f"chunk died rc={proc.returncode}: {proc.stderr[-200:]}"
-            continue
-        res = json.loads(out[0][len("CHUNK_RESULT ") :])
+        res = run_chunk(SF_DIR, names[lo : lo + CHUNK])
         times.update(res["times"])
-        cold.update(res.get("cold", {}))
+        cold.update(res["cold"])
         errs.update(res["errs"])
         print(
             f"{min(lo + CHUNK, len(names))}/{len(names)} "
             f"(chunk {time.time() - t0:.0f}s, cumulative {sum(times.values()):.0f}s)",
             flush=True,
         )
-    base_times: dict[str, float] = {}
-    if baselines:
-        base_src = _CHILD.format(repo=REPO, sf_dir=BASELINE_SF_DIR)
-        try:
-            proc = subprocess.run(
-                [sys.executable, "-c", base_src, json.dumps(baselines)],
-                capture_output=True, text=True, timeout=1800,
-            )
-            out_l = [l for l in proc.stdout.splitlines() if l.startswith("CHUNK_RESULT ")]
-            if out_l:
-                res = json.loads(out_l[0][len("CHUNK_RESULT ") :])
-                base_times.update(res["times"])
-                errs.update(res["errs"])
-            else:
-                # a silently-dead baseline chunk (OOM, import error)
-                # must surface as errors, not as baselines-never-ran
-                # (round-7 review finding; mirrors the main loop)
-                tail = (proc.stderr or "")[-200:]
-                for n in baselines:
-                    errs[n] = f"baseline chunk died rc={proc.returncode}: {tail}"
-        except subprocess.TimeoutExpired:
-            for n in baselines:
-                errs[n] = "baseline chunk timed out at 1800s"
+    base = run_chunk(BASELINE_SF_DIR, baselines) if baselines else {"times": {}, "errs": {}}
+    errs.update(base["errs"])
     slow = {n: t for n, t in sorted(times.items(), key=lambda kv: -kv[1]) if t > 5.0}
     out = {
         "sf_dir": SF_DIR,
@@ -146,7 +120,7 @@ def main() -> None:
         "total_sec": round(sum(times.values()), 1),
         "over_5s": slow,
         "cold_first_run": dict(sorted(cold.items(), key=lambda kv: -kv[1])),
-        "exact_baselines_sf0.01": base_times,
+        "exact_baselines_sf0.01": base["times"],
         "errors": errs,
         "times": dict(sorted(times.items(), key=lambda kv: -kv[1])),
     }
@@ -157,4 +131,8 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    if sys.argv[1:2] == ["--chunk"]:
+        res = time_chunk(sys.argv[2], json.loads(sys.argv[3]))
+        print("CHUNK_RESULT " + json.dumps(res), flush=True)
+    else:
+        main()

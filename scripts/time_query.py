@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Min-of-3 noop-sink timing for individual registry queries — the
-optimization round's per-change measurement tool (same protocol as
-bench.py: first run pays codegen, min is the steady-state plan cost).
+optimization round's per-change measurement tool (bench.py's protocol:
+first run pays codegen, min is the steady-state plan cost).
 
 Usage: python scripts/time_query.py name [name ...]
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
@@ -11,35 +11,21 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
 
-from serverless_datalake_spark.queries import load_registry  # noqa: E402
-from serverless_datalake_spark.session import get_spark  # noqa: E402
+import bench  # noqa: E402
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    names = sys.argv[1:]
-    spark = get_spark(app_name="time-query")
-    reg = load_registry()
-
-    def once(name: str) -> float:
-        t0 = time.time()
-        reg[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return time.time() - t0
-
-    # warmup: JVM + codegen (fall back to the first requested name if
-    # the canonical warmup query is ever renamed — round-9 advisor)
-    once("scan_project" if "scan_project" in reg else names[0])
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", bench.DEFAULT_SF_DIR)
+    spark, reg = bench.session("time-query")
+    bench.warmup(spark, reg, sf_dir)
     if os.environ.get("SPARK_GRAFT_TIME_CALIBRATE") == "1":
-        from bench import calibration_run
-
-        print(f"__calibration__: min={calibration_run(spark):.3f}", flush=True)
-    for name in names:
+        print(f"__calibration__: min={bench.calibration_run(spark):.3f}", flush=True)
+    for name in sys.argv[1:]:
         spark.sparkContext.setJobDescription(name)
-        samples = [once(name) for _ in range(3)]
+        samples = bench.samples(spark, reg, name, sf_dir)
         print(
             f"{name}: min={min(samples):.3f} samples="
             + ",".join(f"{s:.2f}" for s in samples),

@@ -13,11 +13,11 @@ runs only once the blob is in S3 (ObjectCreated → SQS, stack.py:58–60)
 and fetches it before its catalog put and publish (recorder:86–92). The
 three sinks still run as concurrent Spark jobs over one persisted parse
 (``concurrently``), so small write jobs share the cores instead of
-queueing for them; but the catalog and the fan-out write into hidden
-staging directories, and their files move into place only once every
-sink has finished, the lake first among them. So a catalog row always
-names committed lake data, and a failed sink leaves no catalog row and
-no delivery behind.
+queueing for them; but all three write into hidden staging directories,
+and their files move into place only once every sink has finished: the
+lake first, then the delivery, then the catalog. So a catalog row always
+names committed lake data, and a failed sink publishes nothing, so a
+retry of the same batch lands it once.
 
 The catalog is itself a partitioned Parquet table, so the DynamoDB
 (pk=Source, sk=Timestamp) query shape (stack.py:63–77) becomes
@@ -27,6 +27,7 @@ partition pruning + min/max skipping.
 from __future__ import annotations
 
 import os
+import re
 import shutil
 from concurrent.futures import ThreadPoolExecutor
 from typing import Any, Callable
@@ -41,6 +42,10 @@ CATALOG_SCHEMA = "source STRING, ingest_ts TIMESTAMP, file_key STRING, n_records
 
 # the source of records whose routing value is null or empty
 QUARANTINE_SOURCE = "__unknown__"
+
+# a batch id names a staging directory and ends every catalog file_key,
+# so it holds no path separator, no dot and no leading '_' or '.'
+BATCH_ID = re.compile(r"[A-Za-z0-9][A-Za-z0-9_-]*")
 
 
 def concurrently(spark: SparkSession, *calls: Callable[[], Any]) -> list[Any]:
@@ -135,10 +140,13 @@ def ingest_batch(
 ) -> dict[str, int]:
     """E1 end-to-end: read staging JSON, then land it in the lake
     partitioned by source, append catalog entries and fan out, the
-    three sinks as concurrent jobs; the catalog rows and deliveries are
-    published only after all three have succeeded. Returns counts,
+    three sinks as concurrent jobs; nothing is published until all
+    three have succeeded. Returns counts,
     ``n_quarantined`` being the records routed to the quarantine
-    source."""
+    source. Raises ValueError, before any read or write, if
+    ``batch_id`` does not match ``BATCH_ID``."""
+    if not BATCH_ID.fullmatch(batch_id):
+        raise ValueError(f"batch_id {batch_id!r} does not match {BATCH_ID.pattern}")
     raw = lake.read_json_events(spark, staging_path)
     events = with_source(raw, source_col).withColumn("batch_id", F.lit(batch_id))
     # ONE materialization feeds the lake write, the catalog aggregate
@@ -149,12 +157,13 @@ def ingest_batch(
     # the others wait on the block's lock, so the blob is still read
     # once. Unpersisted only after every sink has returned.
     events = events.persist()
-    # the catalog is the lake's snapshot log (replay.read_lake_as_of),
-    # so its rows, and the deliveries with them, stay staged until the
-    # lake write has committed
-    staged = {catalog_path: _staged(catalog_path, batch_id)}
+    # every sink writes into a staging directory, published in this
+    # order once all have succeeded: data before metadata, the catalog
+    # (the lake's snapshot log, replay.read_lake_as_of) last
+    staged = {lake_path: _staged(lake_path, batch_id)}
     if delivery_root:
         staged[delivery_root] = _staged(delivery_root, batch_id)
+    staged[catalog_path] = _staged(catalog_path, batch_id)
     try:
         # the counts come from the catalog write itself (one row per
         # source, n_records each), not from extra jobs over the batch
@@ -169,7 +178,7 @@ def ingest_batch(
         # sinks are looked up when called, so wrapped module attributes
         # (tracing) still take effect
         sinks = [
-            lambda: lake.write_partitioned(events, lake_path),
+            lambda: lake.write_partitioned(events, staged[lake_path]),
             lambda: append_catalog(entries, staged[catalog_path]),
         ]
         if delivery_root:

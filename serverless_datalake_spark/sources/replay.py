@@ -8,10 +8,11 @@ Semantics pinned to the reference:
 * replayed records are re-delivered but the catalog is NOT appended
   (recorder:94–99 writes no entry on the 'Replay' branch) — replay is
   distribution-only and non-self-amplifying;
-* replay checks conservation in the same pass: the selected catalog
-  rows' Σ n_records must all be re-delivered, so lost lake files or a
-  lake written without batch ids raise instead of re-delivering a
-  silent subset.
+* replay checks conservation in the same pass: the re-delivered rows
+  must equal the selected catalog rows' Σ n_records, and the
+  re-delivery stays staged until they do. Lost lake files, a lake
+  written without batch ids, or a batch landed twice raise instead of
+  re-delivering a silent subset or surplus, and publish nothing.
 
 The catalog and the lake are read schema-first (``read_catalog``,
 ``lake.read_lake``), so a replay launches no job to learn their shape.
@@ -20,12 +21,20 @@ The catalog and the lake are read schema-first (``read_catalog``,
 from __future__ import annotations
 
 import datetime as dt
+import shutil
+import uuid
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from serverless_datalake_spark.sources import lake
-from serverless_datalake_spark.sources.ingest import concurrently, fan_out, read_catalog
+from serverless_datalake_spark.sources.ingest import (
+    _publish,
+    _staged,
+    concurrently,
+    fan_out,
+    read_catalog,
+)
 
 
 def select_replay_keys(
@@ -104,10 +113,12 @@ def replay(
     The lake is partitioned by source, so the re-read is a pruned scan
     filtered to the cataloged batch keys; no catalog write happens.
     The catalog totals (batch count and Σ n_records) run as one
-    aggregate concurrently with the re-delivery. Raises ValueError if
-    fewer events were delivered than the selected catalog rows record:
-    those rows name lake data that is gone or has no batch_id. A
-    surplus is not raised."""
+    aggregate concurrently with the re-delivery, which is written to a
+    staging directory and published only if it holds exactly the
+    selected catalog rows' Σ n_records. Otherwise it raises ValueError
+    and publishes nothing: a deficit means those rows name lake data
+    that is gone or has no batch_id, a surplus that the lake holds a
+    batch's rows more than once."""
     keys = select_replay_keys(spark, catalog_path, source, interval_start, interval_end)
     totals = keys.agg(
         F.count(F.lit(1)).alias("n_batches"),
@@ -121,15 +132,28 @@ def replay(
     events = events.join(
         F.broadcast(_batch_id_keys(keys)), on="batch_id", how="left_semi"
     ).observe(delivered, F.count(F.lit(1)).alias("n_events"))
-    catalogued, _ = concurrently(spark, totals.first, lambda: fan_out(events, delivery_root))
-    n_events = delivered.get["n_events"]
-    if n_events < catalogued["n_records"]:
-        # a lake without batch ids (or with lost files) cannot honor the
-        # interval: a missing batch_id reads as NULL and matches no key
-        raise ValueError(
-            f"replay of {source!r} delivered {n_events} events but the catalog "
-            f"records {catalogued['n_records']} for the selected batches; the "
-            f"lake at {lake_path} has no batch_id row for the other "
-            f"{catalogued['n_records'] - n_events}"
-        )
+    # replays have no batch id, so each stages under a name of its own
+    staged = _staged(delivery_root, f"replay-{uuid.uuid4().hex}")
+    try:
+        catalogued, _ = concurrently(spark, totals.first, lambda: fan_out(events, staged))
+        n_events = delivered.get["n_events"]
+        missing = catalogued["n_records"] - n_events
+        if missing:
+            # a lake without batch ids (or with lost files) cannot honor
+            # the interval: a missing batch_id reads as NULL and matches
+            # no key; a surplus is a batch whose rows landed twice
+            raise ValueError(
+                f"replay of {source!r} delivered {n_events} events but the catalog "
+                f"records {catalogued['n_records']} for the selected batches; the "
+                f"lake at {lake_path} has "
+                + (
+                    f"no batch_id row for the other {missing}"
+                    if missing > 0
+                    else f"{-missing} rows more than catalogued"
+                )
+                + "; nothing was re-delivered"
+            )
+        _publish(staged, delivery_root)
+    finally:
+        shutil.rmtree(staged, ignore_errors=True)
     return {"n_batches": catalogued["n_batches"], "n_events": n_events}

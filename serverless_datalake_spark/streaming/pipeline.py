@@ -16,11 +16,16 @@ Mapping (SURVEY.md §2a):
   checkpointing makes the whole query restartable.
 
 `foreachBatch` writes are idempotent per (batch_id): re-running a
-failed batch overwrites the same file_key rather than duplicating it
-— Structured Streaming's replayed-batch contract.
+failed batch replaces that batch's whole contribution to every sink,
+rather than duplicating it or leaving part of the first run behind —
+Structured Streaming's replayed-batch contract (``record_micro_batch``).
 """
 
 from __future__ import annotations
+
+import glob
+import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -54,15 +59,62 @@ def read_event_stream(
     return stream
 
 
-def _overwrite_batch(df: DataFrame, path: str) -> None:
-    """Write one micro-batch's (source, batch_id) partitions, replacing
-    only those partitions (dynamic partition overwrite)."""
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("source", "batch_id")
-        .parquet(path)
-    )
+def _drop_batch(root: str, bid: str) -> None:
+    """Remove batch ``bid``'s ``source=*/batch_id=<bid>`` partitions
+    from ``root``, whatever sources an earlier run of it wrote."""
+    for part in glob.glob(os.path.join(glob.escape(root), "source=*", f"batch_id={bid}")):
+        shutil.rmtree(part)
+
+
+def _append_batch(df: DataFrame, path: str) -> None:
+    df.write.mode("append").partitionBy("source", "batch_id").parquet(path)
+
+
+def record_micro_batch(
+    batch: DataFrame,
+    batch_id: int,
+    lake_path: str,
+    catalog_path: str,
+    delivery_root: str | None,
+) -> None:
+    """E1's recorder for one micro-batch: land it in the lake, deliver
+    it and catalogue it, each sink partitioned by (source, batch_id).
+
+    Idempotence contract: Structured Streaming may re-run a batch after
+    a failure. The batch's partitions are first removed from every sink
+    (the catalog's first, so no catalog row outlives its data), then
+    appended again; a re-run therefore replaces the batch's whole
+    contribution, including sources the new run no longer has (a
+    dynamic partition overwrite replaced only the partitions the new
+    run wrote, leaving the rest stale). During a re-run the batch is
+    briefly absent, but it is never doubled or half-stale. Other
+    batches' partitions are untouched.
+
+    Known replay caveat: catalog ingest_ts is the commit-attempt wall
+    clock, so a crash-replay rewrites its partition with a later
+    timestamp (same rows otherwise) — ingest-time as-of reads with a
+    cutoff inside that window can shift; version-exact time travel is
+    the txlog sink's job."""
+    bid = f"b{batch_id:012d}"
+    for root in (catalog_path, delivery_root, lake_path):
+        if root:
+            _drop_batch(root, bid)
+    # pin the micro-batch across the 2-3 sinks: unpersisted, each
+    # write re-ran the whole batch plan — JSON scan + the stateful
+    # dedup — so the steady ingest cost was up to 3x for nothing
+    # (round-7 review finding; the multi-sink persist is the
+    # documented foreachBatch pattern). Data before metadata: the
+    # catalog rows are written last, so they name committed lake
+    # data and deliveries.
+    batch = batch.withColumn("batch_id", F.lit(bid)).persist()
+    try:
+        _append_batch(batch.repartition("source").sortWithinPartitions("source", "ts"), lake_path)
+        if delivery_root:
+            _append_batch(batch, delivery_root)
+        entries = build_catalog_entries(batch, bid)
+        _append_batch(entries.withColumn("batch_id", F.lit(bid)), catalog_path)
+    finally:
+        batch.unpersist()
 
 
 def start_ingest_query(
@@ -76,40 +128,7 @@ def start_ingest_query(
     """E1's recorder, as one checkpointed streaming query."""
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
-        # Idempotence contract: Structured Streaming may re-run a
-        # batch after a failure. Every sink partitions by batch_id and
-        # writes with DYNAMIC partition overwrite, so a replayed batch
-        # REPLACES its own partitions instead of appending duplicates;
-        # other batches' partitions are untouched. The overwrite mode
-        # is a PER-WRITE option, not a session conf mutation — two
-        # queries sharing one SparkSession raced on the set/restore
-        # (and an interleaving could leave the session on 'static',
-        # where a replayed batch's overwrite TRUNCATES the whole lake).
-        # Known replay caveat: catalog ingest_ts is the commit-attempt
-        # wall clock, so a crash-replay rewrites its partition with a
-        # later timestamp (same rows otherwise) — ingest-time as-of
-        # reads with a cutoff inside that window can shift; version-
-        # exact time travel is the txlog sink's job.
-        bid = f"b{batch_id:012d}"
-        # pin the micro-batch across the 2-3 sinks: unpersisted, each
-        # write re-ran the whole batch plan — JSON scan + the stateful
-        # dedup — so the steady ingest cost was up to 3x for nothing
-        # (round-7 review finding; the multi-sink persist is the
-        # documented foreachBatch pattern). Data before metadata: the
-        # catalog rows are written last, so they name committed lake
-        # data and deliveries.
-        batch = batch.withColumn("batch_id", F.lit(bid)).persist()
-        try:
-            _overwrite_batch(
-                batch.repartition("source").sortWithinPartitions("source", "ts"),
-                lake_path,
-            )
-            if delivery_root:
-                _overwrite_batch(batch, delivery_root)
-            entries = build_catalog_entries(batch, bid)
-            _overwrite_batch(entries.withColumn("batch_id", F.lit(bid)), catalog_path)
-        finally:
-            batch.unpersist()
+        record_micro_batch(batch, batch_id, lake_path, catalog_path, delivery_root)
 
     trigger = trigger or {"processingTime": "60 seconds"}  # R2 flush interval
     return (

@@ -11,6 +11,7 @@ import gzip
 import json
 import os
 import pathlib
+import shutil
 import warnings
 
 import pytest
@@ -637,9 +638,9 @@ def test_ingest_lake_failure_writes_no_catalog_or_delivery(spark, paths):
 
 def test_ingest_sink_failure_is_raised_after_the_other_sinks(spark, paths):
     """A failing catalog write is raised only after the lake and the
-    delivery writes have finished: the lake keeps its committed rows,
-    the staged delivery is dropped unpublished, no job is left running
-    and the batch is unpersisted."""
+    delivery writes have finished: the staged lake rows and delivery
+    are dropped unpublished, no job is left running and the batch is
+    unpersisted."""
     sc = spark.sparkContext
     _write_staging(paths["staging"], _mk_events(10))
     pathlib.Path(paths["catalog"]).write_text("not a directory")
@@ -651,9 +652,41 @@ def test_ingest_sink_failure_is_raised_after_the_other_sinks(spark, paths):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert list(sc.statusTracker().getActiveJobsIds()) == []
     assert paths["catalog"] in str(err.value)
-    assert spark.read.parquet(paths["lake"]).count() == 10
+    assert _files_under(paths["lake"]) == []
     assert _files_under(paths["delivery"]) == []
     assert sc._jsc.getPersistentRDDs().size() == persisted
+
+
+def test_ingest_retry_after_a_failed_sink_lands_the_batch_once(spark, paths):
+    """A batch whose catalog write failed published nothing, so a retry
+    of the same batch id lands it once: lake rows = Σ catalog n_records
+    = delivered rows = lines ingested."""
+    _write_staging(paths["staging"], _mk_events(10))
+    pathlib.Path(paths["catalog"]).write_text("not a directory")
+    args = (spark, paths["staging"], paths["lake"], paths["catalog"], paths["delivery"], "b0")
+    with pytest.raises(Exception):
+        ingest.ingest_batch(*args)
+    os.remove(paths["catalog"])
+    ingest.ingest_batch(*args)
+    catalogued = ingest.read_catalog(spark, paths["catalog"]).agg(F.sum("n_records")).first()[0]
+    assert lake.read_lake(spark, paths["lake"]).count() == catalogued == 10
+    assert lake.read_lake(spark, paths["delivery"]).count() == 10
+
+
+def test_ingest_rejects_unsafe_batch_ids(spark, paths):
+    """A batch id names staging directories and ends every catalog
+    file_key: one with a path separator, a dot or a leading '_' or '.'
+    is refused before anything is read or written, under the roots or
+    outside them. Every id the package and the benchmark use passes."""
+    _write_staging(paths["staging"], _mk_events(4))
+    for bad in ("../../escaped", "a/b", "b0.parquet", "..", "_staged", ".b0", "-b0", "b 0", ""):
+        with pytest.raises(ValueError, match="batch_id"):
+            ingest.ingest_batch(
+                spark, paths["staging"], paths["lake"], paths["catalog"], paths["delivery"], bad
+            )
+    assert os.listdir(os.path.dirname(paths["staging"])) == ["staging"]
+    for ok in ("b0", "h00000", "b00001", "w0", "b000000000000"):
+        assert ingest.BATCH_ID.fullmatch(ok), ok
 
 
 def test_spark_threads_only_through_concurrently():
@@ -779,3 +812,19 @@ def test_replay_raises_when_catalogued_rows_are_missing(spark, paths):
             spark, paths["catalog"], paths["lake"], paths["delivery"], "clicks", "2000-01-01", "2100-01-01"
         )
     assert "no batch_id" in str(err.value)
+    assert _files_under(paths["delivery"]) == []
+
+
+def test_replay_raises_on_a_surplus_and_publishes_nothing(spark, paths):
+    """A lake holding a selected batch's rows twice (a copied data
+    file) re-delivers more events than the catalog records: replay
+    raises instead of delivering the surplus, and publishes nothing."""
+    _write_staging(paths["staging"], _mk_events(20))
+    ingest.ingest_batch(spark, paths["staging"], paths["lake"], paths["catalog"], None, "b0")
+    part = sorted(glob.glob(paths["lake"] + "/source=clicks/*.parquet"))[0]
+    shutil.copy(part, os.path.join(os.path.dirname(part), "copy-" + os.path.basename(part)))
+    with pytest.raises(ValueError, match=r"records 10 .* more than catalogued"):
+        replay.replay(
+            spark, paths["catalog"], paths["lake"], paths["delivery"], "clicks", "2000-01-01", "2100-01-01"
+        )
+    assert _files_under(paths["delivery"]) == []

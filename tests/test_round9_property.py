@@ -11,6 +11,7 @@ from __future__ import annotations
 import hashlib
 import math
 from collections import Counter
+from decimal import ROUND_HALF_UP, Decimal
 
 import duckdb
 from hypothesis import assume, given, settings
@@ -554,10 +555,17 @@ def test_forcast_oracle_matches_brute(docs):
         for row in con.execute(REG["text_readability_forcast"].oracle).fetchall()
     }
     assert set(got) == set(per_lang)
+
+    def round6(x: float) -> float:
+        # ROUND(x, 6) as the oracle and Spark round: half-up on the
+        # shortest decimal form (Python's round() took 421429 / 80000 =
+        # 5.2678625 down to 5.267862, the oracle up to 5.267863)
+        return float(Decimal(repr(x)).quantize(Decimal("1e-6"), rounding=ROUND_HALF_UP))
+
     for lang, stats in per_lang.items():
         grades = [round((20.0 - 15.0 * m / w) * 10000) for w, m in stats]
         n = len(stats)
         assert got[lang][0] == n
-        assert math.isclose(got[lang][1], round(sum(grades) / (10000.0 * n), 6), abs_tol=1e-6)
+        assert math.isclose(got[lang][1], round6(sum(grades) / (10000.0 * n)), abs_tol=1e-6)
         mono_share = sum(m for _, m in stats) / sum(w for w, _ in stats)
-        assert math.isclose(got[lang][2], round(mono_share, 6), abs_tol=1e-6)
+        assert math.isclose(got[lang][2], round6(mono_share), abs_tol=1e-6)

@@ -79,48 +79,42 @@ def test_streaming_window_counts_match_batch(spark, tmp_path):
 
 
 def test_batch_replay_is_idempotent(spark, tmp_path):
-    """Re-running a micro-batch (the crash-recovery path) must replace
-    its own output, not append duplicates."""
-    import pyspark.sql.functions as F2
-
-    from serverless_datalake_spark.streaming.pipeline import start_ingest_query
-
+    """Re-running a micro-batch (the crash-recovery path) replaces its
+    whole contribution to the lake, the delivery and the catalog: it
+    is not duplicated, and no source the re-run no longer has is left
+    behind, down to an empty re-run. Other batches are untouched."""
     staging = str(tmp_path / "st")
-    lake_p = str(tmp_path / "lk")
-    cat_p = str(tmp_path / "ct")
+    lake_p, cat_p, deliv_p = (str(tmp_path / d) for d in ("lk", "ct", "dl"))
     _write(staging, _evts(30, lambda i: 1), "a.json.gz")
-
-    # capture the foreachBatch fn by running once, then invoke it again
-    # manually with the same batch_id to simulate a replayed batch
-    stream = sp.read_event_stream(spark, staging, dedup=False)
-    q = start_ingest_query(stream, lake_p, cat_p, None, str(tmp_path / "ck"), {"availableNow": True})
-    q.awaitTermination()
-    n1 = spark.read.parquet(lake_p).count()
-
-    batch_df = (
+    batch = (
         spark.read.schema(sp.EVENTS_JSON_SCHEMA)
         .json(staging)
-        .withColumn("source", F2.col("event_type"))
+        .withColumn("source", F.col("event_type"))
     )
-    def replay_batch():
-        # batch 0's sink write, exactly as process_batch performs it
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                batch_df.withColumn("batch_id", F2.lit("b000000000000"))
-                .repartition("source")
-                .sortWithinPartitions("source", "ts")
-                .write.mode("overwrite")
-                .partitionBy("source", "batch_id")
-                .parquet(lake_p)
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
-    replay_batch()
-    replay_batch()
-    assert spark.read.parquet(lake_p).count() == n1  # replaced, not duplicated
+    def by_batch_and_source(path, value):
+        df = spark.read.parquet(path).groupBy("batch_id", "source").agg(value.alias("n"))
+        return {(r["batch_id"], r["source"]): r["n"] for r in df.collect()}
+
+    def check(b0: dict) -> None:
+        want = {("b000000000000", s): n for s, n in b0.items()}
+        want[("b000000000001", "tweets")] = 15
+        assert by_batch_and_source(lake_p, F.count("*")) == want
+        assert by_batch_and_source(deliv_p, F.count("*")) == want
+        assert by_batch_and_source(cat_p, F.sum("n_records")) == want
+
+    def record(df, batch_id: int) -> None:
+        sp.record_micro_batch(df, batch_id, lake_p, cat_p, deliv_p)
+
+    record(batch, 0)
+    record(batch.where(F.col("source") == "tweets"), 1)
+    check({"clicks": 15, "tweets": 15})
+    record(batch, 0)
+    check({"clicks": 15, "tweets": 15})  # replaced, not duplicated
+    record(batch.where(F.col("source") == "clicks"), 0)
+    check({"clicks": 15})  # no stale tweets partition
+    record(batch.limit(0), 0)
+    check({})
 
 
 def test_stream_stream_join_matches_batch_join(spark, tmp_path):
