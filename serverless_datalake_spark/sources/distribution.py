@@ -4,11 +4,14 @@ delivery with late-bound topic resolution.
 The reference publishes each record to its source's SNS topic, whose
 ARN is resolved at publish time from SSM (`/{stack}/DistributionTopics/
 {source}`, stack.py:240–246, recorder:59–60), and the test subscriber
-reads that topic (stack.py:251–265). Here delivery has one writer:
-`ingest.fan_out` appends each ingested batch (and each replay) to one
+reads that topic (stack.py:251–265). Here the delivery root is one
 Hive-partitioned table, ``<root>/source=<s>/``, so a topic is a
-partition of the delivery root. A subscriber reads the root filtered
-on its source, and partition pruning keeps that scan to one directory.
+partition of it. Ingest publishes byte copies of the lake files it
+wrote for the batch there (the records it stored, as the reference
+publishes them), and a replay writes its re-delivery through
+`ingest.fan_out` in the same layout. A subscriber reads the root
+filtered on its source, and partition pruning keeps that scan to one
+directory.
 
 Source names are event DATA. Spark escapes partition values on write
 (``../../x`` → ``source=..%2F..%2Fx``, ``a:b`` → ``source=a%3Ab``) and

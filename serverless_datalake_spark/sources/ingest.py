@@ -1,23 +1,29 @@
 """Batch ingest job: staging JSON → partitioned lake + catalog append
-+ per-source fan-out (reference E1, SURVEY.md §3).
++ per-source delivery (reference E1, SURVEY.md §3).
 
 One declarative job replaces the reference's five-service hop chain
 (APIGW→Firehose→S3→SQS→Lambda, stack.py:177–216 → recorder:71–92):
 
   events.json.gz ──read──► lake (partitionBy source, sorted by ts)
-                      ├──► catalog append (source, ingest_ts, file_key)
-                      └──► fan-out: delivery root, one partition per source
+                      │          └──copy──► delivery root, one partition per source
+                      └──► catalog append (source, ingest_ts, file_key)
 
 Data lands before metadata, as in the reference, where the recorder
 runs only once the blob is in S3 (ObjectCreated → SQS, stack.py:58–60)
-and fetches it before its catalog put and publish (recorder:86–92). The
-three sinks still run as concurrent Spark jobs over one persisted parse
+and fetches it before its catalog put and publish (recorder:86–92).
+Each batch is Parquet-encoded once. Two Spark jobs run concurrently
 (``concurrently``), so small write jobs share the cores instead of
-queueing for them; but all three write into hidden staging directories,
-and their files move into place only once every sink has finished: the
-lake first, then the delivery, then the catalog. So a catalog row always
-names committed lake data, and a failed sink publishes nothing, so a
-retry of the same batch lands it once.
+queueing for them: the lake write and the catalog aggregate, each
+parsing the blob in full rather than sharing a cached parse. The
+delivery is a byte copy of the lake write's files, as the reference
+publishes the same records it stored (recorder:55–65). Before
+anything is published, the rows the lake write landed must equal the
+catalog's Σ n_records (ValueError otherwise). Every write goes to a
+hidden staging directory, and the files move into place only once all
+of this has succeeded: the lake first, then the delivery, then the
+catalog. So a catalog row always names committed lake data, and a
+failed batch publishes nothing, so a retry of the same batch lands it
+once.
 
 The catalog is itself a partitioned Parquet table, so the DynamoDB
 (pk=Source, sk=Timestamp) query shape (stack.py:63–77) becomes
@@ -26,6 +32,8 @@ partition pruning + min/max skipping.
 
 from __future__ import annotations
 
+import functools
+import operator
 import os
 import re
 import shutil
@@ -121,12 +129,19 @@ def with_source(events: DataFrame, source_col: str) -> DataFrame:
 
 
 def fan_out(events: DataFrame, delivery_root: str) -> None:
-    """R10/R11: per-source delivery, the one delivery writer. The
-    reference loops SNS publishes per record (recorder:55–65); here one
-    partitioned write delivers every record to its source's directory
-    ``<delivery_root>/source=<s>/``, and subscribers read their own
+    """R10/R11: per-source delivery of rows that are not already
+    encoded as lake files; replay's re-delivery writer (ingest copies
+    its lake files instead). The reference loops SNS publishes per
+    record (recorder:55–65); here one partitioned write delivers every
+    record to its source's directory ``<delivery_root>/source=<s>/``,
+    the layout ingest's copy has too, and subscribers read their own
     partition (distribution.subscribe)."""
     events.write.mode("append").partitionBy("source").parquet(delivery_root)
+
+
+def _holds_data(path: str) -> bool:
+    """Whether a finished write left a data file under ``path``."""
+    return any(n.endswith(".parquet") for _, _, names in os.walk(path) for n in names)
 
 
 def ingest_batch(
@@ -139,34 +154,43 @@ def ingest_batch(
     source_col: str = "event_type",
 ) -> dict[str, int]:
     """E1 end-to-end: read staging JSON, then land it in the lake
-    partitioned by source, append catalog entries and fan out, the
-    three sinks as concurrent jobs; nothing is published until all
-    three have succeeded. Returns counts,
-    ``n_quarantined`` being the records routed to the quarantine
-    source. Raises ValueError, before any read or write, if
+    partitioned by source and append its catalog entries, as two
+    concurrent jobs; the delivery is a copy of the lake write's files.
+    Nothing is published until both jobs have succeeded and the lake's
+    landed rows equal the catalog's Σ n_records; otherwise it raises
+    (ValueError for a count mismatch, naming both counts). Returns
+    counts, ``n_quarantined`` being the records routed to the
+    quarantine source. Raises ValueError, before any read or write, if
     ``batch_id`` does not match ``BATCH_ID``."""
     if not BATCH_ID.fullmatch(batch_id):
         raise ValueError(f"batch_id {batch_id!r} does not match {BATCH_ID.pattern}")
     raw = lake.read_json_events(spark, staging_path)
+    # Both jobs scan the staging path through this one DataFrame, and a
+    # DataFrame fixes its file list when it is created, so nothing is
+    # cached: a file landing in staging during the ingest is read by
+    # neither job. The two scans must also parse each line alike. One
+    # pruned to the routing column skips the other fields unconverted,
+    # so a line whose syntax breaks inside one of them (an object-valued
+    # props cut short) reads as all-null there, while the full parse
+    # keeps the event_type read before the break: the catalog would
+    # count under __unknown__ a row the lake files under its source.
+    # This observation (lines that parsed to nothing) references every
+    # column, so neither scan is pruned.
+    unparsed = functools.reduce(operator.and_, [F.col(c).isNull() for c in raw.columns])
+    raw = raw.observe("ingest_unparsed_lines", F.count_if(unparsed))
     events = with_source(raw, source_col).withColumn("batch_id", F.lit(batch_id))
-    # ONE materialization feeds the lake write, the catalog aggregate
-    # and the fan-out: unpersisted, each sink re-read and re-parsed the
-    # staging JSON, and a file landing in staging between them made
-    # lake and catalog mutually inconsistent. The sinks run at once;
-    # the first job to reach a partition fills its cache block while
-    # the others wait on the block's lock, so the blob is still read
-    # once. Unpersisted only after every sink has returned.
-    events = events.persist()
-    # every sink writes into a staging directory, published in this
-    # order once all have succeeded: data before metadata, the catalog
-    # (the lake's snapshot log, replay.read_lake_as_of) last
+    # every write goes to a staging directory, published in this order
+    # once all have succeeded: data before metadata, the catalog (the
+    # lake's snapshot log, replay.read_lake_as_of) last
     staged = {lake_path: _staged(lake_path, batch_id)}
     if delivery_root:
         staged[delivery_root] = _staged(delivery_root, batch_id)
     staged[catalog_path] = _staged(catalog_path, batch_id)
     try:
-        # the counts come from the catalog write itself (one row per
-        # source, n_records each), not from extra jobs over the batch
+        # the counts come from the writes themselves: the rows the lake
+        # write landed, and the catalog rows (one per source, n_records
+        # each), not from extra jobs over the batch
+        landed = Observation()
         counts = Observation()
         quarantined = F.when(F.col("source") == QUARANTINE_SOURCE, F.col("n_records"))
         entries = build_catalog_entries(events, batch_id).observe(
@@ -177,20 +201,29 @@ def ingest_batch(
         )
         # sinks are looked up when called, so wrapped module attributes
         # (tracing) still take effect
-        sinks = [
-            lambda: lake.write_partitioned(events, staged[lake_path]),
+        concurrently(
+            spark,
+            lambda: lake.write_partitioned(
+                events.observe(landed, F.count(F.lit(1)).alias("n_rows")), staged[lake_path]
+            ),
             lambda: append_catalog(entries, staged[catalog_path]),
-        ]
+        )
+        n = counts.get
+        # a scan with no partitions never fires the lake's observation;
+        # such a write leaves no data file
+        n_landed = landed.get["n_rows"] if _holds_data(staged[lake_path]) else 0
+        if n_landed != n["n_events"]:
+            raise ValueError(
+                f"batch {batch_id!r} landed {n_landed} lake rows but its catalog "
+                f"records {n['n_events']}; nothing was published"
+            )
         if delivery_root:
-            sinks.append(lambda: fan_out(events, staged[delivery_root]))
-        concurrently(spark, *sinks)
+            shutil.copytree(staged[lake_path], staged[delivery_root])
         for root, path in staged.items():
             _publish(path, root)
     finally:
-        events.unpersist()
         for path in staged.values():
             shutil.rmtree(path, ignore_errors=True)
-    n = counts.get
     return {
         "n_events": n["n_events"],
         "n_sources": n["n_sources"],

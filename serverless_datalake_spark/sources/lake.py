@@ -52,17 +52,24 @@ def write_partitioned(
 ) -> None:
     """Partitioned, sorted, compressed append — R3+R4 in one writer.
 
-    repartitionByRange(partition_col, order_col), NOT
-    repartition(partition_col): hash-repartitioning on the partition
-    column alone funnels each source's entire batch through ONE task
+    A REBALANCE on ``partition_col``, NOT repartition(partition_col)
+    and NOT repartitionByRange(partition_col, order_col).
+    repartition hashes each source's entire batch through ONE task
     (a hot source serializes the write — the straggler anti-pattern
-    write_day_partitioned's docstring calls out; round-7 review
-    finding). Range partitioning on (source, ts) spreads a hot source
-    over several tasks in contiguous ts slices at the same shuffle
-    cost, and the within-partition sort keeps each output file's ts
-    min/max tight for row-group skipping."""
+    write_day_partitioned's docstring calls out). Range partitioning
+    avoids that but first runs a sampling job over the input to find
+    its bounds: over an uncached input, such as ingest's parse of a
+    staging blob, that is a second parse. REBALANCE needs no sample:
+    AQE coalesces small shuffle partitions, so the file count stays
+    bounded (about one file per source for a small batch), and splits
+    one above the advisory size across several tasks, by map output,
+    so a hot source of a multi-file input is not one straggler. A
+    write with no shuffle at all would skip the exchange too, but
+    writes one file per (input partition, source): a small-file cliff
+    for multi-file inputs. The within-partition sort keeps each output
+    file's ts min/max tight for row-group skipping."""
     (
-        df.repartitionByRange(partition_col, order_col)
+        df.hint("rebalance", partition_col)
         .sortWithinPartitions(partition_col, order_col)
         .write.mode(mode)
         .option("compression", compression)

@@ -8,11 +8,13 @@ from __future__ import annotations
 import ast
 import glob
 import gzip
+import hashlib
 import json
 import os
 import pathlib
 import shutil
 import warnings
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -609,7 +611,7 @@ def test_concurrent_sinks_keep_the_callers_job_group(spark, paths):
         _clear_job_group(sc)
     assert res == {"n_batches": 1, "n_events": 10}
     jobs = _jobs_after(sc, last)
-    assert len(jobs) >= 5  # three ingest sinks, replay's catalog totals and fan-out
+    assert len(jobs) >= 5  # ingest's lake write and catalog aggregate, replay's catalog totals and fan-out
     assert sorted(j.jobId() for j in jobs) == sorted(
         j for j in sc.statusTracker().getJobIdsForGroup("g") if j > last
     )
@@ -828,3 +830,126 @@ def test_replay_raises_on_a_surplus_and_publishes_nothing(spark, paths):
             spark, paths["catalog"], paths["lake"], paths["delivery"], "clicks", "2000-01-01", "2100-01-01"
         )
     assert _files_under(paths["delivery"]) == []
+
+
+def _rows_by_source(df, value=None) -> dict:
+    value = F.count(F.lit(1)) if value is None else value
+    return {r["source"]: r["n"] for r in df.groupBy("source").agg(value.alias("n")).collect()}
+
+
+# one line each of the shapes a JSON-lines parser can disagree with
+# itself on, depending on which columns a scan asks for
+ADVERSARIAL_LINES = [
+    '{"event_id": 1, "event_type": "clicks", "props": {"a": ',  # malformed tail after event_type
+    '{"event_id": 2, "event_type": "tweets", "props": [1, 2',  # unterminated array
+    '{"event_id": 3 "event_type": "clicks"}',  # missing comma
+    '[{"event_id": 4, "event_type": "clicks"}, {"event_id": 5, "event_type": "tweets"}]',
+    '"a bare string"',
+    "42",
+    "null",
+    "{}",
+    "",
+    "   \t ",
+    '{"event_id": 6, "event_type": {"name": "clicks"}}',  # object-valued event_type
+    '{"event_id": 7, "event_type": "clicks", "event_type": "tweets"}',  # duplicate keys
+    '{"event_id": 8, "ts": "not a time", "event_type": "clicks"}',
+    '{"event_id": 9, "event_type": "tweets", "ts": "not a time"}',
+    '{"event_id": "ten", "event_type": "clicks"}',
+    '{"event_type": "tweets", "event_id": "eleven"}',
+    '{"value": "high", "event_type": "clicks"}',
+    '{"event_type": "tweets", "value": "low"}',
+    '{"event_id": 12, "event_type": 12345}',  # numeric event_type
+    '{"event_id": 13, "event_type": ""}',
+    '{"event_id": 123456789012345678901234567890, "event_type": "clicks"}',  # overflows BIGINT
+    '{"event_id": 14, "event_type": "clicks"} trailing garbage',
+    '{"event_id": 15, "event_type": "tweets"}{"event_id": 16, "event_type": "clicks"}',
+    '\ufeff{"event_id": 17, "event_type": "clicks"}',  # BOM
+    '{"event_id": 18, "event_type": "tweets"}\r',  # CRLF
+]
+
+
+def test_ingest_conservation_over_adversarial_lines(spark, paths):
+    """The lake's rows and the catalog's counts come from two scans of
+    the blob. Over malformed and odd lines they still agree, per source
+    and the quarantine source included: lake rows = Σ catalog n_records
+    = delivered rows, and their total is the returned n_events. (A
+    catalog scan pruned to the routing column would not: it reads the
+    first line as all-null, the lake's full parse as a clicks row.)"""
+    os.makedirs(paths["staging"], exist_ok=True)
+    with gzip.open(os.path.join(paths["staging"], "part-0.json.gz"), "wt", newline="") as f:
+        for e in _mk_events(6):
+            f.write(json.dumps(e) + "\n")
+        for line in ADVERSARIAL_LINES:
+            f.write(line + "\n")
+    res = ingest.ingest_batch(
+        spark, paths["staging"], paths["lake"], paths["catalog"], paths["delivery"], "b0"
+    )
+    lake_rows = _rows_by_source(lake.read_lake(spark, paths["lake"]))
+    catalogued = _rows_by_source(ingest.read_catalog(spark, paths["catalog"]), F.sum("n_records"))
+    delivered = _rows_by_source(lake.read_lake(spark, paths["delivery"]))
+    assert lake_rows == catalogued == delivered
+    assert {"clicks", "tweets", ingest.QUARANTINE_SOURCE} <= set(lake_rows)
+    assert sum(lake_rows.values()) == res["n_events"]
+    assert res["n_sources"] == len(lake_rows)
+    assert res["n_quarantined"] == lake_rows[ingest.QUARANTINE_SOURCE]
+
+
+def test_ingest_count_mismatch_raises_and_publishes_nothing(spark, paths, monkeypatch):
+    """Before publishing, ingest checks that the lake write landed the
+    rows the catalog counts: a catalog missing a source's row raises,
+    naming both counts, and nothing appears under any root."""
+    real = ingest.build_catalog_entries
+    monkeypatch.setattr(
+        ingest,
+        "build_catalog_entries",
+        lambda events, batch_id: real(events, batch_id).where(F.col("source") != "tweets"),
+    )
+    _write_staging(paths["staging"], _mk_events(10))
+    with pytest.raises(ValueError, match=r"landed 10 lake rows but its catalog records 5"):
+        ingest.ingest_batch(
+            spark, paths["staging"], paths["lake"], paths["catalog"], paths["delivery"], "b0"
+        )
+    for root in ("lake", "catalog", "delivery"):
+        assert _files_under(paths[root]) == [], root
+
+
+def test_ingest_reads_the_staging_files_present_at_its_start(spark, paths, monkeypatch):
+    """Both of ingest's jobs scan one DataFrame, whose file list is
+    fixed when ingest reads the staging path: a blob that lands in
+    staging while the batch is being written reaches neither the lake
+    nor the catalog."""
+    _write_staging(paths["staging"], _mk_events(10))
+    later = _write_staging(paths["staging"] + "-later", _mk_events(7, start_id=100))
+    real = lake.write_partitioned
+
+    def land_second_blob_then_write(df, path, *args, **kwargs):
+        shutil.copy(later, os.path.join(paths["staging"], "part-1.json.gz"))
+        return real(df, path, *args, **kwargs)
+
+    monkeypatch.setattr(lake, "write_partitioned", land_second_blob_then_write)
+    res = ingest.ingest_batch(
+        spark, paths["staging"], paths["lake"], paths["catalog"], paths["delivery"], "b0"
+    )
+    catalogued = ingest.read_catalog(spark, paths["catalog"]).agg(F.sum("n_records")).first()[0]
+    assert lake.read_lake(spark, paths["lake"]).count() == catalogued == res["n_events"] == 10
+    # the second blob did land: a fresh read of staging sees both
+    assert lake.read_json_events(spark, paths["staging"]).count() == 17
+
+
+def test_ingest_delivers_the_lake_files(spark, paths):
+    """Ingest encodes a batch once: each source's delivered files are
+    byte copies of the files its lake partition received."""
+    evs = _mk_events(30)
+    evs[3]["event_type"] = None
+    _write_staging(paths["staging"], evs)
+    ingest.ingest_batch(
+        spark, paths["staging"], paths["lake"], paths["catalog"], paths["delivery"], "b0"
+    )
+
+    def digests(root: str, source: str) -> Counter:
+        files = glob.glob(os.path.join(root, f"source={source}", "*.parquet"))
+        return Counter(hashlib.sha256(pathlib.Path(f).read_bytes()).hexdigest() for f in files)
+
+    for source in ("clicks", "tweets", ingest.QUARANTINE_SOURCE):
+        in_lake = digests(paths["lake"], source)
+        assert in_lake and digests(paths["delivery"], source) == in_lake, source
