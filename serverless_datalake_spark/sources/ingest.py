@@ -16,14 +16,12 @@ Each batch is Parquet-encoded once. Two Spark jobs run concurrently
 queueing for them: the lake write and the catalog aggregate, each
 parsing the blob in full rather than sharing a cached parse. The
 delivery is a byte copy of the lake write's files, as the reference
-publishes the same records it stored (recorder:55–65). Before
-anything is published, the rows the lake write landed must equal the
-catalog's Σ n_records (ValueError otherwise). Every write goes to a
-hidden staging directory, and the files move into place only once all
-of this has succeeded: the lake first, then the delivery, then the
-catalog. So a catalog row always names committed lake data, and a
-failed batch publishes nothing, so a retry of the same batch lands it
-once.
+publishes the same records it stored (recorder:55–65). Every write
+is staged and published only once the batch's counts agree: the lake
+first, the catalog last, so a catalog row always names committed lake
+data. ``commit_batch`` is that one recorder (the reference's
+event_recorder) for blobs and streaming micro-batches alike, so every
+table has one layout, ``<root>/source=<s>/<batch_id>.part-*.parquet``.
 
 The catalog is itself a partitioned Parquet table, so the DynamoDB
 (pk=Source, sk=Timestamp) query shape (stack.py:63–77) becomes
@@ -33,6 +31,7 @@ partition pruning + min/max skipping.
 from __future__ import annotations
 
 import functools
+import glob
 import operator
 import os
 import re
@@ -48,11 +47,12 @@ from serverless_datalake_spark.sources import lake
 
 CATALOG_SCHEMA = "source STRING, ingest_ts TIMESTAMP, file_key STRING, n_records BIGINT"
 
-# the source of records whose routing value is null or empty
+# the source of records whose routing value is null or empty, or malformed
 QUARANTINE_SOURCE = "__unknown__"
 
-# a batch id names a staging directory and ends every catalog file_key,
-# so it holds no path separator, no dot and no leading '_' or '.'
+# a batch id names a staging directory, prefixes its published files and
+# ends every catalog file_key, so it holds no path separator, no dot and
+# no leading '_' or '.'
 BATCH_ID = re.compile(r"[A-Za-z0-9][A-Za-z0-9_-]*")
 
 
@@ -78,18 +78,30 @@ def _staged(root: str, batch_id: str) -> str:
     return os.path.join(root, f"_staged-{batch_id}")
 
 
-def _publish(staged: str, root: str) -> None:
+def _publish(staged: str, root: str, batch_id: str | None = None) -> None:
     """Move a finished write's files from ``staged`` to the same
     relative paths under ``root`` (the staged-then-move pattern of
     maintenance.compact). Spark's part-file names carry a per-job
-    UUID, so they never collide with files already there."""
+    UUID, so they never collide with files already there. A
+    ``batch_id`` prefixes each name, after the dot of a hidden checksum
+    (``.<batch_id>.part-x.crc``) so it still matches its data file."""
     for base, _, names in os.walk(staged):
         dest = os.path.join(root, os.path.relpath(base, staged))
         for n in names:
             if n.lstrip(".").startswith("_"):
                 continue  # the write's _SUCCESS marker and its checksum
+            name = f"{'.' * n.startswith('.')}{batch_id}.{n.lstrip('.')}" if batch_id else n
             os.makedirs(dest, exist_ok=True)
-            os.replace(os.path.join(base, n), os.path.join(dest, n))
+            os.replace(os.path.join(base, n), os.path.join(dest, name))
+
+
+def _unpublish(root: str, batch_id: str) -> None:
+    """Remove what an earlier commit of ``batch_id`` published under
+    ``root``, in any source. A batch id holds no dot, so the prefix
+    names no other batch's files (replay's keep Spark's names)."""
+    for pattern in (f"{batch_id}.*", f".{batch_id}.*"):
+        for f in glob.glob(os.path.join(glob.escape(root), "source=*", pattern)):
+            os.remove(f)
 
 
 def build_catalog_entries(events: DataFrame, batch_id: str) -> DataFrame:
@@ -112,8 +124,7 @@ def append_catalog(entries: DataFrame, catalog_path: str) -> None:
 
 
 def read_catalog(spark: SparkSession, catalog_path: str) -> DataFrame:
-    """Schema-first, like ``lake.read_lake``; the streaming sink's
-    ``batch_id=`` partitions still come through as a column."""
+    """Schema-first, like ``lake.read_lake``."""
     return spark.read.schema(CATALOG_SCHEMA).parquet(catalog_path)
 
 
@@ -123,9 +134,15 @@ def with_source(events: DataFrame, source_col: str) -> DataFrame:
     source. Spark writes both as the Hive default partition and reads
     them back as NULL, so such rows would reach no subscriber and their
     catalog file_key (a concat with the source) would be NULL, out of
-    reach of every replay."""
+    reach of every replay. A row of a staging read that Spark flagged
+    as malformed (a non-null ``lake.CORRUPT_RECORD``) is quarantined
+    too, and the flag column dropped: a line that breaks after its
+    event_type keeps that value, but is not an event of that source."""
     name = F.nullif(F.col(source_col).cast("string"), F.lit(""))
-    return events.withColumn("source", F.coalesce(name, F.lit(QUARANTINE_SOURCE)))
+    if lake.CORRUPT_RECORD in events.columns:
+        name = F.when(F.col(lake.CORRUPT_RECORD).isNull(), name)
+    source = F.coalesce(name, F.lit(QUARANTINE_SOURCE))
+    return events.withColumn("source", source).drop(lake.CORRUPT_RECORD)
 
 
 def fan_out(events: DataFrame, delivery_root: str) -> None:
@@ -153,32 +170,52 @@ def ingest_batch(
     batch_id: str,
     source_col: str = "event_type",
 ) -> dict[str, int]:
-    """E1 end-to-end: read staging JSON, then land it in the lake
-    partitioned by source and append its catalog entries, as two
-    concurrent jobs; the delivery is a copy of the lake write's files.
-    Nothing is published until both jobs have succeeded and the lake's
-    landed rows equal the catalog's Σ n_records; otherwise it raises
-    (ValueError for a count mismatch, naming both counts). Returns
-    counts, ``n_quarantined`` being the records routed to the
-    quarantine source. Raises ValueError, before any read or write, if
-    ``batch_id`` does not match ``BATCH_ID``."""
+    """E1 end-to-end: read the staging JSON, route each line by
+    ``source_col`` and record it with ``commit_batch``."""
+    raw = lake.read_json_events(spark, staging_path)
+    # The commit's two jobs scan staging through this one DataFrame,
+    # whose file list is fixed now: a blob landing later is read by
+    # neither, with no cache. Both must parse each line alike: a scan
+    # pruned to the routing columns does not flag a type mismatch in
+    # another field as malformed, so the catalog would count under its
+    # source a row the lake files under __unknown__. This observation
+    # (lines that parsed to nothing) references every column, so
+    # neither scan is pruned.
+    fields = [F.col(c).isNull() for c in raw.columns if c != lake.CORRUPT_RECORD]
+    raw = raw.observe("ingest_unparsed_lines", F.count_if(functools.reduce(operator.and_, fields)))
+    return commit_batch(
+        spark, with_source(raw, source_col), lake_path, catalog_path, delivery_root, batch_id
+    )
+
+
+def commit_batch(
+    spark: SparkSession,
+    events: DataFrame,
+    lake_path: str,
+    catalog_path: str,
+    delivery_root: str | None,
+    batch_id: str,
+) -> dict[str, int]:
+    """Land ``events`` (rows with a ``source``) in the lake partitioned
+    by source and append their catalog entries, as two concurrent
+    jobs; the delivery is a copy of the lake write's files. Nothing is
+    published until both jobs have succeeded and the lake's landed
+    rows equal the catalog's Σ n_records (ValueError naming both
+    otherwise). Returns counts, ``n_quarantined`` being the records
+    routed to the quarantine source. Raises ValueError, before any job
+    or write, if ``batch_id`` does not match ``BATCH_ID``.
+
+    A re-run of a ``batch_id`` (a retried micro-batch) replaces its
+    whole contribution, sources it no longer has included: once its
+    counts agree, the files published under its prefix are removed
+    (catalog, delivery, then lake) before the new ones are published.
+    It is briefly absent, never doubled or half-stale. Caveat: the
+    re-run stamps a later catalog ingest_ts, so an ingest-time as-of
+    read with a cutoff between the two runs shifts; version-exact
+    time travel is the txlog sink's job."""
     if not BATCH_ID.fullmatch(batch_id):
         raise ValueError(f"batch_id {batch_id!r} does not match {BATCH_ID.pattern}")
-    raw = lake.read_json_events(spark, staging_path)
-    # Both jobs scan the staging path through this one DataFrame, and a
-    # DataFrame fixes its file list when it is created, so nothing is
-    # cached: a file landing in staging during the ingest is read by
-    # neither job. The two scans must also parse each line alike. One
-    # pruned to the routing column skips the other fields unconverted,
-    # so a line whose syntax breaks inside one of them (an object-valued
-    # props cut short) reads as all-null there, while the full parse
-    # keeps the event_type read before the break: the catalog would
-    # count under __unknown__ a row the lake files under its source.
-    # This observation (lines that parsed to nothing) references every
-    # column, so neither scan is pruned.
-    unparsed = functools.reduce(operator.and_, [F.col(c).isNull() for c in raw.columns])
-    raw = raw.observe("ingest_unparsed_lines", F.count_if(unparsed))
-    events = with_source(raw, source_col).withColumn("batch_id", F.lit(batch_id))
+    events = events.withColumn("batch_id", F.lit(batch_id))
     # every write goes to a staging directory, published in this order
     # once all have succeeded: data before metadata, the catalog (the
     # lake's snapshot log, replay.read_lake_as_of) last
@@ -219,14 +256,11 @@ def ingest_batch(
             )
         if delivery_root:
             shutil.copytree(staged[lake_path], staged[delivery_root])
+        for root in reversed(staged):
+            _unpublish(root, batch_id)
         for root, path in staged.items():
-            _publish(path, root)
+            _publish(path, root, batch_id)
     finally:
         for path in staged.values():
             shutil.rmtree(path, ignore_errors=True)
-    return {
-        "n_events": n["n_events"],
-        "n_sources": n["n_sources"],
-        "n_quarantined": n["n_quarantined"],
-        "batch_id": batch_id,  # type: ignore[dict-item]
-    }
+    return {**n, "batch_id": batch_id}

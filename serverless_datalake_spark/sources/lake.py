@@ -2,7 +2,8 @@
 
 The reference stores gzip JSON blobs under one S3 prefix per source
 (stack.py:142,144). Here the lake is a Hive-partitioned Parquet table
-``.../source=<source>/part-*.parquet``:
+``.../source=<source>/<batch_id>.part-*.parquet``, written by
+``ingest.commit_batch`` for batch and streaming ingest alike:
 
 * the per-source prefix becomes ``partitionBy("source")`` — the EQ
   half of the replay query is partition pruning (plan-time, free);
@@ -40,6 +41,10 @@ EVENTS_JSON_SCHEMA = (
 # a lake or delivery row: the parsed event plus the two columns ingest
 # adds, the routing source and the batch id
 LAKE_SCHEMA = EVENTS_JSON_SCHEMA + ", source STRING, batch_id STRING"
+
+# a staging read's copy of each line Spark could not parse in full
+CORRUPT_RECORD = "_corrupt_record"
+STAGING_JSON_SCHEMA = f"{EVENTS_JSON_SCHEMA}, {CORRUPT_RECORD} STRING"
 
 
 def write_partitioned(
@@ -79,10 +84,8 @@ def write_partitioned(
 
 
 def read_lake(spark: SparkSession, path: str) -> DataFrame:
-    """Schema-first scan of a lake or delivery root, in either writer's
-    layout (``source=`` partitions, plus ``batch_id=`` ones from the
-    streaming sink); needs no job to learn the shape. A column missing
-    from a file reads as NULL."""
+    """Schema-first scan of a lake or delivery root; needs no job to
+    learn the shape. A column missing from a file reads as NULL."""
     return spark.read.schema(LAKE_SCHEMA).parquet(path)
 
 
@@ -90,8 +93,10 @@ def read_json_events(spark: SparkSession, path: str) -> DataFrame:
     """R6/R7: scan+parse. Spark decompresses .gz transparently and
     parses JSON-lines natively — the reference's fetch+gunzip+
     `}{`-split (recorder:34–43) collapses into one schema-first read
-    (we do NOT replicate the unsound `}{` rewrite; SURVEY.md §1.3)."""
-    return spark.read.schema(EVENTS_JSON_SCHEMA).json(path)
+    (we do NOT replicate the unsound `}{` rewrite; SURVEY.md §1.3).
+    A malformed line is a row of the fields that did parse, plus the
+    line in ``CORRUPT_RECORD`` (flagged only by the fields a scan reads)."""
+    return spark.read.schema(STAGING_JSON_SCHEMA).json(path)
 
 
 def write_json_gz(df: DataFrame, path: str, partition_col: str | None = None) -> None:

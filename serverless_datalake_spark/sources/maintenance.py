@@ -26,8 +26,8 @@ TARGET_FILE_BYTES = 128 * 1024 * 1024
 
 def partition_file_stats(lake_path: str, source: str) -> tuple[int, int]:
     """(n_files, total_bytes) of one source partition on local disk,
-    counting nested sub-partitions (e.g. the streaming sink's
-    source=/batch_id= layout) too."""
+    counting nested sub-partitions too (a lake written with a finer
+    partition chain than source=, e.g. source=/batch_id=)."""
     files = [
         f
         for f in glob.glob(
@@ -40,8 +40,9 @@ def partition_file_stats(lake_path: str, source: str) -> tuple[int, int]:
 
 
 def _sub_partition_keys(lake_path: str, source: str) -> list[str]:
-    """Partition-column chain BELOW source= (empty for a flat layout),
-    read off the directory names: source=clicks/batch_id=b0/... →
+    """Partition-column chain BELOW source= (empty for the flat layout
+    the engine's own writers use; a lake written elsewhere may be
+    nested), read off the directory names: source=clicks/batch_id=b0/... →
     ['batch_id']. The rewrite must partition by the same chain or the
     overwrite would mix two physical layouts in one table."""
     keys: list[str] = []

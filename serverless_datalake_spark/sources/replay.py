@@ -62,19 +62,15 @@ def read_lake_as_of(
     last batch at-or-before ``as_of`` was cataloged. The catalog's
     ingest_ts → batch_id mapping is the snapshot log (the role a table
     format's metadata layer plays); batches after the snapshot are
-    filtered out of the scan by a row-level semi-join on ``batch_id``,
-    in both lake layouts: the batch-ingest lake is partitioned by
-    source only, and for the streaming sink's ``batch_id=``
-    partitions Spark plans no dynamic partition pruning filter for
-    this join, so every file of the lake is listed and read."""
+    filtered out of the scan by a row-level semi-join on ``batch_id``;
+    the lake is partitioned by source only, so every file of the lake
+    is listed and read."""
     cat = read_catalog(spark, catalog_path)
     selected = _batch_id_keys(cat.where(F.col("ingest_ts") <= F.lit(as_of)))
     lake_df = lake.read_lake(spark, lake_path)
     # broadcast semi-join, NOT isin(collect()): at millions of cataloged
     # batches a literal IN list is a giant expression tree on the
-    # driver; the join keeps selection distributed. It prunes no
-    # directory: even where batch_id is a partition column, the plan
-    # gets no dynamic partition pruning filter.
+    # driver; the join keeps selection distributed.
     return lake_df.join(F.broadcast(selected), on="batch_id", how="left_semi")
 
 

@@ -53,8 +53,7 @@ def append_rollup(events: DataFrame, rollup_path: str, batch_id: int | str) -> N
     contribution; source stays a sorted data column, so per-source
     reads still skip row groups on min/max stats. The overwrite mode
     rides the WRITE (option), not the session conf — a set/restore of
-    the session key races with concurrent queries on the same session
-    (see start_ingest_query's contract note).
+    the session key races with concurrent queries on the same session.
 
     Two closures from the round-8 review of that fix:
     * A table written under the OLD (batch_id, source) layout cannot

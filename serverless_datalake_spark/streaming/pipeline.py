@@ -7,32 +7,29 @@ Mapping (SURVEY.md §2a):
 * R2 Firehose 60 s / 10 MB buffer → ``trigger(processingTime)``
   micro-batches (60 s default; tests use availableNow);
 * R3/R4 gzip + per-source prefix → partitioned Parquet sink;
-* R9/R10/R11 catalog append + fan-out → ``foreachBatch``: one
-  transaction-shaped function per micro-batch that (a) lands data
-  partitioned by source, (b) delivers per source, (c) appends catalog
-  entries keyed by the batch id;
+* R9/R10/R11 catalog append + fan-out → ``foreachBatch``: each
+  micro-batch is recorded by ``ingest.commit_batch``, the batch
+  ingest's own commit (lake and catalog as concurrent staged jobs,
+  the delivery a copy of the lake files, published lake, delivery,
+  catalog), into the same layout;
 * §1.4 at-least-once gap → ``withWatermark`` + ``dropDuplicates``
   makes delivery exactly-once downstream of the dedup state store;
   checkpointing makes the whole query restartable.
 
-`foreachBatch` writes are idempotent per (batch_id): re-running a
-failed batch replaces that batch's whole contribution to every sink,
-rather than duplicating it or leaving part of the first run behind —
-Structured Streaming's replayed-batch contract (``record_micro_batch``).
+A re-run of a failed micro-batch replaces that batch's whole
+contribution to every sink, rather than duplicating it or leaving part
+of the first run behind — Structured Streaming's replayed-batch
+contract (``commit_batch``'s re-run contract).
 """
 
 from __future__ import annotations
-
-import glob
-import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from serverless_datalake_spark.sources.ingest import build_catalog_entries, with_source
-from serverless_datalake_spark.sources.lake import EVENTS_JSON_SCHEMA
+from serverless_datalake_spark.sources.ingest import commit_batch, with_source
+from serverless_datalake_spark.sources.lake import STAGING_JSON_SCHEMA
 
 
 def read_event_stream(
@@ -47,7 +44,7 @@ def read_event_stream(
     event key. maxFilesPerTrigger bounds micro-batch size (the 10 MB
     half of the reference's buffering hint, stack.py:140)."""
     stream = (
-        spark.readStream.schema(EVENTS_JSON_SCHEMA)
+        spark.readStream.schema(STAGING_JSON_SCHEMA)
         .option("maxFilesPerTrigger", 16)
         .json(staging_path)
     )
@@ -59,17 +56,6 @@ def read_event_stream(
     return stream
 
 
-def _drop_batch(root: str, bid: str) -> None:
-    """Remove batch ``bid``'s ``source=*/batch_id=<bid>`` partitions
-    from ``root``, whatever sources an earlier run of it wrote."""
-    for part in glob.glob(os.path.join(glob.escape(root), "source=*", f"batch_id={bid}")):
-        shutil.rmtree(part)
-
-
-def _append_batch(df: DataFrame, path: str) -> None:
-    df.write.mode("append").partitionBy("source", "batch_id").parquet(path)
-
-
 def record_micro_batch(
     batch: DataFrame,
     batch_id: int,
@@ -77,42 +63,17 @@ def record_micro_batch(
     catalog_path: str,
     delivery_root: str | None,
 ) -> None:
-    """E1's recorder for one micro-batch: land it in the lake, deliver
-    it and catalogue it, each sink partitioned by (source, batch_id).
-
-    Idempotence contract: Structured Streaming may re-run a batch after
-    a failure. The batch's partitions are first removed from every sink
-    (the catalog's first, so no catalog row outlives its data), then
-    appended again; a re-run therefore replaces the batch's whole
-    contribution, including sources the new run no longer has (a
-    dynamic partition overwrite replaced only the partitions the new
-    run wrote, leaving the rest stale). During a re-run the batch is
-    briefly absent, but it is never doubled or half-stale. Other
-    batches' partitions are untouched.
-
-    Known replay caveat: catalog ingest_ts is the commit-attempt wall
-    clock, so a crash-replay rewrites its partition with a later
-    timestamp (same rows otherwise) — ingest-time as-of reads with a
-    cutoff inside that window can shift; version-exact time travel is
-    the txlog sink's job."""
-    bid = f"b{batch_id:012d}"
-    for root in (catalog_path, delivery_root, lake_path):
-        if root:
-            _drop_batch(root, bid)
-    # pin the micro-batch across the 2-3 sinks: unpersisted, each
-    # write re-ran the whole batch plan — JSON scan + the stateful
-    # dedup — so the steady ingest cost was up to 3x for nothing
-    # (round-7 review finding; the multi-sink persist is the
-    # documented foreachBatch pattern). Data before metadata: the
-    # catalog rows are written last, so they name committed lake
-    # data and deliveries.
-    batch = batch.withColumn("batch_id", F.lit(bid)).persist()
+    """E1's recorder for one micro-batch: ``ingest.commit_batch`` under
+    the batch id ``b<batch_id, 12 digits>``, which a re-run of the
+    micro-batch shares. The micro-batch is pinned for the commit's two
+    concurrent jobs: unpersisted, each would re-run the whole batch
+    plan, JSON scan and stateful dedup included (the multi-sink
+    persist is the documented foreachBatch pattern)."""
+    batch = batch.persist()
     try:
-        _append_batch(batch.repartition("source").sortWithinPartitions("source", "ts"), lake_path)
-        if delivery_root:
-            _append_batch(batch, delivery_root)
-        entries = build_catalog_entries(batch, bid)
-        _append_batch(entries.withColumn("batch_id", F.lit(bid)), catalog_path)
+        commit_batch(
+            batch.sparkSession, batch, lake_path, catalog_path, delivery_root, f"b{batch_id:012d}"
+        )
     finally:
         batch.unpersist()
 

@@ -153,7 +153,7 @@ def test_orc_round_trip_with_partitioning_and_pushdown(spark, sf_dir, tmp_path):
 
 
 def test_compaction_of_nested_batch_layout_preserves_layout(spark, tmp_path):
-    """The streaming sink writes source=/batch_id= partitions; the
+    """A lake written with nested source=/batch_id= partitions: the
     rewrite must partition by the SAME chain (a source=-only overwrite
     would mix two physical layouts in one table) and the stats must
     count nested files."""

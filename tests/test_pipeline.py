@@ -12,6 +12,7 @@ import hashlib
 import json
 import os
 import pathlib
+import re
 import shutil
 import warnings
 from collections import Counter
@@ -622,9 +623,10 @@ def _files_under(root: str) -> list[str]:
 
 
 def test_ingest_lake_failure_writes_no_catalog_or_delivery(spark, paths):
-    """Catalog rows and deliveries are published only once the lake has
-    committed: a failed lake write leaves no catalog row naming missing
-    data, no delivery a retry would duplicate, and no persisted batch."""
+    """The delivery is a copy of the lake write's files, and the catalog
+    is published after the lake: a failed lake write leaves no catalog
+    row naming missing data, nothing delivered that a retry would
+    duplicate, and nothing persisted."""
     _write_staging(paths["staging"], _mk_events(10))
     pathlib.Path(paths["lake"]).write_text("not a directory")
     persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
@@ -639,10 +641,10 @@ def test_ingest_lake_failure_writes_no_catalog_or_delivery(spark, paths):
 
 
 def test_ingest_sink_failure_is_raised_after_the_other_sinks(spark, paths):
-    """A failing catalog write is raised only after the lake and the
-    delivery writes have finished: the staged lake rows and delivery
-    are dropped unpublished, no job is left running and the batch is
-    unpersisted."""
+    """A failing catalog write is raised only after the concurrent lake
+    write has finished: the staged lake rows are dropped unpublished,
+    nothing is delivered, no job is left running and nothing stays
+    persisted."""
     sc = spark.sparkContext
     _write_staging(paths["staging"], _mk_events(10))
     pathlib.Path(paths["catalog"]).write_text("not a directory")
@@ -762,11 +764,13 @@ def _sorted_rows(df) -> list:
 
 @pytest.mark.parametrize("writer", ["batch", "streaming"])
 def test_schema_constants_match_what_the_writers_produce(spark, paths, writer):
-    """LAKE_SCHEMA and CATALOG_SCHEMA describe what ingest writes: for
-    the lake, the catalog and the delivery root, in the batch layout
-    and in the streaming one (which adds a batch_id partition to every
-    sink), the schema-first read returns the same columns, types and
-    rows as reading the schema from the files."""
+    """Both writers record through one commit into one layout: the lake,
+    the catalog and the delivery root hold only
+    ``source=<s>/<batch_id>.part-*.parquet`` files (and their hidden
+    checksums), with no batch_id= directory. LAKE_SCHEMA and
+    CATALOG_SCHEMA describe them: the schema-first read returns the
+    same columns, types and rows as reading the schema from the
+    files."""
     evs = _mk_events(30)
     evs[3]["event_type"] = None
     _write_staging(paths["staging"], evs)
@@ -790,6 +794,10 @@ def test_schema_constants_match_what_the_writers_produce(spark, paths, writer):
         ], name
         assert _sorted_rows(fixed) == _sorted_rows(inferred), name
         assert fixed.count() == (3 if name == "catalog" else 30), name
+        bid = "b0" if writer == "batch" else "b000000000000"
+        layout = re.compile(rf"source=[^/]+/(\.{bid}\.part-[^/]+\.parquet\.crc|{bid}\.part-[^/]+\.parquet)")
+        files = [os.path.relpath(f, paths[name]) for f in _files_under(paths[name])]
+        assert files and [f for f in files if not layout.fullmatch(f)] == [], name
 
 
 def test_replay_raises_when_catalogued_rows_are_missing(spark, paths):
@@ -865,6 +873,7 @@ ADVERSARIAL_LINES = [
     '{"event_id": 15, "event_type": "tweets"}{"event_id": 16, "event_type": "clicks"}',
     '\ufeff{"event_id": 17, "event_type": "clicks"}',  # BOM
     '{"event_id": 18, "event_type": "tweets"}\r',  # CRLF
+    '{"event_id": "nan", "user_id": 19, "event_type": "tweets"}',  # not a number
 ]
 
 
@@ -892,6 +901,11 @@ def test_ingest_conservation_over_adversarial_lines(spark, paths):
     assert sum(lake_rows.values()) == res["n_events"]
     assert res["n_sources"] == len(lake_rows)
     assert res["n_quarantined"] == lake_rows[ingest.QUARANTINE_SOURCE]
+    # a line Spark flags as malformed is quarantined, whatever its
+    # event_type: one that breaks after it, one with a non-numeric id
+    unknown = lake.read_lake(spark, paths["lake"]).where(F.col("source") == ingest.QUARANTINE_SOURCE)
+    assert unknown.where((F.col("event_id") == 1) & F.col("props").isNull()).count() == 1
+    assert unknown.where(F.col("user_id") == 19).count() == 1
 
 
 def test_ingest_count_mismatch_raises_and_publishes_nothing(spark, paths, monkeypatch):
@@ -953,3 +967,60 @@ def test_ingest_delivers_the_lake_files(spark, paths):
     for source in ("clicks", "tweets", ingest.QUARANTINE_SOURCE):
         in_lake = digests(paths["lake"], source)
         assert in_lake and digests(paths["delivery"], source) == in_lake, source
+
+
+def test_replay_into_a_streamed_delivery_root(spark, paths):
+    """A streaming ingest and a replay deliver into one root in one
+    layout, so after both every subscriber of the root still reads:
+    its streamed rows plus the replayed ones."""
+    _write_staging(paths["staging"], _mk_events(40))
+    streaming_pipeline.run_ingest_available_now(
+        spark, paths["staging"], paths["lake"], paths["catalog"], paths["delivery"], paths["checkpoint"]
+    )
+    res = replay.replay(
+        spark, paths["catalog"], paths["lake"], paths["delivery"], "clicks", "2000-01-01", "2100-01-01"
+    )
+    assert res == {"n_batches": 1, "n_events": 20}
+    reg = distribution.TopicRegistry(paths["delivery"])
+    assert distribution.subscribe(spark, reg, "clicks").count() == 40
+    assert distribution.subscribe(spark, reg, "tweets").count() == 20
+
+
+def test_batch_and_streaming_ingest_share_the_three_roots(spark, paths):
+    """A batch ingest and a streaming ingest into the same lake, catalog
+    and delivery root leave tables that read as one: lake rows = Σ
+    catalog n_records = delivered rows = lines ingested, per source."""
+    _write_staging(paths["staging"], _mk_events(30))
+    ingest.ingest_batch(
+        spark, paths["staging"], paths["lake"], paths["catalog"], paths["delivery"], "b0"
+    )
+    streamed = paths["staging"] + "-stream"
+    _write_staging(streamed, _mk_events(50, start_id=1000))
+    streaming_pipeline.run_ingest_available_now(
+        spark, streamed, paths["lake"], paths["catalog"], paths["delivery"], paths["checkpoint"]
+    )
+    want = {"clicks": 40, "tweets": 40}
+    assert _rows_by_source(lake.read_lake(spark, paths["lake"])) == want
+    assert _rows_by_source(ingest.read_catalog(spark, paths["catalog"]), F.sum("n_records")) == want
+    reg = distribution.TopicRegistry(paths["delivery"])
+    assert {s: distribution.subscribe(spark, reg, s).count() for s in want} == want
+
+
+def test_streaming_count_mismatch_raises_and_publishes_nothing(spark, paths, monkeypatch):
+    """The streaming recorder checks a micro-batch's counts as ingest
+    does: a catalog that disagrees with the lake rows raises, naming
+    both counts, and nothing appears under any root."""
+    real = ingest.build_catalog_entries
+    monkeypatch.setattr(
+        ingest,
+        "build_catalog_entries",
+        lambda events, batch_id: real(events, batch_id).where(F.col("source") != "tweets"),
+    )
+    _write_staging(paths["staging"], _mk_events(10))
+    batch = ingest.with_source(lake.read_json_events(spark, paths["staging"]), "event_type")
+    with pytest.raises(ValueError, match=r"landed 10 lake rows but its catalog records 5"):
+        streaming_pipeline.record_micro_batch(
+            batch, 0, paths["lake"], paths["catalog"], paths["delivery"]
+        )
+    for root in ("lake", "catalog", "delivery"):
+        assert _files_under(paths[root]) == [], root

@@ -10,6 +10,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from serverless_datalake_spark.sources.lake import EVENTS_JSON_SCHEMA
 from serverless_datalake_spark.streaming import pipeline as sp
 
 
@@ -62,7 +63,7 @@ def test_streaming_window_counts_match_batch(spark, tmp_path):
     }
     # batch twin over the same files
     batch = (
-        spark.read.schema(sp.EVENTS_JSON_SCHEMA)
+        spark.read.schema(EVENTS_JSON_SCHEMA)
         .json(staging)
         .withColumn("source", F.col("event_type"))
         .groupBy("source", F.window("ts", "1 hour"))
@@ -87,21 +88,23 @@ def test_batch_replay_is_idempotent(spark, tmp_path):
     lake_p, cat_p, deliv_p = (str(tmp_path / d) for d in ("lk", "ct", "dl"))
     _write(staging, _evts(30, lambda i: 1), "a.json.gz")
     batch = (
-        spark.read.schema(sp.EVENTS_JSON_SCHEMA)
+        spark.read.schema(EVENTS_JSON_SCHEMA)
         .json(staging)
         .withColumn("source", F.col("event_type"))
     )
 
-    def by_batch_and_source(path, value):
-        df = spark.read.parquet(path).groupBy("batch_id", "source").agg(value.alias("n"))
-        return {(r["batch_id"], r["source"]): r["n"] for r in df.collect()}
+    def by_batch_and_source(path, value, batch_id=F.col("batch_id")):
+        df = spark.read.parquet(path).groupBy(batch_id.alias("b"), "source").agg(value.alias("n"))
+        return {(r["b"], r["source"]): r["n"] for r in df.collect()}
 
     def check(b0: dict) -> None:
         want = {("b000000000000", s): n for s, n in b0.items()}
         want[("b000000000001", "tweets")] = 15
         assert by_batch_and_source(lake_p, F.count("*")) == want
         assert by_batch_and_source(deliv_p, F.count("*")) == want
-        assert by_batch_and_source(cat_p, F.sum("n_records")) == want
+        # a catalog row names its batch in file_key, <source>/<batch_id>.parquet
+        file_key_batch = F.regexp_extract("file_key", r"([^/]+)\.parquet$", 1)
+        assert by_batch_and_source(cat_p, F.sum("n_records"), file_key_batch) == want
 
     def record(df, batch_id: int) -> None:
         sp.record_micro_batch(df, batch_id, lake_p, cat_p, deliv_p)
@@ -129,10 +132,10 @@ def test_stream_stream_join_matches_batch_join(spark, tmp_path):
     _write(en_dir, _evts(20, lambda i: i % 3, start_id=9000), "en.json.gz")
 
     ev_stream = (
-        spark.readStream.schema(sp.EVENTS_JSON_SCHEMA).json(ev_dir)
+        spark.readStream.schema(EVENTS_JSON_SCHEMA).json(ev_dir)
     )
     en_stream = (
-        spark.readStream.schema(sp.EVENTS_JSON_SCHEMA)
+        spark.readStream.schema(EVENTS_JSON_SCHEMA)
         .json(en_dir)
         .withColumn("tag", F.col("event_type"))
     )
@@ -150,9 +153,9 @@ def test_stream_stream_join_matches_batch_join(spark, tmp_path):
         (r["user_id"], r["event_id"], r["tag"], r["x_ts"]) for r in spark.read.parquet(out).collect()
     }
 
-    ev_b = spark.read.schema(sp.EVENTS_JSON_SCHEMA).json(ev_dir)
+    ev_b = spark.read.schema(EVENTS_JSON_SCHEMA).json(ev_dir)
     en_b = (
-        spark.read.schema(sp.EVENTS_JSON_SCHEMA)
+        spark.read.schema(EVENTS_JSON_SCHEMA)
         .json(en_dir)
         .select(F.col("user_id").alias("u2"), F.col("ts").alias("x_ts"), F.col("event_type").alias("tag"))
     )
@@ -251,7 +254,7 @@ def test_stream_static_enrich_matches_batch_join(spark, tmp_path):
         (r["event_id"], r["segment"]) for r in spark.read.parquet(out).collect()
     }
     batch = (
-        spark.read.schema(sp.EVENTS_JSON_SCHEMA)
+        spark.read.schema(EVENTS_JSON_SCHEMA)
         .json(staging)
         .withColumn("source", F.col("event_type"))
         .join(dim, "user_id", "left")
@@ -289,7 +292,7 @@ def test_streaming_topk_matches_batch_topk(spark, tmp_path):
     from pyspark.sql import Window as W
 
     batch = (
-        spark.read.schema(sp.EVENTS_JSON_SCHEMA)
+        spark.read.schema(EVENTS_JSON_SCHEMA)
         .json(staging)
         .withColumn("source", F.col("event_type"))
         .groupBy("source", F.window("ts", "1 hour"))
@@ -453,9 +456,9 @@ def test_stream_stream_left_outer_join_null_pads_after_watermark(spark, tmp_path
     _write(ev_dir, _evts(40, lambda i: i % 3) + sentinel, "ev.json.gz")
     _write(en_dir, _evts(10, lambda i: i % 3, start_id=9000) + sentinel, "en.json.gz")
 
-    ev_stream = spark.readStream.schema(sp.EVENTS_JSON_SCHEMA).json(ev_dir)
+    ev_stream = spark.readStream.schema(EVENTS_JSON_SCHEMA).json(ev_dir)
     en_stream = (
-        spark.readStream.schema(sp.EVENTS_JSON_SCHEMA)
+        spark.readStream.schema(EVENTS_JSON_SCHEMA)
         .json(en_dir)
         .withColumn("tag", F.col("event_type"))
     )
@@ -478,9 +481,9 @@ def test_stream_stream_left_outer_join_null_pads_after_watermark(spark, tmp_path
         if r["user_id"] != 999  # sentinel rows drive the watermark only
     }
 
-    ev_b = spark.read.schema(sp.EVENTS_JSON_SCHEMA).json(ev_dir)
+    ev_b = spark.read.schema(EVENTS_JSON_SCHEMA).json(ev_dir)
     en_b = (
-        spark.read.schema(sp.EVENTS_JSON_SCHEMA)
+        spark.read.schema(EVENTS_JSON_SCHEMA)
         .json(en_dir)
         .select(
             F.col("user_id").alias("u2"),
