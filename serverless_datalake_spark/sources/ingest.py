@@ -78,30 +78,36 @@ def _staged(root: str, batch_id: str) -> str:
     return os.path.join(root, f"_staged-{batch_id}")
 
 
-def _publish(staged: str, root: str, batch_id: str | None = None) -> None:
+def _publish(staged: str, root: str, batch_id: str) -> None:
     """Move a finished write's files from ``staged`` to the same
     relative paths under ``root`` (the staged-then-move pattern of
-    maintenance.compact). Spark's part-file names carry a per-job
-    UUID, so they never collide with files already there. A
-    ``batch_id`` prefixes each name, after the dot of a hidden checksum
-    (``.<batch_id>.part-x.crc``) so it still matches its data file."""
+    maintenance.compact), each named ``<batch_id>.<spark name>``; a
+    hidden checksum is ``.<batch_id>.<spark name>.crc``, so it still
+    matches its data file and stays hidden."""
     for base, _, names in os.walk(staged):
         dest = os.path.join(root, os.path.relpath(base, staged))
         for n in names:
             if n.lstrip(".").startswith("_"):
                 continue  # the write's _SUCCESS marker and its checksum
-            name = f"{'.' * n.startswith('.')}{batch_id}.{n.lstrip('.')}" if batch_id else n
+            name = f"{'.' * n.startswith('.')}{batch_id}.{n.lstrip('.')}"
             os.makedirs(dest, exist_ok=True)
             os.replace(os.path.join(base, n), os.path.join(dest, name))
 
 
-def _unpublish(root: str, batch_id: str) -> None:
-    """Remove what an earlier commit of ``batch_id`` published under
+def _published(root: str, batch_id: str) -> list[str]:
+    """The files an earlier commit of ``batch_id`` published under
     ``root``, in any source. A batch id holds no dot, so the prefix
-    names no other batch's files (replay's keep Spark's names)."""
-    for pattern in (f"{batch_id}.*", f".{batch_id}.*"):
-        for f in glob.glob(os.path.join(glob.escape(root), "source=*", pattern)):
-            os.remove(f)
+    names no other batch's files."""
+    return [
+        f
+        for pattern in (f"{batch_id}.*", f".{batch_id}.*")
+        for f in glob.glob(os.path.join(glob.escape(root), "source=*", pattern))
+    ]
+
+
+def _sources(root: str, batch_id: str) -> set[str]:
+    """The ``source=<s>`` directories holding ``batch_id``'s files."""
+    return {os.path.basename(os.path.dirname(f)) for f in _published(root, batch_id)}
 
 
 def build_catalog_entries(events: DataFrame, batch_id: str) -> DataFrame:
@@ -134,13 +140,13 @@ def with_source(events: DataFrame, source_col: str) -> DataFrame:
     source. Spark writes both as the Hive default partition and reads
     them back as NULL, so such rows would reach no subscriber and their
     catalog file_key (a concat with the source) would be NULL, out of
-    reach of every replay. A row of a staging read that Spark flagged
-    as malformed (a non-null ``lake.CORRUPT_RECORD``) is quarantined
-    too, and the flag column dropped: a line that breaks after its
-    event_type keeps that value, but is not an event of that source."""
+    reach of every replay. ``events`` is a staging read
+    (``lake.STAGING_JSON_SCHEMA``): a row Spark flagged as malformed (a
+    non-null ``lake.CORRUPT_RECORD``) is quarantined too, and the flag
+    column dropped, since a line that breaks after its event_type keeps
+    that value but is not an event of that source."""
     name = F.nullif(F.col(source_col).cast("string"), F.lit(""))
-    if lake.CORRUPT_RECORD in events.columns:
-        name = F.when(F.col(lake.CORRUPT_RECORD).isNull(), name)
+    name = F.when(F.col(lake.CORRUPT_RECORD).isNull(), name)
     source = F.coalesce(name, F.lit(QUARANTINE_SOURCE))
     return events.withColumn("source", source).drop(lake.CORRUPT_RECORD)
 
@@ -203,7 +209,8 @@ def commit_batch(
     rows equal the catalog's Σ n_records (ValueError naming both
     otherwise). Returns counts, ``n_quarantined`` being the records
     routed to the quarantine source. Raises ValueError, before any job
-    or write, if ``batch_id`` does not match ``BATCH_ID``.
+    or write, if ``batch_id`` does not match ``BATCH_ID``, or if
+    compaction merged its earlier lake files with other batches'.
 
     A re-run of a ``batch_id`` (a retried micro-batch) replaces its
     whole contribution, sources it no longer has included: once its
@@ -211,8 +218,8 @@ def commit_batch(
     (catalog, delivery, then lake) before the new ones are published.
     It is briefly absent, never doubled or half-stale. Caveat: the
     re-run stamps a later catalog ingest_ts, so an ingest-time as-of
-    read with a cutoff between the two runs shifts; version-exact
-    time travel is the txlog sink's job."""
+    read with a cutoff between the two runs shifts; version-exact time
+    travel is the txlog sink's job."""
     if not BATCH_ID.fullmatch(batch_id):
         raise ValueError(f"batch_id {batch_id!r} does not match {BATCH_ID.pattern}")
     events = events.withColumn("batch_id", F.lit(batch_id))
@@ -223,6 +230,17 @@ def commit_batch(
     if delivery_root:
         staged[delivery_root] = _staged(delivery_root, batch_id)
     staged[catalog_path] = _staged(catalog_path, batch_id)
+    # sources where maintenance.compact_partition merged the batch's
+    # earlier lake files with other batches', so a re-run cannot find them
+    merged = _sources(catalog_path, batch_id) - _sources(lake_path, batch_id)
+    if merged:
+        raise ValueError(
+            f"batch {batch_id!r} was compacted in {sorted(merged)}; nothing was published"
+        )
+    # a run killed mid-commit leaves its staged files behind, and its
+    # retry, under the same id, must not publish them again
+    for path in staged.values():
+        shutil.rmtree(path, ignore_errors=True)
     try:
         # the counts come from the writes themselves: the rows the lake
         # write landed, and the catalog rows (one per source, n_records
@@ -257,7 +275,8 @@ def commit_batch(
         if delivery_root:
             shutil.copytree(staged[lake_path], staged[delivery_root])
         for root in reversed(staged):
-            _unpublish(root, batch_id)
+            for f in _published(root, batch_id):
+                os.remove(f)
         for root, path in staged.items():
             _publish(path, root, batch_id)
     finally:

@@ -137,15 +137,11 @@ def parse_concatenated_json(spark: SparkSession, path: str, schema: str = EVENTS
     *concatenated* JSON objects (no delimiter — Firehose behavior,
     SURVEY.md §1.3). Object boundaries are found by an actual JSON
     scan (json.JSONDecoder.raw_decode in an Arrow-batched pandas UDF,
-    one linear pass per blob), never a regex on '}{': the previous
-    regex split fragmented any record whose STRING VALUE contained
-    '}{' (e.g. serialized-JSON props) and the null filter then
-    silently DROPPED both fragments — the reference's replace()
-    corruption traded for silent data loss. Now such records parse
-    intact. A malformed region RESYNCS: on a decode error the scan
+    one linear pass per blob), never a regex on '}{', which fragments
+    any record whose STRING VALUE contains '}{' (e.g. serialized-JSON
+    props). A malformed region RESYNCS: on a decode error the scan
     skips to the next '{' and retries, so valid objects AFTER a
-    corruption point are still recovered (the previous behavior lumped
-    the whole remaining line into one dropped fragment). Only the
+    corruption point are still recovered. Only the
     genuinely undecodable bytes between the error and the next
     successful decode surface as fragments that from_json nulls out
     and the guard filter drops.
@@ -191,11 +187,9 @@ def parse_concatenated_json(spark: SparkSession, path: str, schema: str = EVENTS
     objs = raw.select(F.explode(_split_objs(F.col("value"))).alias("obj"))
     parsed = objs.select(F.from_json("obj", schema).alias("r")).select("r.*")
     # guard filter: drop only fragments from_json could parse NOTHING
-    # from (every schema field null — the corrupt-span shape). The
-    # previous event_id.isNotNull() guard also silently discarded
-    # structurally VALID objects that merely lack event_id (round-7
-    # review finding) — those now survive with event_id null, the
-    # same contract the JSON-lines reader gives them.
+    # from (every schema field null — the corrupt-span shape); a valid
+    # object that lacks event_id survives with event_id null, the same
+    # contract the JSON-lines reader gives them.
     import functools
     import operator
 

@@ -4,11 +4,9 @@ Streaming ingest writes one file set per micro-batch per partition;
 after a day a hot source partition holds thousands of small files and
 every scan pays per-file open/footer costs (the #1 operational killer
 of file-based lakes at scale). Compaction rewrites one partition's
-CAPTURED files into ~target-sized files (append, then manifest-backed
-delete of exactly the inputs — concurrent appends survive), preserving
-the time-sorted layout that makes range scans skip row groups. For
-atomic reader semantics use txlog_optimize; a bare parquet directory
-cannot provide them.
+CAPTURED files into ~target-sized files (a staged move, then delete
+of exactly the inputs — concurrent appends survive), preserving the
+time-sorted layout that makes range scans skip row groups.
 """
 
 from __future__ import annotations
@@ -28,14 +26,7 @@ def partition_file_stats(lake_path: str, source: str) -> tuple[int, int]:
     """(n_files, total_bytes) of one source partition on local disk,
     counting nested sub-partitions too (a lake written with a finer
     partition chain than source=, e.g. source=/batch_id=)."""
-    files = [
-        f
-        for f in glob.glob(
-            os.path.join(lake_path, f"source={source}", "**", "*.parquet"),
-            recursive=True,
-        )
-        if os.path.isfile(f)
-    ]
+    files = _partition_files(lake_path, source)
     return len(files), sum(os.path.getsize(f) for f in files)
 
 
@@ -43,8 +34,8 @@ def _sub_partition_keys(lake_path: str, source: str) -> list[str]:
     """Partition-column chain BELOW source= (empty for the flat layout
     the engine's own writers use; a lake written elsewhere may be
     nested), read off the directory names: source=clicks/batch_id=b0/... →
-    ['batch_id']. The rewrite must partition by the same chain or the
-    overwrite would mix two physical layouts in one table."""
+    ['batch_id']. The rewrite must partition by the same chain or it
+    would mix two physical layouts in one table."""
     keys: list[str] = []
     d = os.path.join(lake_path, f"source={source}")
     while True:
@@ -73,27 +64,47 @@ def _partition_files(lake_path: str, source: str) -> list[str]:
     )
 
 
+def _remove(f: str) -> None:
+    """Delete a data file and its hidden checksum, those still there."""
+    for p in (f, os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")):
+        if os.path.exists(p):
+            os.unlink(p)
+
+
+def _without_newest_batch(files: list[str]) -> list[str]:
+    """``files`` less those of the batch that published the newest of
+    them. A commit's re-run finds its batch's files by their
+    ``<batch_id>.part-`` name prefix (ingest.commit_batch), which a
+    compacted file, merging batches, no longer has; the newest batch
+    is the one a retried micro-batch can be."""
+    names = {f: os.path.basename(f).partition(".part-") for f in files}
+    batches = {f: bid for f, (bid, dot_part, _) in names.items() if dot_part}
+    if not batches:
+        return files
+    newest = batches[max(batches, key=os.path.getmtime)]
+    return [f for f in files if batches.get(f) != newest]
+
+
 def _replay_doomed_manifests(lake_path: str, source: str) -> None:
     """Finish any compaction that crashed between its append and its
     deletes: each manifest lists input files whose compacted copy is
     already fully committed, so deleting the survivors loses nothing.
-    (Legacy marker of the pre-round-8 append-then-manifest protocol —
-    kept so an upgraded compactor still heals an old crash.)"""
+    (The marker of an older append-then-manifest protocol, kept so a
+    crash it left is still healed.)"""
     pdir = os.path.join(lake_path, f"source={source}")
     for m in glob.glob(os.path.join(pdir, "_compact-*.doomed.json")):
         with open(m) as f:
             for doomed in json.load(f):
-                if os.path.exists(doomed):
-                    os.unlink(doomed)
+                _remove(doomed)
         os.unlink(m)
 
 
 def _replay_intent_markers(lake_path: str, source: str) -> None:
     """Heal a compaction that crashed mid-flight, in EITHER direction.
 
-    The round-8 protocol stages the compacted files and uses the
-    staging directory's removal as the commit point, so recovery is
-    decidable from on-disk state alone:
+    The compacted files are staged, and the staging directory's
+    removal is the commit point, so recovery is decidable from on-disk
+    state alone:
 
     * intent marker + staging dir present → crash BEFORE commit: roll
       BACK — delete any compacted copies already moved into place
@@ -103,12 +114,8 @@ def _replay_intent_markers(lake_path: str, source: str) -> None:
       roll FORWARD — every compacted copy is in place, so delete the
       captured originals and the marker.
 
-    The previous protocol (append, then manifest, then delete) had an
-    UNHEALABLE window: a crash between append and manifest left
-    originals plus compacted copies with no marker, and the next
-    compaction compacted both together — permanent silent duplication
-    (round-7 ADVICE finding). Assumes one compactor per partition at a
-    time, as the capture/delete sequence always has.
+    Assumes one compactor per partition at a time, as the
+    capture/delete sequence always has.
     """
     pdir = os.path.join(lake_path, f"source={source}")
     intents = glob.glob(os.path.join(pdir, "_compact-*.intent.json"))
@@ -125,8 +132,7 @@ def _replay_intent_markers(lake_path: str, source: str) -> None:
             shutil.rmtree(staging)
         else:
             for doomed in intent["doomed"]:
-                if os.path.exists(doomed):
-                    os.unlink(doomed)
+                _remove(doomed)
         os.unlink(m)
     # any staging dir left now has no marker (all markers were consumed
     # above) = crash between mkdir and the marker write; it holds
@@ -150,13 +156,13 @@ def compact_partition(
     Concurrent-writer safety: the input file set is CAPTURED up front,
     the compacted files land via a STAGED two-phase move, and then
     exactly the captured inputs are deleted — a micro-batch file
-    appended to the partition mid-compaction survives untouched. (The
-    pre-round-7 dynamic-partition OVERWRITE replaced the whole
-    partition with the captured snapshot, silently deleting any
-    concurrent append — on the streaming-sink workload this module
-    exists for, that is the common case, not a corner.)
+    appended to the partition mid-compaction survives untouched. The
+    newest batch's files are not captured: merged with other batches',
+    a batch can no longer be replaced by a re-run of its commit
+    (ingest.commit_batch), and the newest is the one a retried
+    micro-batch can be.
 
-    Crash safety (round-8 protocol): Spark writes the compacted output
+    Crash safety: Spark writes the compacted output
     into a hidden staging dir inside the partition, an intent marker
     (written AFTER the staging dir exists, BEFORE any visible change)
     records the captured inputs, staged files move into place under a
@@ -165,22 +171,19 @@ def compact_partition(
     instant leaves a state `_replay_intent_markers` can decide from
     disk alone: staging still present → roll back (delete the prefixed
     copies; originals were never touched), staging gone → roll forward
-    (delete the captured originals). The previous append-then-manifest
-    sequence had an unhealable window — a crash between the append and
-    the manifest left originals plus compacted copies with no marker,
-    and the NEXT compaction compacted both together, making the
-    doubled rows permanent and silent (round-7 ADVICE finding).
-    Readers see a transient duplicate window between the move and the
-    deletes; for atomic reader semantics use the transaction-log path
-    (txlog_optimize), which this non-transactional directory layout
-    cannot provide. Assumes one compactor per partition at a time.
+    (delete the captured originals). Readers see a transient duplicate
+    window between the move and the deletes; for atomic reader
+    semantics use the transaction-log path (txlog_optimize), which this
+    non-transactional directory layout cannot provide. Assumes one
+    compactor per partition at a time.
     """
     _replay_doomed_manifests(lake_path, source)
     _replay_intent_markers(lake_path, source)
-    doomed = _partition_files(lake_path, source)
+    files = _partition_files(lake_path, source)
+    doomed = _without_newest_batch(files)
     if not doomed:
-        return {"files_before": 0, "files_after": 0, "bytes": 0}
-    n_before = len(doomed)
+        return {"files_before": len(files), "files_after": len(files), "bytes": 0}
+    n_before = len(files)
     total_bytes = sum(os.path.getsize(f) for f in doomed)
     n_files = max(1, -(-total_bytes // max(target_file_bytes, 1)))
     sub_keys = _sub_partition_keys(lake_path, source)
@@ -229,8 +232,7 @@ def compact_partition(
         )
     shutil.rmtree(staging)  # COMMIT POINT
     for f in doomed:
-        if os.path.exists(f):
-            os.unlink(f)
+        _remove(f)
     os.unlink(marker)
     n_after, _ = partition_file_stats(lake_path, source)
     return {"files_before": n_before, "files_after": n_after, "bytes": total_bytes}

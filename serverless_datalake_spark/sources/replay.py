@@ -77,11 +77,8 @@ def read_lake_as_of(
 def _batch_id_keys(catalog_rows: DataFrame) -> DataFrame:
     """file_key ('{source}/{batch}.parquet') → distinct batch_id keys,
     derived engine-side so no key list ever lands on the driver."""
-    # the batch id is the LAST path segment: splitting on the FIRST
-    # '/' broke any source value containing '/' (file_key
-    # 'ads/click/b0.parquet' yielded 'click/b0' — matched nothing, so
-    # replay silently selected zero events and as-of reads dropped
-    # those batches)
+    # the batch id is the LAST path segment: a source may hold '/'
+    # (file_key 'ads/click/b0.parquet')
     return (
         catalog_rows.select(
             F.regexp_replace(
@@ -129,8 +126,10 @@ def replay(
     events = events.join(
         F.broadcast(_batch_id_keys(keys)), on="batch_id", how="left_semi"
     ).observe(delivered, F.count(F.lit(1)).alias("n_events"))
-    # replays have no batch id, so each stages under a name of its own
-    staged = _staged(delivery_root, f"replay-{uuid.uuid4().hex}")
+    # replays have no batch id, so each stages and names its files under
+    # an id of its own, which no commit's re-run removes
+    replay_id = f"replay-{uuid.uuid4().hex}"
+    staged = _staged(delivery_root, replay_id)
     try:
         catalogued, _ = concurrently(spark, totals.first, lambda: fan_out(events, staged))
         n_events = delivered.get["n_events"]
@@ -150,7 +149,7 @@ def replay(
                 )
                 + "; nothing was re-delivered"
             )
-        _publish(staged, delivery_root)
+        _publish(staged, delivery_root, replay_id)
     finally:
         shutil.rmtree(staged, ignore_errors=True)
     return {"n_batches": catalogued["n_batches"], "n_events": n_events}

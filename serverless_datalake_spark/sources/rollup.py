@@ -38,24 +38,22 @@ def append_rollup(events: DataFrame, rollup_path: str, batch_id: int | str) -> N
     DYNAMIC partition overwrite, so a foreachBatch retry (the normal
     streaming failure mode) REPLACES its own prior contribution
     instead of appending a duplicate — which a blind append would
-    silently double-count in every downstream re-aggregation (round-7
-    review finding; the module docstring promised this contract but
-    the writer didn't implement it). Other batches' partitions are
-    untouched.
+    silently double-count in every downstream re-aggregation. Other
+    batches' partitions are untouched.
 
     Partitioned by batch_id ONLY: an overwrite partitioned by
     (batch_id, source) replaces just the partitions PRESENT in the
     retry, so a replayed batch that yields fewer sources than the
     original attempt (source-level filter change, corrupt-span skip)
-    left the missing source's stale partials behind — double-counted
-    downstream forever (round-7 ADVICE finding). With batch_id as the
-    sole partition key a retry replaces the batch's entire
-    contribution; source stays a sorted data column, so per-source
-    reads still skip row groups on min/max stats. The overwrite mode
-    rides the WRITE (option), not the session conf — a set/restore of
-    the session key races with concurrent queries on the same session.
+    leaves the missing source's stale partials behind — double-counted
+    downstream forever. With batch_id as the sole partition key a
+    retry replaces the batch's entire contribution; source stays a
+    sorted data column, so per-source reads still skip row groups on
+    min/max stats. The overwrite mode rides the WRITE (option), not
+    the session conf — a set/restore of the session key races with
+    concurrent queries on the same session.
 
-    Two closures from the round-8 review of that fix:
+    Two more guards:
     * A table written under the OLD (batch_id, source) layout cannot
       silently mix with the new depth — Spark's partition discovery
       would fail on every read with "conflicting directory

@@ -189,11 +189,10 @@ def _replay_guard(
     single-writer form, where ANY marker with that batch id skips.
 
     Markers load from the log ONCE per query and are maintained in
-    the closure afterwards — the previous per-batch
-    committed_batch_ids() call re-read and re-parsed every log entry
-    every micro-batch, O(versions²) over a stream's lifetime. Safe
-    because txlog tables are single-writer per (table, txn_app): a
-    marker this query didn't write can only belong to another app."""
+    the closure afterwards (re-reading the log every micro-batch is
+    O(versions²) over a stream's lifetime). Safe because txlog tables
+    are single-writer per (table, txn_app): a marker this query didn't
+    write can only belong to another app."""
     from serverless_datalake_spark.sources import txlog
 
     seen: set | None = None
@@ -201,29 +200,21 @@ def _replay_guard(
     def already_committed(batch_id: int) -> bool:
         nonlocal seen
         if seen is None:
-            # validate BEFORE assigning `seen`: the ambiguity raise
-            # must re-fire on every call — if `seen` were set first, a
-            # caller that caught the first ValueError (a supervisory
-            # retry wrapper) would silently proceed with ignore-legacy
-            # semantics on the next call (round-9 review finding)
+            # validate BEFORE assigning `seen`, so the ambiguity raise
+            # re-fires on every call, also for a caller (a supervisory
+            # retry wrapper) that caught the first ValueError
             markers = txlog.committed_txn_markers(table_path)
             if (
                 txn_app is not None
                 and honor_legacy_markers is None
                 and any(m[0] is None for m in markers)
             ):
-                # Three-state contract (round-8 advisor finding: the
-                # previous warn-and-proceed default let an upgraded
-                # single-writer pipeline re-commit its pre-upgrade
-                # batches — duplicates — behind a warning nobody
-                # reads). Whether unscoped markers belong to THIS
-                # pipeline (honor them: single-writer upgrade) or to
-                # a DIFFERENT formerly-unscoped pipeline (ignore
+                # Three-state contract: whether unscoped markers belong
+                # to THIS pipeline (honor them: single-writer upgrade)
+                # or to a DIFFERENT formerly-unscoped pipeline (ignore
                 # them: honoring would silently DROP colliding batch
-                # ids) is not decidable from the log, so when the
-                # ambiguous state is actually present the operator
-                # must decide explicitly: True or False, not the
-                # None default.
+                # ids) is not decidable from the log, so the operator
+                # must decide: True or False, not the None default.
                 raise ValueError(
                     f"txlog table {table_path!r} carries legacy unscoped "
                     f"(txn_app=None) markers and guard {txn_app!r} was "
@@ -248,9 +239,9 @@ def _replay_guard(
         # THIS pipeline was the table's sole unscoped writer — if two
         # pipelines both ran unscoped before being given distinct
         # txn_apps, each would silently skip (drop) batches whose ids
-        # collide with the other's legacy markers (round-7 ADVICE
-        # finding) — so it must be asserted explicitly by the operator
-        # doing the upgrade, never applied by default.
+        # collide with the other's legacy markers — so it must be
+        # asserted explicitly by the operator doing the upgrade, never
+        # applied by default.
         return bool(honor_legacy_markers) and (None, batch_id) in seen
 
     def marker_extra(batch_id: int) -> dict:

@@ -8,6 +8,7 @@ import gzip
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from serverless_datalake_spark.sources import bucketed, ingest, maintenance
@@ -130,6 +131,40 @@ def test_compaction_reduces_files_preserves_data(spark, tmp_path):
         .toString()
     )
     assert "PartitionFilters: [isnotnull(source" in plan
+
+
+def test_compaction_keeps_batch_reruns_from_landing_twice(spark, tmp_path):
+    """A commit's re-run finds the batch it replaces by the files'
+    <batch_id>. prefix, which a compacted file, merging batches, lacks.
+    Compaction leaves the newest batch alone, so its re-run still
+    replaces it; a re-run of an older, merged batch raises and
+    publishes nothing. Either way the lake rows equal the catalog's Σ
+    n_records, and no checksum outlives its data file."""
+    lake_path, cat = str(tmp_path / "lake"), str(tmp_path / "cat")
+    blobs = []
+    for b in range(3):
+        blobs.append(str(tmp_path / f"b{b}.json.gz"))
+        with gzip.open(blobs[-1], "wt") as f:
+            for i in range(20):
+                event = {"event_id": b * 100 + i, "event_type": ("clicks", "tweets")[i % 2]}
+                f.write(json.dumps(event) + "\n")
+        ingest.ingest_batch(spark, blobs[-1], lake_path, cat, None, f"b{b}")
+
+    stats = maintenance.compact_partition(spark, lake_path, "clicks")
+    assert stats["files_after"] < stats["files_before"]
+    ingest.ingest_batch(spark, blobs[2], lake_path, cat, None, "b2")
+    with pytest.raises(ValueError, match=r"'b0' was compacted .*source=clicks"):
+        ingest.ingest_batch(spark, blobs[0], lake_path, cat, None, "b0")
+
+    def by_source(df, value):
+        return {r["source"]: r["n"] for r in df.groupBy("source").agg(value.alias("n")).collect()}
+
+    want = {"clicks": 30, "tweets": 30}
+    assert by_source(spark.read.parquet(lake_path), F.count("*")) == want
+    assert by_source(ingest.read_catalog(spark, cat), F.sum("n_records")) == want
+    pdir = os.path.join(lake_path, "source=clicks")
+    for crc in glob.glob(os.path.join(pdir, ".*.crc")):
+        assert os.path.exists(os.path.join(pdir, os.path.basename(crc)[1:-4])), crc
 
 
 def test_orc_round_trip_with_partitioning_and_pushdown(spark, sf_dir, tmp_path):

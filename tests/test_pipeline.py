@@ -448,8 +448,8 @@ def test_deliver_quarantines_unsafe_source_names_atomically(spark, tmp_path):
     the unsafe name kept as one escaped directory under the root, and
     every row delivered exactly once."""
     batch = spark.createDataFrame(
-        [(1, "clicks", 1.0), (2, "../../tmp/evil", 2.0), (3, None, 3.0)],
-        "event_id long, event_type string, value double",
+        [(1, "clicks", 1.0, None), (2, "../../tmp/evil", 2.0, None), (3, None, 3.0, None)],
+        f"event_id long, event_type string, value double, {lake.CORRUPT_RECORD} string",
     )
     root = tmp_path / "topics"
     ingest.fan_out(ingest.with_source(batch, "event_type"), str(root))
@@ -1024,3 +1024,23 @@ def test_streaming_count_mismatch_raises_and_publishes_nothing(spark, paths, mon
         )
     for root in ("lake", "catalog", "delivery"):
         assert _files_under(paths[root]) == [], root
+
+
+def test_streaming_retry_starts_from_empty_staging(spark, paths, tmp_path):
+    """A micro-batch killed mid-commit leaves its staged writes behind,
+    under the batch id its retry reuses. The retry publishes only its
+    own: lake rows = Σ catalog n_records = delivered rows = lines."""
+    _write_staging(paths["staging"], _mk_events(20))
+    batch = ingest.with_source(lake.read_json_events(spark, paths["staging"]), "event_type")
+    first = {root: str(tmp_path / f"first-{root}") for root in ("lake", "catalog", "delivery")}
+    streaming_pipeline.record_micro_batch(batch, 0, first["lake"], first["catalog"], first["delivery"])
+    for root in ("lake", "catalog", "delivery"):
+        shutil.copytree(first[root], os.path.join(paths[root], "_staged-b000000000000"))
+    streaming_pipeline.record_micro_batch(
+        batch, 0, paths["lake"], paths["catalog"], paths["delivery"]
+    )
+    want = {"clicks": 10, "tweets": 10}
+    assert _rows_by_source(lake.read_lake(spark, paths["lake"])) == want
+    assert _rows_by_source(ingest.read_catalog(spark, paths["catalog"]), F.sum("n_records")) == want
+    reg = distribution.TopicRegistry(paths["delivery"])
+    assert {s: distribution.subscribe(spark, reg, s).count() for s in want} == want
