@@ -270,68 +270,64 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
 #     re-confirmations. (More than 50 candidates now exist; round 4
 #     fronts the first 50 by this ledger order, round 5 the rest.)
 DRIVER_WINDOW: tuple[str, ...] = (
-    # ROUND 9 window: per WINDOWS.md (round-9 block — the MERGED
-    # rounds 9+10 backlog, collapsed per the round-8 verdict). Round-8
-    # window came back 50/50 green (CORRECTNESS_r08); the 26 names
-    # below are EXACTLY the registry queries with no driver row across
-    # rounds 1–8 (set-checked by
+    # ROUND 10 window: per WINDOWS.md (round-10 block). Round 9 closed
+    # the pre-round-9 registry; the 32 names below are EXACTLY the
+    # registry queries with no driver row across rounds 1–10
+    # (set-checked by
     # tests/test_window_audit.py::test_windows_plan_covers_backlog),
-    # so a green round 9 closes the registry at 416/416
-    # driver-verified. The remaining 24 slots re-confirm flagship /
-    # headline production paths (all already driver-green).
-    "events_pattern_match_regex",
-    "eval_chrf_pairs",
-    "window_global_rank_distributed",
-    "stats_cuped_adjusted",
-    "privacy_t_closeness",
-    "retrieval_query_likelihood_dirichlet",
-    "feature_woe_binned",
-    "model_ridge_gram",
-    "eval_ppi_mean_estimate",
-    "sql_select_star_except_replace",
-    "agg_sketch_set_algebra",
+    # so a green round 10 closes the registry at 448/448
+    # driver-verified.
+    "stats_kendall_tau",
+    "graph_clustering_coeff",
+    "feature_mutual_info",
+    "stats_jackknife_groups",
+    "eval_krippendorff_alpha",
+    "ts_ljung_box",
+    "agg_theil_inequality",
+    "model_isotonic_pava",
+    "eval_mrr_at_5",
+    "model_kmeans_lloyd",
+    "skyline_frontier_2d",
+    "eval_kendall_w",
+    "dedup_cdc_chunks",
+    "ts_granger_lag1",
+    "stats_wilcoxon_signed_rank",
+    "stats_binom_wilson_ci",
+    "text_readability_forcast",
+    "txlog_delete_vacuum",
+    "mm_av_sync_join",
+    "stats_cmh_pooled_odds",
+    "stats_hedges_g",
+    "eval_mbr_select",
+    "graph_adamic_adar",
+    "stats_friedman_test",
+    "ts_hampel_filter",
+    "stats_cochran_q",
+    "stats_page_trend",
+    "stats_bartlett",
+    "ts_seasonal_mann_kendall",
+    "stats_icc_oneway",
+    "ts_durbin_watson",
+    "join_asof_interpolate",
+    # --- re-check slots (already driver-green): the other four
+    # queries that run on the txlog engine, whose replay and commit
+    # steps were rewritten ---
+    "txlog_time_travel",
+    "matview_incremental_refresh",
+    "txlog_partition_prune",
     "txlog_zonemap_prune",
-    "stats_anova_oneway",
-    "ts_decompose_classical",
-    "fn_hof_exists_forall_indexed",
-    "graph_label_propagation",
-    "lake_dynamic_partition_overwrite",
-    "sim_topk_ivfpq_rerank_np8",
-    "sample_reservoir_hash",
-    "sim_topk_sq8_rerank",
-    "stats_spearman_rank",
-    "stats_kruskal_wallis",
-    "stats_levene_bf",
-    "stats_tukey_hsd",
-    "eval_fleiss_kappa",
-    "stats_dunn_posthoc",
-    # --- re-confirmation slots (already driver-green; fills the
-    # 50-entry window with the production paths we most want
-    # re-checked on current fixtures) ---
-    "replay_range",
-    "agg_pricing_summary",
-    "join_inner",
-    "join_broadcast_dims",
-    "join_asof",
-    "window_ranking",
-    "topk_per_group",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "sim_topk_lsh",
-    "sim_topk_ivfpq",
-    "text_quality",
-    "text_tfidf",
-    "sql_cte_multijoin",
-    "reshape_pivot",
-    "tpch_q9_product_profit",
-    "tpch_q18_large_volume",
-    "text_gopher_rules",
-    "split_contamination",
-    "pack_greedy_bins",
-    "pipeline_guarded_curation",
-    "pii_redact",
-    "dedup_url_canonical",
-    "udf_scalar_pandas",
+    # --- re-check slots: queries whose code changed in rounds 9-10
+    # after their last driver row ---
+    "dedup_ngram_spans",
+    "dedup_span_removal",
+    "dedup_semdedup",
+    "dedup_bloom_incremental",
+    "sample_dsir_importance",
+    "sample_poisson_bootstrap",
+    "stats_permutation_test",
+    "dedup_minhash_components",
+    "dedup_cluster_report",
+    "split_leakage_free",
 )
 
 

@@ -387,7 +387,7 @@ def txlog_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: every snapshot read lists files from the log (no
     directory scans), so time travel costs one metadata pass; the
     merge rewrite is the copy-on-write path whose file-pruned twin is
-    documented at txlog.py:185. Aggregates use integer cents (the
+    documented in txlog_upsert's docstring. Aggregates use integer cents (the
     agg_pricing_summary discipline); ×2 is exact in IEEE."""
     import uuid as _uuid
 
@@ -1103,7 +1103,7 @@ def txlog_delete_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     an erasure obligation.
 
     Scale shape: delete is one anti-join rewrite (file-pruned to
-    overlapping key ranges at scale — txlog.py:468's discipline);
+    overlapping key ranges at scale — txlog_upsert's discipline);
     vacuum and history read ONLY the log, never data files."""
     import uuid as _uuid
 

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from serverless_datalake_spark.sources.txlog import (
     _entries,
-    live_files,
+    _snapshot,
     txlog_commit_metadata,
     txlog_read,
     txlog_write,
@@ -55,28 +55,15 @@ def txlog_file_changes(
     opened, so planning a refresh is O(log), and an append-only
     history yields removed == [].
 
-    Raises when a requested version predates the log's earliest
-    replayable entry (a vacuum checkpoint): replaying to such a
-    version silently yields an EMPTY file set, which here would turn
-    into 'everything was added' and a consumer double-counting the
-    whole table (round-7 review finding). An unreplayable delta must
-    be an error, never a wrong answer."""
+    A version that a vacuum squashed away raises ValueError (in the
+    replay): its empty file set would read as 'everything was added'
+    and a consumer would double-count the whole table (round-7 review
+    finding) — rebuild the consumer (mv_build) instead.
+    `from_version=-1` means before the first commit (an empty set)."""
     entries = _entries(path)
-    floor = entries[0]["version"] if entries else 0
-    for v in (from_version, to_version):
-        if v is not None and 0 <= v < floor:
-            raise ValueError(
-                f"version {v} predates the earliest replayable entry "
-                f"{floor} of {path} (vacuumed); incremental delta "
-                f"unavailable — rebuild the consumer (mv_build)"
-            )
-    before = (
-        set(live_files(path, from_version, entries=entries))
-        if from_version >= 0
-        else set()
-    )
-    after = set(live_files(path, to_version, entries=entries))
-    return sorted(after - before), sorted(before - after)
+    before = _snapshot(path, from_version, entries)
+    after = _snapshot(path, to_version, entries)
+    return sorted(after.keys() - before.keys()), sorted(before.keys() - after.keys())
 
 
 def _aggregate(df: DataFrame, keys: list[str], unit: Column, weight: int) -> DataFrame:

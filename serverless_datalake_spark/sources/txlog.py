@@ -9,7 +9,33 @@ set of adds/removes. Readers never list the data directory — they
 replay the log to a version and read exactly that file set.
 
   <path>/_txlog/00000000.json   {"version":0,"adds":[...],"removes":[...]}
-  <path>/data/v0-<uuid>/part-*.parquet
+  <path>/data/v0-[<tag>-]<uuid>/part-*.parquet
+
+Entry fields (one JSON file per version, named by its 8-digit version):
+
+  version, adds, removes   the version and the data files it makes
+                           live / retires (removes apply first)
+  stats                    {file: {part_col: value}} — the single
+                           partition value of each added file
+                           (txlog_write_partitioned)
+  zonemaps                 {file: {col: [min, max]}} — each added
+                           file's footer min/max (txlog_write_zonemapped)
+  batch_id, txn_app        a streaming sink's replay marker; txn_app
+                           only for an app-scoped writer
+  checkpoint, batch_ids,   a vacuum checkpoint: the squashed history's
+  txn_markers              live set as adds, plus its unscoped and
+                           app-scoped markers
+  any other key            an application extra (e.g. matview's
+                           mv_source_version), carried through a
+                           vacuum at its latest value
+
+One replay: `_snapshot` walks the entries to a version and returns
+each live file with the stats and zone maps it was added with;
+live_files, both pruned listings, vacuum's checkpoint and matview's
+file-change feed all read it. A version that a vacuum squashed away
+raises ValueError rather than replaying to an empty set. One commit
+step: every writer publishes through `_commit_next` (head read,
+expected_head check, the data directory, its file listing, _commit).
 
 Commit protocol: write data files → write log entry to a temp name →
 atomic rename to the next version number. Rename-if-absent is atomic
@@ -288,30 +314,92 @@ def _commit(
         os.unlink(tmp)
 
 
+def _snapshot(
+    path: str, version: int | None = None, entries: list[dict] | None = None
+) -> dict[str, dict]:
+    """THE replay: walk the log to `version` (default: head) and return
+    {live file: {"stats": …, "zonemaps": …}} — each file with the
+    partition stats and zone map (None when absent) it was added with,
+    so a remove drops both. Pass `entries` to replay an already-loaded
+    log instead of re-reading every entry file.
+
+    A version in [0, first entry) was squashed by a vacuum: raise
+    rather than replay to an empty set, which a reader would take for
+    an empty table (and a change feed for "everything was added").
+    Negative versions mean "before the first commit" (empty)."""
+    if entries is None:
+        entries = _entries(path)
+    if version is not None and entries and 0 <= version < entries[0]["version"]:
+        raise ValueError(
+            f"version {version} of {path} predates its earliest replayable "
+            f"version {entries[0]['version']}: the history before it was "
+            "vacuumed"
+        )
+    files: dict[str, dict] = {}
+    for e in entries:
+        if version is not None and e["version"] > version:
+            break
+        for r in e["removes"]:
+            files.pop(r, None)
+        stats, zonemaps = e.get("stats") or {}, e.get("zonemaps") or {}
+        for a in e["adds"]:
+            files[a] = {"stats": stats.get(a), "zonemaps": zonemaps.get(a)}
+    return files
+
+
 def live_files(
     path: str, version: int | None = None, entries: list[dict] | None = None
 ) -> list[str]:
-    """Replay the log to `version` (default: head) → current file set.
-    Pass `entries` to replay an already-loaded log instead of
-    re-reading and re-parsing every entry file (the commit path calls
-    _entries for the version anyway)."""
-    files: set[str] = set()
-    for e in _entries(path) if entries is None else entries:
-        if version is not None and e["version"] > version:
-            break
-        files.difference_update(e["removes"])
-        files.update(e["adds"])
-    return sorted(files)
+    """The file set of `version` (default: head), sorted; see _snapshot."""
+    return sorted(_snapshot(path, version, entries))
 
 
 def _list_parquet(batch_dir: str) -> list[str]:
-    """The adds of one written batch: the dir's *.parquet files (one
-    contract, shared by every write path)."""
+    """The adds of one written batch: every *.parquet file under the
+    dir (one contract, shared by every write path)."""
     return sorted(
-        os.path.join(batch_dir, n)
-        for n in os.listdir(batch_dir)
+        os.path.join(d, n)
+        for d, _dirs, names in os.walk(batch_dir)
+        for n in names
         if n.endswith(".parquet")
     )
+
+
+def _commit_next(
+    path: str,
+    write=None,
+    mode: str = "append",
+    extra: dict | None = None,
+    expected_head: int | None = None,
+    tag: str = "",
+) -> int:
+    """The one next-version step of every commit path; returns the new
+    version. Reads the head, checks `expected_head`, lets
+    `write(batch_dir, live)` put the batch's data files under
+    data/v{version}-[tag-]<uuid> (`live`: the head's sorted file set;
+    a dict it returns joins the entry, e.g. per-file stats), and
+    publishes one entry adding every parquet file written there.
+    `overwrite` also removes every file live at the head. `write=None`
+    is a metadata-only commit."""
+    if mode not in ("append", "overwrite"):
+        raise ValueError(f"mode {mode!r}")
+    prior = _entries(path)
+    head = prior[-1]["version"] if prior else -1
+    if expected_head is not None and head != expected_head:
+        raise RuntimeError(
+            f"concurrent commit: expected head {expected_head}, found {head}; retry"
+        )
+    version = head + 1
+    live = live_files(path, entries=prior)
+    entry_extra = dict(extra or {})
+    adds: list[str] = []
+    if write is not None:
+        name = f"v{version}-{tag + '-' if tag else ''}{uuid.uuid4().hex[:8]}"
+        batch_dir = os.path.join(path, "data", name)
+        entry_extra.update(write(batch_dir, live) or {})
+        adds = _list_parquet(batch_dir)
+    _commit(path, version, adds, live if mode == "overwrite" else [], entry_extra)
+    return version
 
 
 def txlog_write(
@@ -336,21 +424,13 @@ def txlog_write(
     of silently absorbing (and overwrite-removing) the interloper's
     rows — the lost-update hole the round-6 review found in upsert/
     delete. Blind appends/overwrites keep expected_head=None."""
-    if mode not in ("append", "overwrite"):
-        raise ValueError(f"mode {mode!r}")
-    prior = _entries(path)
-    head = prior[-1]["version"] if prior else -1
-    if expected_head is not None and head != expected_head:
-        raise RuntimeError(
-            f"concurrent commit: expected head {expected_head}, found {head}; retry"
-        )
-    version = head + 1
-    batch_dir = os.path.join(path, "data", f"v{version}-{uuid.uuid4().hex[:8]}")
-    df.write.mode("error").parquet(batch_dir)
-    adds = _list_parquet(batch_dir)
-    removes = live_files(path, entries=prior) if mode == "overwrite" else []
-    _commit(path, version, adds, removes, extra=extra)
-    return version
+    return _commit_next(
+        path,
+        lambda batch_dir, _live: df.write.mode("error").parquet(batch_dir),
+        mode,
+        extra,
+        expected_head,
+    )
 
 
 def txlog_commit_metadata(
@@ -361,33 +441,32 @@ def txlog_commit_metadata(
     its source-version stamp). O(1) — no data is read or written;
     readers replaying the log see an unchanged file set. Conditioned
     on `expected_head` like txlog_write."""
-    prior = _entries(path)
-    head = prior[-1]["version"] if prior else -1
-    if expected_head is not None and head != expected_head:
-        raise RuntimeError(
-            f"concurrent commit: expected head {expected_head}, found {head}; retry"
-        )
-    version = head + 1
-    _commit(path, version, [], [], extra=extra)
-    return version
+    return _commit_next(path, extra=extra, expected_head=expected_head)
+
+
+def _markers(entries: list[dict]) -> set:
+    """THE marker read: (txn_app, batch_id) for every committed marker —
+    an entry's own batch_id (app None when it has no txn_app) plus a
+    vacuum checkpoint's carried `batch_ids` (app None) and
+    `txn_markers`."""
+    out: set = set()
+    for e in entries:
+        if "batch_id" in e:
+            out.add((e.get("txn_app"), e["batch_id"]))
+        out.update((None, b) for b in e.get("batch_ids", []))
+        out.update((app, b) for app, b in e.get("txn_markers", []))
+    return out
 
 
 def committed_batch_ids(path: str) -> set:
     """EVERY streaming batch id with a committed marker, regardless of
-    app scoping: per-entry ``batch_id`` fields plus the ``batch_ids``
-    AND ``txn_markers`` lists carried forward by vacuum checkpoints.
-    App-scoped markers are folded in because a vacuum moves them from
-    live entries into ``txn_markers`` only — a caller of this legacy
+    app scoping — the batch-id projection of committed_txn_markers.
+    App-scoped markers count because a vacuum moves them from live
+    entries into ``txn_markers`` only — a caller of this legacy
     unscoped guard would otherwise see those batches flip to
     "uncommitted" after a vacuum and re-commit them. Prefer
     committed_txn_markers for anything multi-writer."""
-    ids: set = set()
-    for e in _entries(path):
-        if "batch_id" in e:
-            ids.add(e["batch_id"])
-        ids.update(e.get("batch_ids", []))
-        ids.update(m[1] for m in e.get("txn_markers", []))
-    return ids
+    return {b for _app, b in committed_txn_markers(path)}
 
 
 def committed_txn_markers(path: str) -> set:
@@ -399,15 +478,26 @@ def committed_txn_markers(path: str) -> set:
     disambiguates. Entries without a txn_app read back as app None
     (the single-writer legacy form); vacuum checkpoints carry both
     forms forward (`batch_ids` / `txn_markers`)."""
-    out: set = set()
-    for e in _entries(path):
-        if "batch_id" in e:
-            out.add((e.get("txn_app"), e["batch_id"]))
-        for b in e.get("batch_ids", []):
-            out.add((None, b))
-        for app, b in e.get("txn_markers", []):
-            out.add((app, b))
-    return out
+    return _markers(_entries(path))
+
+
+def _read_files(
+    spark: SparkSession,
+    path: str,
+    files: list[str],
+    version: int | None,
+    merge_schema: bool = False,
+) -> DataFrame:
+    """Read a replayed (possibly pruned) file set. An empty set raises
+    rather than returning an empty DataFrame — with zero files there is
+    no schema source to build one from; callers distinguishing
+    empty-table from missing-table should check live_files() directly."""
+    if not files:
+        raise FileNotFoundError(f"no committed files in {path} at version {version}")
+    reader = spark.read
+    if merge_schema:
+        reader = reader.option("mergeSchema", "true")
+    return reader.parquet(*files)
 
 
 def txlog_read(
@@ -424,37 +514,31 @@ def txlog_read(
     in earlier files — Delta/Iceberg ADD COLUMN semantics). Off by
     default because the footer-union pass costs one extra metadata
     read per file set."""
-    files = live_files(path, version)
-    # NOTE: an empty snapshot raises (below) rather than returning an
-    # empty DataFrame — with zero live files there is no schema source
-    # to build one from; callers distinguishing empty-table from
-    # missing-table should check live_files()/_entries() directly.
-    if not files:
-        raise FileNotFoundError(f"no committed files in {path} at version {version}")
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(*files)
+    return _read_files(spark, path, live_files(path, version), version, merge_schema)
+
+
+def _rewrite(spark: SparkSession, path: str, tag: str, layout) -> int:
+    """Rewrite the head snapshot as `layout(snapshot_df)` and swap it in
+    with one entry (adds=new, removes=old) — the shared body of
+    compaction and OPTIMIZE. A reader at the prior version still
+    resolves the old files; they are only logically removed (physical
+    GC is txlog_vacuum)."""
+
+    def write(batch_dir: str, live: list[str]) -> None:
+        if not live:
+            # empty log / delete-all snapshot: the error txlog_read
+            # uses, not an IndexError or a pathless AnalysisException
+            raise FileNotFoundError(f"no committed files in {path}")
+        layout(spark.read.parquet(*live)).write.mode("error").parquet(batch_dir)
+
+    return _commit_next(path, write, mode="overwrite", tag=tag)
 
 
 def txlog_compact(spark: SparkSession, path: str, target_files: int = 1) -> int:
     """Rewrite the current snapshot into `target_files` files and swap
-    them in with one log entry (adds=new, removes=old). A reader at
-    the prior version still resolves the old files — compaction never
-    disturbs in-flight reads; old files are only logically removed
-    (physical GC = delete files no live version references)."""
-    entries = _entries(path)
-    old = live_files(path, entries=entries)
-    if not entries or not old:
-        # empty log / delete-all snapshot: same error txlog_read uses,
-        # not an IndexError or a pathless AnalysisException
-        raise FileNotFoundError(f"no committed files in {path}")
-    snap = spark.read.parquet(*old).coalesce(target_files)
-    version = entries[-1]["version"] + 1
-    batch_dir = os.path.join(path, "data", f"v{version}-compact-{uuid.uuid4().hex[:8]}")
-    snap.write.mode("error").parquet(batch_dir)
-    _commit(path, version, _list_parquet(batch_dir), removes=old)
-    return version
+    them in with one log entry (see _rewrite) — compaction never
+    disturbs in-flight reads."""
+    return _rewrite(spark, path, "compact", lambda snap: snap.coalesce(target_files))
 
 
 def txlog_upsert(
@@ -534,65 +618,36 @@ def txlog_vacuum(path: str, keep_versions: int = 1) -> list[str]:
         return []
     head_version = entries[-1]["version"]
     horizon = head_version - keep_versions + 1
-    retained: set[str] = set()
-    for v in range(horizon, head_version + 1):
-        # entries= reuses the already-parsed log: without it each
-        # iteration re-read and re-parsed EVERY entry file (O(V*K)
-        # file reads for K kept versions)
-        retained.update(live_files(path, v, entries=entries))
-    all_files: set[str] = set()
-    for e in entries:
-        all_files.update(e["adds"])
-    doomed = sorted(all_files - retained)
+    base = _snapshot(path, horizon, entries)
+    retained = set(base)
+    for v in range(horizon + 1, head_version + 1):
+        retained.update(_snapshot(path, v, entries))
     # Squash pre-horizon history into one checkpoint entry FIRST, then
     # delete what it supersedes — a reader replaying mid-vacuum sees
     # either the old entries or an equivalent checkpoint, never a log
     # whose horizon entry lacks the base adds. The checkpoint is
     # replay-equivalent even while older entries still exist: it
-    # removes every pre-horizon add that is not in the base set.
-    base = live_files(path, horizon, entries=entries)
+    # removes every pre-horizon add that is not in the base set, and
+    # re-adds the base files with the stats and zone maps the replay
+    # kept for them (dropping those disabled skipping for every
+    # surviving file, round-6 review finding).
     squashed = [e for e in entries if e["version"] <= horizon]
-    pre_adds: set[str] = set()
-    for e in squashed:
-        pre_adds.update(e["adds"])
+    pre_adds = {a for e in squashed for a in e["adds"]}
+    # every later add is live at its own version, so only pre-horizon
+    # adds can be unreferenced by the retained versions
+    doomed = sorted(pre_adds - retained)
     # streaming replay-dedup markers must survive the squash (a dropped
-    # batch_id would let a restarted query re-commit that batch)
-    batch_ids = sorted(
-        {e["batch_id"] for e in squashed if "batch_id" in e and "txn_app" not in e}
-        | {b for e in squashed for b in e.get("batch_ids", [])},
-        key=str,
-    )
-    # app-scoped markers survive separately (committed_txn_markers)
-    txn_markers = sorted(
-        {
-            (e["txn_app"], e["batch_id"])
-            for e in squashed
-            if "batch_id" in e and "txn_app" in e
-        }
-        | {tuple(m) for e in squashed for m in e.get("txn_markers", [])},
-        key=str,
-    )
-    # per-file pruning metadata must survive the squash too: replay
-    # the squashed entries' stats/zonemaps and carry forward those of
-    # files the checkpoint keeps alive — dropping them silently
-    # disabled membership/zone-map skipping for every surviving file
-    # forever after (round-6 review finding)
-    stats_acc: dict[str, dict] = {}
-    zm_acc: dict[str, dict] = {}
-    for e in squashed:
-        for r in e["removes"]:
-            stats_acc.pop(r, None)
-            zm_acc.pop(r, None)
-        stats_acc.update(e.get("stats") or {})
-        zm_acc.update(e.get("zonemaps") or {})
-    base_set = set(base)
+    # marker would let a restarted query re-commit that batch);
+    # app-scoped ones ride separately (committed_txn_markers)
+    markers = _markers(squashed)
     ck = {
         "version": horizon,
-        "adds": base,
-        "removes": sorted(pre_adds - base_set),
+        "adds": sorted(base),
+        "removes": sorted(pre_adds - base.keys()),
         "checkpoint": True,
-        "batch_ids": batch_ids,
+        "batch_ids": sorted((b for app, b in markers if app is None), key=str),
     }
+    txn_markers = sorted((m for m in markers if m[0] is not None), key=str)
     if txn_markers:
         ck["txn_markers"] = [list(m) for m in txn_markers]
     # application extras (e.g. matview's mv_source_version stamp) must
@@ -609,12 +664,10 @@ def txlog_vacuum(path: str, keep_versions: int = 1) -> list[str]:
         for k, v in e.items():
             if k not in _structural:
                 ck[k] = v
-    kept_stats = {f: s for f, s in stats_acc.items() if f in base_set}
-    kept_zm = {f: s for f, s in zm_acc.items() if f in base_set}
-    if kept_stats:
-        ck["stats"] = kept_stats
-    if kept_zm:
-        ck["zonemaps"] = kept_zm
+    for field in ("stats", "zonemaps"):
+        kept = {f: m[field] for f, m in sorted(base.items()) if m[field] is not None}
+        if kept:
+            ck[field] = kept
     p0 = os.path.join(_log_path(path), f"{horizon:08d}.json")
     tmp = os.path.join(_log_path(path), f".tmp-ck-{uuid.uuid4().hex}.json")
     with open(tmp, "w") as f:
@@ -638,28 +691,21 @@ def txlog_optimize(
 ) -> int:
     """OPTIMIZE … ZORDER BY: rewrite the current snapshot clustered
     along the Morton curve of (col_a, col_b) and swap it in with one
-    atomic commit. Combines sources/zorder.py (2-D min/max skipping)
-    with the log's reader-invisible compaction: queries running
-    against the pre-optimize version keep their file set; new queries
-    get the clustered layout."""
+    atomic commit (see _rewrite). Combines sources/zorder.py (2-D
+    min/max skipping) with the log's reader-invisible compaction:
+    queries running against the pre-optimize version keep their file
+    set; new queries get the clustered layout."""
     from serverless_datalake_spark.sources.zorder import zorder_key_approx
 
-    entries = _entries(path)
-    old = live_files(path, entries=entries)
-    if not entries or not old:
-        raise FileNotFoundError(f"no committed files in {path}")
-    snap = spark.read.parquet(*old)
-    clustered = (
-        zorder_key_approx(snap, col_a, col_b)
+    return _rewrite(
+        spark,
+        path,
+        "optimize",
+        lambda snap: zorder_key_approx(snap, col_a, col_b)
         .repartitionByRange(files, "__zkey")
         .sortWithinPartitions("__zkey")
-        .drop("__zkey")
+        .drop("__zkey"),
     )
-    version = entries[-1]["version"] + 1
-    batch_dir = os.path.join(path, "data", f"v{version}-optimize-{uuid.uuid4().hex[:8]}")
-    clustered.write.mode("error").parquet(batch_dir)
-    _commit(path, version, _list_parquet(batch_dir), removes=old)
-    return version
 
 
 def txlog_history(spark: SparkSession, path: str) -> DataFrame:
@@ -700,68 +746,50 @@ def txlog_write_partitioned(
     the per-value loop writes sequentially (fine for low-cardinality
     partition columns, which is the only kind you should partition
     by — see audit_partition_skew)."""
-    if mode not in ("append", "overwrite"):
-        raise ValueError(f"mode {mode!r}")
-    prior = _entries(path)
-    version = prior[-1]["version"] + 1 if prior else 0
-    # PIN the batch across the distinct-collect and the per-value
-    # writes: an unpersisted df is recomputed per pass, so a
-    # non-deterministic or moving source (a staging dir receiving
-    # files mid-commit) could surface values the distinct pass never
-    # saw — rows silently absent from every slice and therefore from
-    # the committed entry (ingest_batch persists for the same reason)
-    df = df.persist()
-    try:
-        values = [r[0] for r in df.select(part_col).distinct().collect()]
-        # (adds listed per value-dir below — the _list_parquet contract,
-        # inlined because stats are attached file-by-file)
-        adds: list[str] = []
-        stats: dict[str, dict] = {}
-        batch_dir = os.path.join(path, "data", f"v{version}-{uuid.uuid4().hex[:8]}")
-        for v in sorted(values, key=str):
-            vdir = os.path.join(batch_dir, f"pv-{uuid.uuid4().hex[:8]}")
-            # eqNullSafe so a NULL partition value becomes its own file
-            # with an explicit null stat (Delta/Iceberg route NULLs to a
-            # default partition; dropping them would be silent data loss).
-            df.where(df[part_col].eqNullSafe(F.lit(v))).write.mode("error").parquet(vdir)
-            for n in os.listdir(vdir):
-                if n.endswith(".parquet"):
-                    fp = os.path.join(vdir, n)
-                    adds.append(fp)
+
+    def write(batch_dir: str, _live: list[str]) -> dict:
+        # PIN the batch across the distinct-collect and the per-value
+        # writes: an unpersisted df is recomputed per pass, so a
+        # non-deterministic or moving source (a staging dir receiving
+        # files mid-commit) could surface values the distinct pass never
+        # saw — rows silently absent from every slice and therefore from
+        # the committed entry (ingest_batch persists for the same reason)
+        pinned = df.persist()
+        try:
+            values = [r[0] for r in pinned.select(part_col).distinct().collect()]
+            stats: dict[str, dict] = {}
+            for v in sorted(values, key=str):
+                vdir = os.path.join(batch_dir, f"pv-{uuid.uuid4().hex[:8]}")
+                # eqNullSafe so a NULL partition value becomes its own
+                # file with an explicit null stat (Delta/Iceberg route
+                # NULLs to a default partition; dropping them would be
+                # silent data loss).
+                part = pinned.where(pinned[part_col].eqNullSafe(F.lit(v)))
+                part.write.mode("error").parquet(vdir)
+                for fp in _list_parquet(vdir):
                     stats[fp] = {part_col: _stat_repr(v)}
-    finally:
-        df.unpersist()
-    removes = live_files(path, entries=prior) if mode == "overwrite" else []
-    _commit(path, version, sorted(adds), removes, extra={"stats": stats})
-    return version
+        finally:
+            pinned.unpersist()
+        return {"stats": stats}
+
+    return _commit_next(path, write, mode)
 
 
 def live_files_pruned(
     path: str, part_col: str, values: list, version: int | None = None
 ) -> tuple[list[str], int]:
-    """Replay the log keeping per-file stats; return (files whose
-    recorded `part_col` is in `values` PLUS every file with no stat
-    for that column, total_live_count). Unstatted files must be read
-    — pruning is an optimization, never a correctness filter."""
-    stats: dict[str, dict] = {}
-    files: set[str] = set()
-    for e in _entries(path):
-        if version is not None and e["version"] > version:
-            break
-        for r in e["removes"]:
-            files.discard(r)
-            stats.pop(r, None)
-        for a in e["adds"]:
-            files.add(a)
-        for fp, st in (e.get("stats") or {}).items():
-            stats[fp] = st
+    """(files of the replayed snapshot whose recorded `part_col` is in
+    `values` PLUS every file with no stat for that column,
+    total_live_count). Unstatted files must be read — pruning is an
+    optimization, never a correctness filter."""
+    snap = _snapshot(path, version)
     keep = [
         f
-        for f in sorted(files)
-        if part_col not in stats.get(f, {})
-        or any(_stat_matches(stats[f][part_col], v) for v in values)
+        for f, meta in sorted(snap.items())
+        if part_col not in (meta["stats"] or {})
+        or any(_stat_matches(meta["stats"][part_col], v) for v in values)
     ]
-    return keep, len(files)
+    return keep, len(snap)
 
 
 def txlog_read_pruned(
@@ -773,10 +801,9 @@ def txlog_read_pruned(
     legacy files). Callers still apply the residual predicate — the
     prune is a superset guarantee, identical to how partition pruning
     composes with filters in any lakehouse reader."""
-    files, _total = live_files_pruned(path, part_col, values, version)
-    if not files:
-        raise FileNotFoundError(f"no matching committed files in {path}")
-    return spark.read.parquet(*files)
+    return _read_files(
+        spark, path, live_files_pruned(path, part_col, values, version)[0], version
+    )
 
 
 def txlog_write_zonemapped(
@@ -822,78 +849,59 @@ def txlog_write_zonemapped(
             return dec(st.min_raw), dec(st.max_raw)
         return None, None
 
-    if mode not in ("append", "overwrite"):
-        raise ValueError(f"mode {mode!r}")
-    prior = _entries(path)
-    version = prior[-1]["version"] + 1 if prior else 0
-    batch_dir = os.path.join(path, "data", f"v{version}-{uuid.uuid4().hex[:8]}")
-    df.write.mode("error").parquet(batch_dir)
-    adds: list[str] = []
-    stats: dict[str, dict] = {}
-    for n in sorted(os.listdir(batch_dir)):
-        if not n.endswith(".parquet"):
-            continue
-        fp = os.path.join(batch_dir, n)
-        adds.append(fp)
-        md = pq.read_metadata(fp)
-        # index by parquet LEAF path, not Arrow top-level field index:
-        # a struct/array column preceding the stat column makes the two
-        # numbering schemes diverge, and row_group().column(ci) indexes
-        # leaves — the wrong column's min/max would be logged and later
-        # prune files that DO contain matching rows (round-6 review).
-        # Top-level scalar columns have path_in_schema == their name;
-        # nested stat columns simply find no leaf and stay unstatted.
-        leaf_index = {
-            md.schema.column(i).path: i for i in range(md.num_columns)
-        }
-        fstats: dict[str, list] = {}
-        for col in stat_cols:
-            ci = leaf_index.get(col)
-            if ci is None:
-                continue
-            lo = hi = None
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(ci).statistics
-                if st is None or not st.has_min_max:
-                    lo = hi = None
-                    break
-                mn, mx = _footer_minmax(st, md.schema.column(ci))
-                if mn is None:
-                    lo = hi = None
-                    break
-                lo = mn if lo is None or mn < lo else lo
-                hi = mx if hi is None or mx > hi else hi
-            if lo is not None:
-                fstats[col] = [_stat_repr(lo), _stat_repr(hi)]
-        if fstats:
-            stats[fp] = fstats
-    removes = live_files(path, entries=prior) if mode == "overwrite" else []
-    _commit(path, version, sorted(adds), removes, extra={"zonemaps": stats})
-    return version
+    def write(batch_dir: str, _live: list[str]) -> dict:
+        df.write.mode("error").parquet(batch_dir)
+        stats: dict[str, dict] = {}
+        for fp in _list_parquet(batch_dir):
+            md = pq.read_metadata(fp)
+            # index by parquet LEAF path, not Arrow top-level field
+            # index: a struct/array column preceding the stat column
+            # makes the two numbering schemes diverge, and
+            # row_group().column(ci) indexes leaves — the wrong column's
+            # min/max would be logged and later prune files that DO
+            # contain matching rows (round-6 review). Top-level scalar
+            # columns have path_in_schema == their name; nested stat
+            # columns simply find no leaf and stay unstatted.
+            leaf_index = {
+                md.schema.column(i).path: i for i in range(md.num_columns)
+            }
+            fstats: dict[str, list] = {}
+            for col in stat_cols:
+                ci = leaf_index.get(col)
+                if ci is None:
+                    continue
+                lo = hi = None
+                for rg in range(md.num_row_groups):
+                    st = md.row_group(rg).column(ci).statistics
+                    if st is None or not st.has_min_max:
+                        lo = hi = None
+                        break
+                    mn, mx = _footer_minmax(st, md.schema.column(ci))
+                    if mn is None:
+                        lo = hi = None
+                        break
+                    lo = mn if lo is None or mn < lo else lo
+                    hi = mx if hi is None or mx > hi else hi
+                if lo is not None:
+                    fstats[col] = [_stat_repr(lo), _stat_repr(hi)]
+            if fstats:
+                stats[fp] = fstats
+        return {"zonemaps": stats}
+
+    return _commit_next(path, write, mode)
 
 
 def live_files_zonemap_pruned(
     path: str, col: str, lo, hi, version: int | None = None
 ) -> tuple[list[str], int]:
-    """Replay the log keeping per-file zone maps; return (files whose
-    [min, max] for `col` OVERLAPS [lo, hi] PLUS every file with no
-    zone map for that column, total_live). Unstatted files must be
-    read — skipping is an optimization, never a correctness filter."""
-    zmaps: dict[str, dict] = {}
-    files: set[str] = set()
-    for e in _entries(path):
-        if version is not None and e["version"] > version:
-            break
-        for r in e["removes"]:
-            files.discard(r)
-            zmaps.pop(r, None)
-        for a in e["adds"]:
-            files.add(a)
-        for fp, st in (e.get("zonemaps") or {}).items():
-            zmaps[fp] = st
+    """(files of the replayed snapshot whose [min, max] for `col`
+    OVERLAPS [lo, hi] PLUS every file with no zone map for that
+    column, total_live). Unstatted files must be read — skipping is an
+    optimization, never a correctness filter."""
+    snap = _snapshot(path, version)
     keep = []
-    for f in sorted(files):
-        zm = zmaps.get(f, {}).get(col)
+    for f, meta in sorted(snap.items()):
+        zm = (meta["zonemaps"] or {}).get(col)
         disjoint = False
         if zm is not None:
             below = _ord_pair(zm[1], lo)  # file_max vs query lo
@@ -903,7 +911,7 @@ def live_files_zonemap_pruned(
             )
         if not disjoint:
             keep.append(f)
-    return keep, len(files)
+    return keep, len(snap)
 
 
 def txlog_read_zonemap(
@@ -915,7 +923,6 @@ def txlog_read_zonemap(
     still apply the residual predicate — the skip is a superset
     guarantee, exactly how min/max pruning composes with filters in
     Delta/Iceberg readers."""
-    files, _total = live_files_zonemap_pruned(path, col, lo, hi, version)
-    if not files:
-        raise FileNotFoundError(f"no matching committed files in {path}")
-    return spark.read.parquet(*files)
+    return _read_files(
+        spark, path, live_files_zonemap_pruned(path, col, lo, hi, version)[0], version
+    )

@@ -178,7 +178,7 @@ def _replay_guard(
     table_path: str, txn_app: str | None, honor_legacy_markers: bool | None = None
 ):
     """Shared batch-replay guard for the txlog-sink queries:
-    (already_committed(batch_id), marker_extra(batch_id)).
+    (already_committed(batch_id), record(batch_id)).
 
     The marker is (txn_app, batch_id) — the Delta (txnAppId,
     txnVersion) pattern. Spark batch ids restart at 0 on checkpoint
@@ -244,24 +244,48 @@ def _replay_guard(
         # applied by default.
         return bool(honor_legacy_markers) and (None, batch_id) in seen
 
-    def marker_extra(batch_id: int) -> dict:
-        # pure — the cache is updated by commit() only AFTER the
-        # txlog publication returns (recording before success would
-        # make a retried batch skip itself after a transient failure)
-        extra = {"batch_id": batch_id}
-        if txn_app is not None:
-            extra["txn_app"] = txn_app
-        return extra
-
-    def commit(write_fn, batch_id: int) -> None:
-        """Run the commit callable, then record the marker in the
-        cache; on failure nothing is recorded and Spark's batch retry
-        re-enters already_committed with the cache unchanged."""
-        write_fn(marker_extra(batch_id))
+    def record(batch_id: int) -> None:
+        # called by the sink only AFTER the txlog publication returns
+        # (recording before success would make a retried batch skip
+        # itself after a transient failure)
         if seen is not None:
             seen.add((txn_app, batch_id))
 
-    return already_committed, commit
+    return already_committed, record
+
+
+def _start_txlog_sink(
+    stream: DataFrame,
+    table_path: str,
+    checkpoint_path: str,
+    trigger: dict | None,
+    txn_app: str | None,
+    honor_legacy_markers: bool | None,
+    commit_batch,
+) -> StreamingQuery:
+    """The one guarded foreachBatch starter of the txlog sinks.
+    `commit_batch(batch, batch_id, extra)` commits one micro-batch with
+    `extra` — the (txn_app, batch_id) replay marker — inside its log
+    entry. A batch whose marker is already in the log is skipped; the
+    guard's cache records the marker only after the commit returns, so
+    on failure Spark's batch retry re-enters the guard unchanged."""
+    already_committed, record = _replay_guard(
+        table_path, txn_app, honor_legacy_markers
+    )
+    marker = {} if txn_app is None else {"txn_app": txn_app}
+
+    def process_batch(batch: DataFrame, batch_id: int) -> None:
+        if already_committed(batch_id):
+            return  # replay of an already-committed batch
+        commit_batch(batch, batch_id, {"batch_id": batch_id, **marker})
+        record(batch_id)
+
+    return (
+        stream.writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(**(trigger or {"availableNow": True}))
+        .start()
+    )
 
 
 def start_txlog_ingest_query(
@@ -286,28 +310,12 @@ def start_txlog_ingest_query(
     table — see _replay_guard."""
     from serverless_datalake_spark.sources import txlog
 
-    already_committed, commit = _replay_guard(
-        table_path, txn_app, honor_legacy_markers
-    )
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        if already_committed(batch_id):
-            return  # replay of an already-committed batch
-        commit(
-            lambda extra: txlog.txlog_write(
-                batch.withColumn("batch_id", F.lit(batch_id)),
-                table_path,
-                extra=extra,
-            ),
-            batch_id,
-        )
-
-    trigger = trigger or {"availableNow": True}
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(**trigger)
-        .start()
+    return _start_txlog_sink(
+        stream, table_path, checkpoint_path, trigger, txn_app,
+        honor_legacy_markers,
+        lambda batch, batch_id, extra: txlog.txlog_write(
+            batch.withColumn("batch_id", F.lit(batch_id)), table_path, extra=extra
+        ),
     )
 
 
@@ -384,16 +392,10 @@ def start_txlog_upsert_query(
 
     At scale the rewrite narrows to files whose key ranges overlap the
     batch (txlog_upsert docstring); the guard and marker mechanics are
-    identical to start_txlog_ingest_query's (shared _replay_guard)."""
+    identical to start_txlog_ingest_query's (shared _start_txlog_sink)."""
     from serverless_datalake_spark.sources import txlog
 
-    already_committed, commit = _replay_guard(
-        table_path, txn_app, honor_legacy_markers
-    )
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        if already_committed(batch_id):
-            return  # replay of an already-committed batch
+    def commit_batch(batch: DataFrame, _batch_id: int, extra: dict) -> None:
         tiebreak = F.xxhash64(*[F.col(c) for c in batch.columns])
         w = Window.partitionBy(key).orderBy(F.col(order_col).desc(), tiebreak)
         latest = (
@@ -401,19 +403,11 @@ def start_txlog_upsert_query(
             .where(F.col("__rn") == 1)
             .drop("__rn")
         )
-        commit(
-            lambda extra: txlog.txlog_upsert(
-                batch.sparkSession, table_path, latest, key, extra=extra
-            ),
-            batch_id,
-        )
+        txlog.txlog_upsert(batch.sparkSession, table_path, latest, key, extra=extra)
 
-    trigger = trigger or {"availableNow": True}
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(**trigger)
-        .start()
+    return _start_txlog_sink(
+        stream, table_path, checkpoint_path, trigger, txn_app,
+        honor_legacy_markers, commit_batch,
     )
 
 
@@ -449,13 +443,7 @@ def start_dedup_admission_query(
     the exact anti-join — same two-stage shape, same guarantees."""
     from serverless_datalake_spark.sources import txlog
 
-    already_committed, commit = _replay_guard(
-        table_path, txn_app, honor_legacy_markers
-    )
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        if already_committed(batch_id):
-            return
+    def commit_batch(batch: DataFrame, _batch_id: int, extra: dict) -> None:
         spark = batch.sparkSession
         # the CANONICAL fingerprint — shared with batch dedup
         # (exact_dedup_survivors) and the SQL oracles; an inline copy
@@ -483,15 +471,9 @@ def start_dedup_admission_query(
             fresh = in_batch  # first batch: nothing admitted yet
         # commit even when empty: the batch id must be recorded so a
         # replay of an all-duplicate batch stays a no-op
-        commit(
-            lambda extra: txlog.txlog_write(fresh, table_path, extra=extra),
-            batch_id,
-        )
+        txlog.txlog_write(fresh, table_path, extra=extra)
 
-    trigger = trigger or {"availableNow": True}
-    return (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(**trigger)
-        .start()
+    return _start_txlog_sink(
+        stream, table_path, checkpoint_path, trigger, txn_app,
+        honor_legacy_markers, commit_batch,
     )

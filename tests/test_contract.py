@@ -34,6 +34,11 @@ def test_bench_emits_one_json_line(monkeypatch, spark, tmp_path):
     monkeypatch.setenv("SPARK_GRAFT_BENCH_DETAIL", str(tmp_path / "detail.json"))
     # shape check only — don't pay three 100M-row calibration jobs
     monkeypatch.setenv("SPARK_GRAFT_SKIP_CALIBRATION", "1")
+    # ... nor the two repeat samples per query: every HEADLINE query
+    # still runs once through bench.run_once
+    monkeypatch.setattr(
+        bench, "samples", lambda *args: [bench.run_once(*args)]
+    )
     buf = io.StringIO()
     with redirect_stdout(buf):
         bench.main()

@@ -824,6 +824,70 @@ def test_vacuum_checkpoint_preserves_pruning_stats(spark, tmp_path):
     assert txlog.txlog_read(spark, path).count() == 46
 
 
+def test_vacuum_checkpoint_preserves_zonemaps(spark, tmp_path):
+    """The zone-map half of the checkpoint carry-forward: files that
+    outlive a vacuum keep their [min, max] and still prune."""
+    path = str(tmp_path / "t")
+    df = spark.range(0, 400).select(F.col("id"), (F.col("id") * 2).alias("v"))
+    txlog.txlog_write_zonemapped(df.repartitionByRange(4, "v"), path, ["v"])  # v0
+    txlog.txlog_write(_df(spark, 1000, 1003), path)                           # v1
+    txlog.txlog_write(_df(spark, 1003, 1006), path)                           # v2
+    before, total_before = txlog.live_files_zonemap_pruned(path, "v", 0, 100)
+    assert len(before) < total_before
+    txlog.txlog_vacuum(path, keep_versions=1)
+    after, total_after = txlog.live_files_zonemap_pruned(path, "v", 0, 100)
+    assert (after, total_after) == (before, total_before)
+    assert txlog.txlog_read(spark, path).count() == 406
+
+
+def test_vacuum_checkpoint_keeps_stats_and_zonemaps_together(spark, tmp_path):
+    """One checkpoint squashes files with partition stats AND files
+    with zone maps: each keeps its own map, and both prunes still skip."""
+    path = str(tmp_path / "t")
+    parted = spark.range(0, 40).select(
+        F.col("id"), F.pmod(F.col("id"), F.lit(2)).cast("string").alias("p")
+    )
+    txlog.txlog_write_partitioned(parted, path, "p")                          # v0
+    zoned = spark.range(100, 500).select(
+        F.col("id"), F.lit("z").alias("p")
+    ).repartitionByRange(4, "id")
+    txlog.txlog_write_zonemapped(zoned, path, ["id"])                         # v1
+    txlog.txlog_write(
+        spark.range(900, 903).select("id", F.lit("x").alias("p")), path
+    )                                                                         # v2
+    stats_before = txlog.live_files_pruned(path, "p", ["0"])
+    zm_before = txlog.live_files_zonemap_pruned(path, "id", 100, 150)
+    txlog.txlog_vacuum(path, keep_versions=1)
+    ck = txlog._entries(path)[0]
+    assert ck["checkpoint"] and set(ck["stats"]).isdisjoint(ck["zonemaps"])
+    assert txlog.live_files_pruned(path, "p", ["0"]) == stats_before
+    assert txlog.live_files_zonemap_pruned(path, "id", 100, 150) == zm_before
+    assert len(stats_before[0]) < stats_before[1]
+    assert len(zm_before[0]) < zm_before[1]
+    assert txlog.txlog_read(spark, path).count() == 443
+
+
+def test_replay_to_vacuumed_version_raises(spark, tmp_path):
+    """A version squashed by a vacuum raises (naming the earliest
+    replayable version) in every listing — it used to replay to an
+    empty file set, which reads as an empty table."""
+    path = str(tmp_path / "t")
+    for lo in (0, 10, 20):
+        txlog.txlog_write(_df(spark, lo, lo + 10), path)  # v0..v2
+    txlog.txlog_vacuum(path, keep_versions=1)
+    for listing in (
+        lambda: txlog.live_files(path, 0),
+        lambda: txlog.live_files_pruned(path, "id", [1], version=0),
+        lambda: txlog.live_files_zonemap_pruned(path, "id", 0, 5, version=1),
+        lambda: txlog.txlog_read(spark, path, version=0),
+    ):
+        with pytest.raises(ValueError, match=r"earliest replayable version 2.*vacuum"):
+            listing()
+    # the retained version and "before the first commit" still replay
+    assert len(txlog.live_files(path, 2)) == len(txlog.live_files(path))
+    assert txlog.live_files(path, -1) == []
+
+
 def test_zonemap_leaf_index_with_struct_column(spark, tmp_path):
     """Zone maps must index parquet LEAF paths: a struct column
     preceding the stat column used to shift the index so the WRONG
