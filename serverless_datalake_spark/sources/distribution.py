@@ -8,10 +8,11 @@ reads that topic (stack.py:251–265). Here the delivery root is one
 Hive-partitioned table, ``<root>/source=<s>/``, so a topic is a
 partition of it. Ingest publishes byte copies of the lake files it
 wrote for the batch there (the records it stored, as the reference
-publishes them), and a replay writes its re-delivery through
-`ingest.fan_out` in the same layout. A subscriber reads the root
-filtered on its source, and partition pruning keeps that scan to one
-directory.
+publishes them), and a replay publishes copies of the selected
+batches' lake files in the same layout; only the selected rows of a
+lake file that mixes batches (compaction output) are re-written,
+through `ingest.fan_out`. A subscriber reads the root filtered on its
+source, and partition pruning keeps that scan to one directory.
 
 Source names are event DATA. Spark escapes partition values on write
 (``../../x`` → ``source=..%2F..%2Fx``, ``a:b`` → ``source=a%3Ab``) and

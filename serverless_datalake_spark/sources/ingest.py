@@ -153,12 +153,13 @@ def with_source(events: DataFrame, source_col: str) -> DataFrame:
 
 def fan_out(events: DataFrame, delivery_root: str) -> None:
     """R10/R11: per-source delivery of rows that are not already
-    encoded as lake files; replay's re-delivery writer (ingest copies
-    its lake files instead). The reference loops SNS publishes per
-    record (recorder:55–65); here one partitioned write delivers every
-    record to its source's directory ``<delivery_root>/source=<s>/``,
-    the layout ingest's copy has too, and subscribers read their own
-    partition (distribution.subscribe)."""
+    encoded as lake files of their own. Ingest and replay deliver by
+    copying lake files; this writes only replay's selected rows from
+    lake files that mix batches (compaction output). The reference
+    loops SNS publishes per record (recorder:55–65); here one
+    partitioned write delivers every record to its source's directory
+    ``<delivery_root>/source=<s>/``, the layout of the copies, and
+    subscribers read their own partition (distribution.subscribe)."""
     events.write.mode("append").partitionBy("source").parquet(delivery_root)
 
 

@@ -27,6 +27,8 @@ footers, for lakes whose batches were written with differing schemas.
 from __future__ import annotations
 
 import json as _json
+import os
+import re
 
 import pandas as pd  # module-level: pandas-UDF hints resolve from module globals
 
@@ -87,6 +89,40 @@ def read_lake(spark: SparkSession, path: str) -> DataFrame:
     """Schema-first scan of a lake or delivery root; needs no job to
     learn the shape. A column missing from a file reads as NULL."""
     return spark.read.schema(LAKE_SCHEMA).parquet(path)
+
+
+# a byte Spark escaped in a partition directory name (``ads/click`` →
+# ``source=ads%2Fclick``)
+_ESCAPED = re.compile(r"%([0-9A-Fa-f]{2})")
+
+
+def source_dirs(root: str, source: str) -> list[str]:
+    """The ``source=`` directories of ``root`` that Spark reads as
+    ``source``. Spark escapes a partition value on write and unescapes
+    each ``%XX`` on read (distribution's module docstring), so the
+    directories are found by listing the root and unescaping their
+    names the same way, never by building a path from the name."""
+    if not os.path.isdir(root):
+        return []
+    with os.scandir(root) as entries:
+        return sorted(
+            e.path
+            for e in entries
+            if e.is_dir()
+            and e.name.startswith("source=")
+            and _ESCAPED.sub(lambda m: chr(int(m[1], 16)), e.name[len("source=") :]) == source
+        )
+
+
+def data_files(directory: str) -> list[str]:
+    """The files Spark's listing reads under ``directory``, nested
+    partition directories included: it skips names that start with '_'
+    or '.' (staging directories, markers, checksums)."""
+    out = []
+    for base, dirs, names in os.walk(directory):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        out += [os.path.join(base, n) for n in names if not n.startswith(("_", "."))]
+    return sorted(out)
 
 
 def read_json_events(spark: SparkSession, path: str) -> DataFrame:

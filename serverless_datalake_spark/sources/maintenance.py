@@ -19,6 +19,8 @@ import uuid
 
 from pyspark.sql import SparkSession
 
+from serverless_datalake_spark.sources import lake
+
 TARGET_FILE_BYTES = 128 * 1024 * 1024
 
 
@@ -30,6 +32,16 @@ def partition_file_stats(lake_path: str, source: str) -> tuple[int, int]:
     return len(files), sum(os.path.getsize(f) for f in files)
 
 
+def _partition_dir(lake_path: str, source: str) -> str | None:
+    """The source's partition directory, found the way Spark reads it
+    (``lake.source_dirs``: ``ads/click`` lives in
+    ``source=ads%2Fclick``); None when the lake has none."""
+    dirs = lake.source_dirs(lake_path, source)
+    if len(dirs) > 1:
+        raise ValueError(f"{lake_path} holds source {source!r} in several directories: {dirs}")
+    return dirs[0] if dirs else None
+
+
 def _sub_partition_keys(lake_path: str, source: str) -> list[str]:
     """Partition-column chain BELOW source= (empty for the flat layout
     the engine's own writers use; a lake written elsewhere may be
@@ -37,31 +49,27 @@ def _sub_partition_keys(lake_path: str, source: str) -> list[str]:
     ['batch_id']. The rewrite must partition by the same chain or it
     would mix two physical layouts in one table."""
     keys: list[str] = []
-    d = os.path.join(lake_path, f"source={source}")
-    while True:
+    d = _partition_dir(lake_path, source)
+    while d is not None:
         subdirs = [
             n
-            for n in (os.listdir(d) if os.path.isdir(d) else [])
+            for n in os.listdir(d)
             if "=" in n and os.path.isdir(os.path.join(d, n))
         ]
         if not subdirs:
-            return keys
+            break
         key = subdirs[0].split("=", 1)[0]
         if any(n.split("=", 1)[0] != key for n in subdirs):
             raise ValueError(f"inconsistent partition keys under {d}: {subdirs}")
         keys.append(key)
         d = os.path.join(d, subdirs[0])
+    return keys
 
 
 def _partition_files(lake_path: str, source: str) -> list[str]:
-    return sorted(
-        f
-        for f in glob.glob(
-            os.path.join(lake_path, f"source={source}", "**", "*.parquet"),
-            recursive=True,
-        )
-        if os.path.isfile(f)
-    )
+    """The data files Spark reads in the source's partition."""
+    d = _partition_dir(lake_path, source)
+    return lake.data_files(d) if d is not None else []
 
 
 def _remove(f: str) -> None:
@@ -91,7 +99,9 @@ def _replay_doomed_manifests(lake_path: str, source: str) -> None:
     already fully committed, so deleting the survivors loses nothing.
     (The marker of an older append-then-manifest protocol, kept so a
     crash it left is still healed.)"""
-    pdir = os.path.join(lake_path, f"source={source}")
+    pdir = _partition_dir(lake_path, source)
+    if pdir is None:
+        return
     for m in glob.glob(os.path.join(pdir, "_compact-*.doomed.json")):
         with open(m) as f:
             for doomed in json.load(f):
@@ -117,7 +127,9 @@ def _replay_intent_markers(lake_path: str, source: str) -> None:
     Assumes one compactor per partition at a time, as the
     capture/delete sequence always has.
     """
-    pdir = os.path.join(lake_path, f"source={source}")
+    pdir = _partition_dir(lake_path, source)
+    if pdir is None:
+        return
     intents = glob.glob(os.path.join(pdir, "_compact-*.intent.json"))
     for m in intents:
         with open(m) as f:
@@ -187,7 +199,7 @@ def compact_partition(
     total_bytes = sum(os.path.getsize(f) for f in doomed)
     n_files = max(1, -(-total_bytes // max(target_file_bytes, 1)))
     sub_keys = _sub_partition_keys(lake_path, source)
-    pdir = os.path.join(lake_path, f"source={source}")
+    pdir = _partition_dir(lake_path, source)
 
     cid = uuid.uuid4().hex[:8]
     staging = os.path.join(pdir, f"_compact-{cid}.staging")

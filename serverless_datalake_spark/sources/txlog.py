@@ -36,6 +36,9 @@ file-change feed all read it. A version that a vacuum squashed away
 raises ValueError rather than replaying to an empty set. One commit
 step: every writer publishes through `_commit_next` (head read,
 expected_head check, the data directory, its file listing, _commit).
+Both read the log through `_entries`, which parses each entry file
+once per process (for the most recently read logs), so a commit reads
+only the entries new to it.
 
 Commit protocol: write data files → write log entry to a temp name →
 atomic rename to the next version number. Rename-if-absent is atomic
@@ -96,6 +99,7 @@ import json
 import math
 import os
 import re
+import threading
 import uuid
 from decimal import Decimal, InvalidOperation
 
@@ -261,24 +265,64 @@ def _log_path(path: str) -> str:
     return os.path.join(path, _LOG_DIR)
 
 
+# log dir → {entry file name: ((inode, size, mtime_ns), parsed entry)},
+# for the _PARSED_DIRS most recently read log directories
+_PARSED: dict[str, dict[str, tuple[tuple[int, int, int], dict]]] = {}
+_PARSED_DIRS = 8
+# streaming sinks commit from concurrent callback threads
+_PARSED_LOCK = threading.Lock()
+
+
+def _file_key(st: os.stat_result) -> tuple[int, int, int]:
+    return st.st_ino, st.st_size, st.st_mtime_ns
+
+
 def _entries(path: str) -> list[dict]:
+    """The committed entries, in version order. Each entry file is
+    parsed once per process and cached under its inode, size and
+    mtime, so a commit reads only the entries it has not seen, and
+    vacuum's checkpoint (a new file swapped onto ``<horizon>.json``)
+    is read again. The dicts are shared with later calls: callers
+    must not mutate them. Only the most recently read _PARSED_DIRS
+    logs stay cached."""
     d = _log_path(path)
+    with _PARSED_LOCK:
+        cached = _PARSED.pop(d, {})
     if not os.path.isdir(d):
         return []
-    out = []
-    for name in sorted(os.listdir(d)):
-        if _COMMITTED.fullmatch(name):
+    current = {}
+    with os.scandir(d) as it:
+        # oldest first, as the vacuum-race skip below requires: the
+        # directory's own order may list the horizon entry before the
+        # entries a vacuum is about to unlink
+        for e in sorted(it, key=lambda e: e.name):
+            if not _COMMITTED.fullmatch(e.name):
+                continue
             try:
-                with open(os.path.join(d, name)) as f:
-                    out.append(json.load(f))
+                hit = cached.get(e.name)
+                if hit is not None and hit[0] == _file_key(e.stat()):
+                    current[e.name] = hit
+                    continue
+                with open(e.path) as f:
+                    # keyed on the file actually read, should a vacuum
+                    # swap the name between the stat and the open
+                    current[e.name] = (_file_key(os.fstat(f.fileno())), json.load(f))
             except FileNotFoundError:
                 # a concurrent vacuum unlinked this pre-horizon entry
-                # between our listdir and open; its checkpoint (>= this
+                # between our listing and open; its checkpoint (>= this
                 # version, already visible or about to be read next)
                 # is replay-equivalent, so skipping is safe — crashing
                 # here broke the documented mid-vacuum reader guarantee
                 continue
-    return out
+    # entries whose files are gone (vacuumed) leave the cache; of two
+    # racing callers the last one's map stays, which costs at most a
+    # re-parse later
+    if current:
+        with _PARSED_LOCK:
+            _PARSED[d] = current
+            while len(_PARSED) > _PARSED_DIRS:
+                del _PARSED[next(iter(_PARSED))]  # the least recently read
+    return [current[n][1] for n in sorted(current)]
 
 
 def _commit(

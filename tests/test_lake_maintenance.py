@@ -167,6 +167,108 @@ def test_compaction_keeps_batch_reruns_from_landing_twice(spark, tmp_path):
         assert os.path.exists(os.path.join(pdir, os.path.basename(crc)[1:-4])), crc
 
 
+def test_replay_survives_compaction(spark, tmp_path):
+    """Compaction merges older batches into files whose footers span
+    several batch ids, so replay re-reads those files filtered to its
+    batches, while it copies the newest batch's own files. A window
+    over the compacted batches, over the uncompacted newest one, or
+    over both re-delivers exactly its batches' rows."""
+    import pyarrow.parquet as pq
+
+    from serverless_datalake_spark.sources import replay
+
+    lake_path, cat = str(tmp_path / "lake"), str(tmp_path / "cat")
+    truth = {}
+    for b in range(4):
+        blob = str(tmp_path / f"b{b}.json.gz")
+        with gzip.open(blob, "wt") as f:
+            for i in range(10 + 4 * b):
+                event = {"event_id": b * 100 + i, "event_type": ("clicks", "tweets")[i % 2]}
+                f.write(json.dumps(event) + "\n")
+        ingest.ingest_batch(spark, blob, lake_path, cat, None, f"b{b}")
+        truth[f"b{b}"] = 5 + 2 * b
+
+    maintenance.compact_partition(spark, lake_path, "clicks")
+    footers = {
+        os.path.basename(f): replay._sole_batch(pq.read_metadata(f))
+        for f in glob.glob(os.path.join(lake_path, "source=clicks", "*.parquet"))
+    }
+    assert set(footers.values()) == {None, "b3"}, footers
+
+    ingest_ts = {
+        r["file_key"].split("/")[-1].split(".")[0]: r["ingest_ts"]
+        for r in ingest.read_catalog(spark, cat).where(F.col("source") == "clicks").collect()
+    }
+    for window in (["b0", "b1"], ["b3"], ["b2", "b3"]):
+        delivery = str(tmp_path / f"delivery-{'-'.join(window)}")
+        res = replay.replay(
+            spark, cat, lake_path, delivery, "clicks", ingest_ts[window[0]], ingest_ts[window[-1]]
+        )
+        want = {b: truth[b] for b in window}
+        assert res == {"n_batches": len(window), "n_events": sum(want.values())}, window
+        got = spark.read.parquet(delivery).groupBy("source", "batch_id").count().collect()
+        assert {(r["source"], r["batch_id"]): r["count"] for r in got} == {
+            ("clicks", b): n for b, n in want.items()
+        }, window
+
+
+def test_compaction_finds_a_source_whose_directory_name_spark_escapes(spark, tmp_path):
+    """Spark writes source ``ads/click`` to ``source=ads%2Fclick``.
+    Compaction finds that directory by unescaping the names it lists,
+    as replay does, rewrites it in place, and replay still re-delivers
+    every row of the source."""
+    from serverless_datalake_spark.sources import replay
+
+    lake_path, cat = str(tmp_path / "lake"), str(tmp_path / "cat")
+    for b in range(3):
+        blob = str(tmp_path / f"b{b}.json.gz")
+        with gzip.open(blob, "wt") as f:
+            for i in range(12):
+                f.write(json.dumps({"event_id": b * 100 + i, "event_type": ("ads/click", "a:b")[i % 2]}) + "\n")
+        ingest.ingest_batch(spark, blob, lake_path, cat, None, f"b{b}")
+    assert sorted(os.listdir(lake_path)) == ["source=a%3Ab", "source=ads%2Fclick"]
+
+    n_before, _ = maintenance.partition_file_stats(lake_path, "ads/click")
+    stats = maintenance.compact_partition(spark, lake_path, "ads/click")
+    assert stats["files_before"] == n_before >= 3
+    assert stats["files_after"] < stats["files_before"]
+    assert sorted(os.listdir(lake_path)) == ["source=a%3Ab", "source=ads%2Fclick"]
+    got = spark.read.parquet(lake_path).groupBy("source").count().collect()
+    assert {r["source"]: r["count"] for r in got} == {"ads/click": 18, "a:b": 18}
+    res = replay.replay(spark, cat, lake_path, str(tmp_path / "delivery"), "ads/click", "2000-01-01", "2100-01-01")
+    assert res == {"n_batches": 3, "n_events": 18}
+
+
+def test_replay_rereads_files_of_a_nested_lake(spark, tmp_path):
+    """A lake written with a finer partition chain than source= (here
+    source=/day=) names one task's files alike in every day= directory.
+    Replay re-reads such nested files rather than copying them by name,
+    so no namesake shadows another, and the delivery keeps the source=
+    layout."""
+    from serverless_datalake_spark.sources import lake, replay
+
+    flat, nested, cat = (str(tmp_path / n) for n in ("flat", "nested", "cat"))
+    blob = str(tmp_path / "b0.json.gz")
+    with gzip.open(blob, "wt") as f:
+        for i in range(20):
+            f.write(json.dumps({"event_id": i, "event_type": "clicks"}) + "\n")
+    ingest.ingest_batch(spark, blob, flat, cat, None, "b0")
+    spark.read.parquet(flat).withColumn("day", F.col("event_id") % 2).coalesce(1).write.partitionBy(
+        "source", "day"
+    ).parquet(nested)
+    names = [
+        sorted(os.path.basename(f) for f in glob.glob(os.path.join(nested, "source=clicks", f"day={d}", "*.parquet")))
+        for d in (0, 1)
+    ]
+    assert names[0] == names[1] != []
+
+    delivery = str(tmp_path / "delivery")
+    res = replay.replay(spark, cat, nested, delivery, "clicks", "2000-01-01", "2100-01-01")
+    assert res == {"n_batches": 1, "n_events": 20}
+    assert all(os.path.isfile(f) for f in glob.glob(os.path.join(delivery, "source=clicks", "*")))
+    assert sorted(r["event_id"] for r in lake.read_lake(spark, delivery).collect()) == list(range(20))
+
+
 def test_orc_round_trip_with_partitioning_and_pushdown(spark, sf_dir, tmp_path):
     from serverless_datalake_spark.sources.lake import read_orc, write_orc
     from serverless_datalake_spark.tables import load_table

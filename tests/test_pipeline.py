@@ -612,7 +612,7 @@ def test_concurrent_sinks_keep_the_callers_job_group(spark, paths):
         _clear_job_group(sc)
     assert res == {"n_batches": 1, "n_events": 10}
     jobs = _jobs_after(sc, last)
-    assert len(jobs) >= 5  # ingest's lake write and catalog aggregate, replay's catalog totals and fan-out
+    assert len(jobs) >= 5  # ingest's lake write and catalog aggregate (two jobs each), replay's catalog selection
     assert sorted(j.jobId() for j in jobs) == sorted(
         j for j in sc.statusTracker().getJobIdsForGroup("g") if j > last
     )
@@ -620,6 +620,67 @@ def test_concurrent_sinks_keep_the_callers_job_group(spark, paths):
 
 def _files_under(root: str) -> list[str]:
     return [os.path.join(b, n) for b, _, names in os.walk(root) for n in names]
+
+
+def test_replay_runs_one_job_when_no_lake_file_mixes_batches(spark, paths):
+    """A replay copies each selected batch's own lake files, counting
+    their rows from the footers: when no lake file mixes batches, its
+    one Spark job is the catalog selection, run in the caller's job
+    group."""
+    sc = spark.sparkContext
+    _write_staging(paths["staging"], _mk_events(40))
+    ingest.ingest_batch(spark, paths["staging"], paths["lake"], paths["catalog"], None, "b0")
+    _write_staging(paths["staging"] + "2", _mk_events(60, start_id=1000))
+    ingest.ingest_batch(spark, paths["staging"] + "2", paths["lake"], paths["catalog"], None, "b1")
+    last = max((j.jobId() for j in _jobs_after(sc, -1)), default=-1)
+    sc.setJobGroup("one-job-replay", "replay by copy")
+    try:
+        res = replay.replay(
+            spark, paths["catalog"], paths["lake"], paths["delivery"], "clicks", "2000-01-01", "2100-01-01"
+        )
+    finally:
+        _clear_job_group(sc)
+    assert res == {"n_batches": 2, "n_events": 50}
+    jobs = [j.jobId() for j in _jobs_after(sc, last)]
+    assert len(jobs) == 1
+    assert sorted(j for j in sc.statusTracker().getJobIdsForGroup("one-job-replay") if j > last) == jobs
+    reg = distribution.TopicRegistry(paths["delivery"])
+    assert distribution.subscribe(spark, reg, "clicks").count() == 50
+    assert distribution.subscribe(spark, reg, "tweets").count() == 0
+
+
+def test_replay_finds_a_source_whose_directory_name_spark_escapes(spark, paths):
+    """Spark escapes a source name in its partition directory
+    (``ads/click`` → ``source=ads%2Fclick``); replay finds that
+    directory by unescaping the names it lists, and re-delivers the
+    source's rows under the same name."""
+    evs = _mk_events(12)
+    for i, e in enumerate(evs):
+        e["event_type"] = ("ads/click", "a:b", "clicks")[i % 3]
+    _write_staging(paths["staging"], evs)
+    ingest.ingest_batch(spark, paths["staging"], paths["lake"], paths["catalog"], None, "b0")
+    assert {"source=ads%2Fclick", "source=a%3Ab"} < set(os.listdir(paths["lake"]))
+    reg = distribution.TopicRegistry(paths["delivery"])
+    for source in ("ads/click", "a:b"):
+        res = replay.replay(
+            spark, paths["catalog"], paths["lake"], paths["delivery"], source, "2000-01-01", "2100-01-01"
+        )
+        assert res == {"n_batches": 1, "n_events": 4}, source
+        got = distribution.subscribe(spark, reg, source)
+        assert sorted(r["event_id"] for r in got.collect()) == list(range(("ads/click", "a:b").index(source), 12, 3))
+    assert distribution.subscribe(spark, reg, "clicks").count() == 0
+
+
+def test_replay_of_an_empty_window_publishes_nothing(spark, paths):
+    """A window that selects no catalog row re-delivers nothing and
+    leaves no file under the delivery root."""
+    _write_staging(paths["staging"], _mk_events(20))
+    ingest.ingest_batch(spark, paths["staging"], paths["lake"], paths["catalog"], None, "b0")
+    res = replay.replay(
+        spark, paths["catalog"], paths["lake"], paths["delivery"], "clicks", "1990-01-01", "1991-01-01"
+    )
+    assert res == {"n_batches": 0, "n_events": 0}
+    assert _files_under(paths["delivery"]) == []
 
 
 def test_ingest_lake_failure_writes_no_catalog_or_delivery(spark, paths):

@@ -4,6 +4,7 @@ and invisibility of uncommitted data files."""
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 import pytest
@@ -144,6 +145,93 @@ def test_vacuum_checkpoint_is_replay_equivalent_mid_window(spark, tmp_path):
     entries = txlog._entries(path)
     assert any(e.get("checkpoint") for e in entries)
     assert {r["id"] for r in txlog.txlog_read(spark, path).collect()} == head_ids
+
+
+def test_log_entries_are_parsed_once_and_reread_after_vacuum(tmp_path, monkeypatch):
+    """Each committed entry file is parsed once per process: a commit at
+    version N, and the read after it, open only entry N. Vacuum swaps
+    its checkpoint onto the horizon entry's name, and the next reader
+    parses that checkpoint and forgets the deleted entries."""
+    path = str(tmp_path / "t")
+    for v in range(4):
+        txlog.txlog_commit_metadata(path, {"k": v})
+    assert [e["version"] for e in txlog._entries(path)] == [0, 1, 2, 3]
+    opened = []
+
+    def spy(file, *args, **kwargs):
+        opened.append(os.path.basename(file))
+        return open(file, *args, **kwargs)
+
+    monkeypatch.setattr(txlog, "open", spy, raising=False)
+
+    def entries_opened() -> list[str]:
+        names = [n for n in opened if txlog._COMMITTED.fullmatch(n)]
+        opened.clear()
+        return names
+
+    assert txlog.txlog_commit_metadata(path, {"k": 4}) == 4
+    assert [e["version"] for e in txlog._entries(path)] == [0, 1, 2, 3, 4]
+    assert entries_opened() == ["00000004.json"]
+
+    txlog.txlog_vacuum(path, keep_versions=2)
+    entries = txlog._entries(path)
+    assert [(e["version"], e.get("checkpoint"), e["k"]) for e in entries] == [(3, True, 3), (4, None, 4)]
+    assert entries_opened() == ["00000003.json"]
+    assert sorted(txlog._PARSED[txlog._log_path(path)]) == ["00000003.json", "00000004.json"]
+
+
+def test_reader_listing_newest_first_across_a_vacuum_replays_the_checkpoint(tmp_path, monkeypatch):
+    """A directory may list the horizon entry before the entries a
+    vacuum is about to unlink. A reader whose listing comes back newest
+    first, with the vacuum's swap and unlinks landing after its first
+    name, still replays to the head's file set: it reads entries oldest
+    first, so once an old entry is gone the horizon entry it reads
+    after it is the checkpoint."""
+    path = str(tmp_path / "t")
+    data = os.path.join(path, "data")
+    for v, adds, removes in [(0, ["a"], []), (1, ["b"], []), (2, ["c"], ["a"]), (3, ["d"], [])]:
+        txlog._commit(path, v, [os.path.join(data, f) for f in adds], [os.path.join(data, f) for f in removes])
+    head = txlog.live_files(path)  # also caches every entry
+    assert [os.path.basename(f) for f in head] == ["b", "c", "d"]
+
+    real_scandir = os.scandir
+    vacuumed = []
+
+    @contextlib.contextmanager
+    def newest_first(d):
+        if vacuumed:
+            with real_scandir(d) as it:
+                yield it
+            return
+        with real_scandir(d) as it:
+            listed = sorted(it, key=lambda e: e.name, reverse=True)
+
+        def names():
+            for i, e in enumerate(listed):
+                if i == 1:
+                    vacuumed.append(True)
+                    txlog.txlog_vacuum(path, keep_versions=1)
+                yield e
+
+        yield names()
+
+    monkeypatch.setattr(txlog.os, "scandir", newest_first)
+    entries = txlog._entries(path)
+    monkeypatch.undo()
+    assert vacuumed
+    assert [(e["version"], e.get("checkpoint")) for e in entries] == [(3, True)]
+    assert txlog.live_files(path, entries=entries) == head
+
+
+def test_parsed_entry_cache_keeps_only_the_most_recent_logs(tmp_path):
+    paths = [str(tmp_path / f"t{i}") for i in range(txlog._PARSED_DIRS + 2)]
+    for p in paths:
+        txlog.txlog_commit_metadata(p, {"k": 0})
+        assert [e["k"] for e in txlog._entries(p)] == [0]
+    cached = [d for d in txlog._PARSED if d.startswith(str(tmp_path))]
+    assert cached == [txlog._log_path(p) for p in paths[-txlog._PARSED_DIRS :]]
+    txlog._entries(str(tmp_path / "missing"))
+    assert txlog._log_path(str(tmp_path / "missing")) not in txlog._PARSED
 
 
 def test_vacuum_preserves_streaming_batch_markers(spark, tmp_path):
