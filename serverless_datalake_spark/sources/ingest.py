@@ -5,18 +5,18 @@ One declarative job replaces the reference's five-service hop chain
 (APIGW→Firehose→S3→SQS→Lambda, stack.py:177–216 → recorder:71–92):
 
   events.json.gz ──read──► lake (partitionBy source, sorted by ts)
-                      │          └──copy──► delivery root, one partition per source
-                      └──► catalog append (source, ingest_ts, file_key)
+                           ├──copy──► delivery root, one partition per source
+                           └──footer counts──► catalog append (source, ingest_ts, file_key)
 
 Data lands before metadata, as in the reference, where the recorder
 runs only once the blob is in S3 (ObjectCreated → SQS, stack.py:58–60)
 and fetches it before its catalog put and publish (recorder:86–92).
-Each batch is Parquet-encoded once. Two Spark jobs run concurrently
-(``concurrently``), so small write jobs share the cores instead of
-queueing for them: the lake write and the catalog aggregate, each
-parsing the blob in full rather than sharing a cached parse. The
-delivery is a byte copy of the lake write's files, as the reference
-publishes the same records it stored (recorder:55–65). Every write
+Each blob is parsed once and Parquet-encoded once: the lake write is
+the commit's one Spark query, and the catalog rows and the delivery come
+from the files it wrote, as the reference's recorder catalogs and
+publishes from its one parse of the blob (recorder:71–92). A source's
+n_records is the row count in its files' Parquet footers, and the
+delivery is a byte copy of the files (recorder:55–65). Every write
 is staged and published only once the batch's counts agree: the lake
 first, the catalog last, so a catalog row always names committed lake
 data. ``commit_batch`` is that one recorder (the reference's
@@ -30,18 +30,17 @@ partition pruning + min/max skipping.
 
 from __future__ import annotations
 
-import functools
+import datetime as dt
 import glob
-import operator
 import os
 import re
 import shutil
-from concurrent.futures import ThreadPoolExecutor
-from typing import Any, Callable
+from typing import NamedTuple
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.util import inheritable_thread_target
 
 from serverless_datalake_spark.sources import lake
 
@@ -54,22 +53,6 @@ QUARANTINE_SOURCE = "__unknown__"
 # ends every catalog file_key, so it holds no path separator, no dot and
 # no leading '_' or '.'
 BATCH_ID = re.compile(r"[A-Za-z0-9][A-Za-z0-9_-]*")
-
-
-def concurrently(spark: SparkSession, *calls: Callable[[], Any]) -> list[Any]:
-    """Run independent Spark actions at the same time, one thread per
-    call, and return their results in call order.
-
-    Every call runs to completion before this returns, so no job is
-    left running; then the first failed call's error (in call order)
-    is raised. Each call is wrapped in ``inheritable_thread_target``
-    while still on the calling thread: the thread carries the caller's
-    local properties and session tags, so its jobs stay in the
-    caller's job group (a bare pool thread starts without them). This
-    is the package's one thread pool for Spark actions."""
-    with ThreadPoolExecutor(max_workers=len(calls)) as pool:
-        futures = [pool.submit(inheritable_thread_target(spark)(c)) for c in calls]
-    return [f.result() for f in futures]
 
 
 def _staged(root: str, batch_id: str) -> str:
@@ -110,23 +93,65 @@ def _sources(root: str, batch_id: str) -> set[str]:
     return {os.path.basename(os.path.dirname(f)) for f in _published(root, batch_id)}
 
 
-def build_catalog_entries(events: DataFrame, batch_id: str) -> DataFrame:
+class CatalogEntry(NamedTuple):
+    """One source's catalog row for a batch, and the name of the lake
+    directory (``source=<s>`` as Spark escaped it) it is filed under."""
+
+    partition: str
+    source: str
+    ingest_ts: dt.datetime
+    file_key: str
+    n_records: int
+
+
+# a catalog file's columns; the source is its directory, as in the lake
+_CATALOG_FILE = pa.schema(
+    [
+        ("ingest_ts", pa.timestamp("us", tz="UTC")),
+        ("file_key", pa.string()),
+        ("n_records", pa.int64()),
+    ]
+)
+
+
+def build_catalog_entries(
+    staged_lake: str, batch_id: str, ingest_ts: dt.datetime
+) -> list[CatalogEntry]:
     """R9: one catalog row per (source, batch) — item shape mirrors
-    recorder:16–31 `(Source, Timestamp, Key)` plus a record count.
-    ingest_ts is the processing time the reference takes from SQS
-    SentTimestamp (recorder:77); here it's stamped per batch."""
-    return events.groupBy(F.col("source")).agg(
-        F.count("*").alias("n_records"),
-    ).select(
-        "source",
-        F.current_timestamp().alias("ingest_ts"),
-        F.concat(F.col("source"), F.lit(f"/{batch_id}.parquet")).alias("file_key"),
-        "n_records",
-    )
+    recorder:16–31 `(Source, Timestamp, Key)` plus a record count —
+    read off the lake write's own files, as the reference's recorder
+    catalogs the blob it parsed once: a source per ``source=``
+    directory of ``staged_lake``, n_records the Σ row counts of its
+    files' Parquet footers (as replay counts its copies). ingest_ts is
+    the processing time the reference takes from SQS SentTimestamp
+    (recorder:77); here it's stamped per batch."""
+    entries = []
+    for name in sorted(os.listdir(staged_lake)):
+        source = lake.source_of(name)
+        if source is not None:
+            files = lake.data_files(os.path.join(staged_lake, name))
+            n_records = sum(pq.read_metadata(f).num_rows for f in files)
+            entries.append(
+                CatalogEntry(name, source, ingest_ts, f"{source}/{batch_id}.parquet", n_records)
+            )
+    return entries
 
 
-def append_catalog(entries: DataFrame, catalog_path: str) -> None:
-    entries.write.mode("append").partitionBy("source").parquet(catalog_path)
+def append_catalog(entries: list[CatalogEntry], catalog_path: str) -> None:
+    """Write each entry as a one-row Parquet file
+    ``<catalog_path>/<its lake directory name>/part-00000.parquet``,
+    with pyarrow: a Spark write of rows built in Python would send them
+    through a Python worker. ``catalog_path``, and so the catalog
+    root above it, is made even for no entries: an empty batch leaves
+    a catalog that reads as empty."""
+    os.makedirs(catalog_path, exist_ok=True)
+    for e in entries:
+        os.makedirs(os.path.join(catalog_path, e.partition))
+        pq.write_table(
+            pa.Table.from_pylist([e._asdict()], schema=_CATALOG_FILE),
+            os.path.join(catalog_path, e.partition, "part-00000.parquet"),
+            store_schema=False,
+        )
 
 
 def read_catalog(spark: SparkSession, catalog_path: str) -> DataFrame:
@@ -180,23 +205,11 @@ def ingest_batch(
     """E1 end-to-end: read the staging JSON, route each line by
     ``source_col`` and record it with ``commit_batch``."""
     raw = lake.read_json_events(spark, staging_path)
-    # The commit's two jobs scan staging through this one DataFrame,
-    # whose file list is fixed now: a blob landing later is read by
-    # neither, with no cache. Both must parse each line alike: a scan
-    # pruned to the routing columns does not flag a type mismatch in
-    # another field as malformed, so the catalog would count under its
-    # source a row the lake files under __unknown__. This observation
-    # (lines that parsed to nothing) references every column, so
-    # neither scan is pruned.
-    fields = [F.col(c).isNull() for c in raw.columns if c != lake.CORRUPT_RECORD]
-    raw = raw.observe("ingest_unparsed_lines", F.count_if(functools.reduce(operator.and_, fields)))
-    return commit_batch(
-        spark, with_source(raw, source_col), lake_path, catalog_path, delivery_root, batch_id
-    )
+    events = with_source(raw, source_col)
+    return commit_batch(events, lake_path, catalog_path, delivery_root, batch_id)
 
 
 def commit_batch(
-    spark: SparkSession,
     events: DataFrame,
     lake_path: str,
     catalog_path: str,
@@ -204,10 +217,11 @@ def commit_batch(
     batch_id: str,
 ) -> dict[str, int]:
     """Land ``events`` (rows with a ``source``) in the lake partitioned
-    by source and append their catalog entries, as two concurrent
-    jobs; the delivery is a copy of the lake write's files. Nothing is
-    published until both jobs have succeeded and the lake's landed
-    rows equal the catalog's Σ n_records (ValueError naming both
+    by source, the commit's one Spark query, and append a catalog entry
+    per source it wrote, counted from the files' footers; the delivery
+    is a copy of the lake write's files. Nothing is published until
+    the write has succeeded and its landed rows (an observation of the
+    write) equal the catalog's Σ n_records (ValueError naming both
     otherwise). Returns counts, ``n_quarantined`` being the records
     routed to the quarantine source. Raises ValueError, before any job
     or write, if ``batch_id`` does not match ``BATCH_ID``, or if
@@ -243,36 +257,22 @@ def commit_batch(
     for path in staged.values():
         shutil.rmtree(path, ignore_errors=True)
     try:
-        # the counts come from the writes themselves: the rows the lake
-        # write landed, and the catalog rows (one per source, n_records
-        # each), not from extra jobs over the batch
+        ingest_ts = dt.datetime.now(dt.timezone.utc)
         landed = Observation()
-        counts = Observation()
-        quarantined = F.when(F.col("source") == QUARANTINE_SOURCE, F.col("n_records"))
-        entries = build_catalog_entries(events, batch_id).observe(
-            counts,
-            F.coalesce(F.sum("n_records"), F.lit(0)).alias("n_events"),
-            F.count(F.lit(1)).alias("n_sources"),
-            F.coalesce(F.sum(quarantined), F.lit(0)).alias("n_quarantined"),
+        lake.write_partitioned(
+            events.observe(landed, F.count(F.lit(1)).alias("n_rows")), staged[lake_path]
         )
-        # sinks are looked up when called, so wrapped module attributes
-        # (tracing) still take effect
-        concurrently(
-            spark,
-            lambda: lake.write_partitioned(
-                events.observe(landed, F.count(F.lit(1)).alias("n_rows")), staged[lake_path]
-            ),
-            lambda: append_catalog(entries, staged[catalog_path]),
-        )
-        n = counts.get
+        entries = build_catalog_entries(staged[lake_path], batch_id, ingest_ts)
+        n_events = sum(e.n_records for e in entries)
         # a scan with no partitions never fires the lake's observation;
         # such a write leaves no data file
         n_landed = landed.get["n_rows"] if _holds_data(staged[lake_path]) else 0
-        if n_landed != n["n_events"]:
+        if n_landed != n_events:
             raise ValueError(
                 f"batch {batch_id!r} landed {n_landed} lake rows but its catalog "
-                f"records {n['n_events']}; nothing was published"
+                f"records {n_events}; nothing was published"
             )
+        append_catalog(entries, staged[catalog_path])
         if delivery_root:
             shutil.copytree(staged[lake_path], staged[delivery_root])
         for root in reversed(staged):
@@ -283,4 +283,9 @@ def commit_batch(
     finally:
         for path in staged.values():
             shutil.rmtree(path, ignore_errors=True)
-    return {**n, "batch_id": batch_id}
+    return {
+        "n_events": n_events,
+        "n_sources": len(entries),
+        "n_quarantined": sum(e.n_records for e in entries if e.source == QUARANTINE_SOURCE),
+        "batch_id": batch_id,
+    }

@@ -61,17 +61,18 @@ def write_partitioned(
 
     A REBALANCE on ``partition_col``, NOT repartition(partition_col)
     and NOT repartitionByRange(partition_col, order_col).
-    repartition hashes each source's entire batch through ONE task
-    (a hot source serializes the write — the straggler anti-pattern
-    write_day_partitioned's docstring calls out). Range partitioning
-    avoids that but first runs a sampling job over the input to find
-    its bounds: over an uncached input, such as ingest's parse of a
-    staging blob, that is a second parse. REBALANCE needs no sample:
-    AQE coalesces small shuffle partitions, so the file count stays
-    bounded (about one file per source for a small batch), and splits
-    one above the advisory size across several tasks, by map output,
-    so a hot source of a multi-file input is not one straggler. A
-    write with no shuffle at all would skip the exchange too, but
+    Range partitioning first runs a sampling job over the input to
+    find its bounds: over an uncached input, such as ingest's parse of
+    a staging blob, that is a second parse. REBALANCE needs no sample.
+    AQE coalesces its small shuffle partitions, so the file count stays
+    bounded, and splits one above the advisory size across several
+    tasks by map output, which repartition(partition_col), hashing a
+    source's whole batch to one task, cannot. For a small batch the
+    coalescing goes all the way: a 68,000-line staging blob (1.4 MB of
+    gzip) is written by ONE reduce task at local[4], which writes
+    every source's file in turn, so a hot source is no straggler only
+    because the whole write is one (ROADMAP: per-source write tasks).
+    A write with no shuffle at all would skip the exchange too, but
     writes one file per (input partition, source): a small-file cliff
     for multi-file inputs. The within-partition sort keeps each output
     file's ts min/max tight for row-group skipping."""
@@ -96,22 +97,24 @@ def read_lake(spark: SparkSession, path: str) -> DataFrame:
 _ESCAPED = re.compile(r"%([0-9A-Fa-f]{2})")
 
 
+def source_of(name: str) -> str | None:
+    """The source Spark reads from a ``source=`` directory name, None
+    for any other name. Spark escapes a partition value on write and
+    unescapes each ``%XX`` on read (distribution's module docstring);
+    this is that one unescaping rule."""
+    if not name.startswith("source="):
+        return None
+    return _ESCAPED.sub(lambda m: chr(int(m[1], 16)), name[len("source=") :])
+
+
 def source_dirs(root: str, source: str) -> list[str]:
     """The ``source=`` directories of ``root`` that Spark reads as
-    ``source``. Spark escapes a partition value on write and unescapes
-    each ``%XX`` on read (distribution's module docstring), so the
-    directories are found by listing the root and unescaping their
-    names the same way, never by building a path from the name."""
+    ``source``, found by listing the root and unescaping the names
+    (``source_of``), never by building a path from the name."""
     if not os.path.isdir(root):
         return []
     with os.scandir(root) as entries:
-        return sorted(
-            e.path
-            for e in entries
-            if e.is_dir()
-            and e.name.startswith("source=")
-            and _ESCAPED.sub(lambda m: chr(int(m[1], 16)), e.name[len("source=") :]) == source
-        )
+        return sorted(e.path for e in entries if e.is_dir() and source_of(e.name) == source)
 
 
 def data_files(directory: str) -> list[str]:

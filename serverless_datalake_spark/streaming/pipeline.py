@@ -9,8 +9,8 @@ Mapping (SURVEY.md §2a):
 * R3/R4 gzip + per-source prefix → partitioned Parquet sink;
 * R9/R10/R11 catalog append + fan-out → ``foreachBatch``: each
   micro-batch is recorded by ``ingest.commit_batch``, the batch
-  ingest's own commit (lake and catalog as concurrent staged jobs,
-  the delivery a copy of the lake files, published lake, delivery,
+  ingest's own commit (one staged lake write, the catalog rows and
+  the delivery taken from its files, published lake, delivery,
   catalog), into the same layout;
 * §1.4 at-least-once gap → ``withWatermark`` + ``dropDuplicates``
   makes delivery exactly-once downstream of the dedup state store;
@@ -65,17 +65,9 @@ def record_micro_batch(
 ) -> None:
     """E1's recorder for one micro-batch: ``ingest.commit_batch`` under
     the batch id ``b<batch_id, 12 digits>``, which a re-run of the
-    micro-batch shares. The micro-batch is pinned for the commit's two
-    concurrent jobs: unpersisted, each would re-run the whole batch
-    plan, JSON scan and stateful dedup included (the multi-sink
-    persist is the documented foreachBatch pattern)."""
-    batch = batch.persist()
-    try:
-        commit_batch(
-            batch.sparkSession, batch, lake_path, catalog_path, delivery_root, f"b{batch_id:012d}"
-        )
-    finally:
-        batch.unpersist()
+    micro-batch shares. The commit's lake write is the one job over the
+    micro-batch, so nothing is persisted for it."""
+    commit_batch(batch, lake_path, catalog_path, delivery_root, f"b{batch_id:012d}")
 
 
 def start_ingest_query(

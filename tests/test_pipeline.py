@@ -585,9 +585,9 @@ def _clear_job_group(sc) -> None:
 
 
 def test_concurrent_sinks_keep_the_callers_job_group(spark, paths):
-    """Every job that ingest_batch and replay run, on whatever thread,
-    carries the caller's job group, so it can be cancelled and
-    attributed with the caller's other work."""
+    """Every job that ingest_batch and replay run carries the caller's
+    job group, so it can be cancelled and attributed with the caller's
+    other work."""
     sc = spark.sparkContext
     _write_staging(paths["staging"], _mk_events(20))
     last = max((j.jobId() for j in _jobs_after(sc, -1)), default=-1)
@@ -612,7 +612,7 @@ def test_concurrent_sinks_keep_the_callers_job_group(spark, paths):
         _clear_job_group(sc)
     assert res == {"n_batches": 1, "n_events": 10}
     jobs = _jobs_after(sc, last)
-    assert len(jobs) >= 5  # ingest's lake write and catalog aggregate (two jobs each), replay's catalog selection
+    assert len(jobs) >= 3  # ingest's lake write (two jobs), replay's catalog selection
     assert sorted(j.jobId() for j in jobs) == sorted(
         j for j in sc.statusTracker().getJobIdsForGroup("g") if j > last
     )
@@ -702,10 +702,9 @@ def test_ingest_lake_failure_writes_no_catalog_or_delivery(spark, paths):
 
 
 def test_ingest_sink_failure_is_raised_after_the_other_sinks(spark, paths):
-    """A failing catalog write is raised only after the concurrent lake
-    write has finished: the staged lake rows are dropped unpublished,
-    nothing is delivered, no job is left running and nothing stays
-    persisted."""
+    """A failing catalog write, which follows the lake write, is raised
+    with the staged lake rows dropped unpublished: nothing is
+    delivered, no job is left running and nothing stays persisted."""
     sc = spark.sparkContext
     _write_staging(paths["staging"], _mk_events(10))
     pathlib.Path(paths["catalog"]).write_text("not a directory")
@@ -754,24 +753,15 @@ def test_ingest_rejects_unsafe_batch_ids(spark, paths):
         assert ingest.BATCH_ID.fullmatch(ok), ok
 
 
-def test_spark_threads_only_through_concurrently():
-    """Concurrent Spark actions go through ingest.concurrently, which
-    carries the caller's job group and tags into its threads; a bare
-    ThreadPoolExecutor or Thread elsewhere in the package would run
-    jobs outside them."""
+def test_package_starts_no_threads():
+    """The package runs its Spark actions on the caller's thread: a
+    ThreadPoolExecutor or Thread anywhere in it would run jobs outside
+    the caller's job group and tags, unless wrapped to carry them."""
     pkg = pathlib.Path(ingest.__file__).resolve().parents[1]
     offenders = []
     for path in sorted(pkg.rglob("*.py")):
-        tree = ast.parse(path.read_text(), str(path))
-        allowed = set()
-        if path.resolve() == pathlib.Path(ingest.__file__).resolve():
-            helper = next(
-                n for n in tree.body
-                if isinstance(n, ast.FunctionDef) and n.name == "concurrently"
-            )
-            allowed = {id(n) for n in ast.walk(helper)}
-        for node in ast.walk(tree):
-            if not isinstance(node, ast.Call) or id(node) in allowed:
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(node, ast.Call):
                 continue
             f = node.func
             name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
@@ -939,12 +929,10 @@ ADVERSARIAL_LINES = [
 
 
 def test_ingest_conservation_over_adversarial_lines(spark, paths):
-    """The lake's rows and the catalog's counts come from two scans of
-    the blob. Over malformed and odd lines they still agree, per source
+    """Ingest parses the blob once, and the catalog counts the lake
+    write's files. Over malformed and odd lines they agree, per source
     and the quarantine source included: lake rows = Σ catalog n_records
-    = delivered rows, and their total is the returned n_events. (A
-    catalog scan pruned to the routing column would not: it reads the
-    first line as all-null, the lake's full parse as a clicks row.)"""
+    = delivered rows, and their total is the returned n_events."""
     os.makedirs(paths["staging"], exist_ok=True)
     with gzip.open(os.path.join(paths["staging"], "part-0.json.gz"), "wt", newline="") as f:
         for e in _mk_events(6):
@@ -977,7 +965,7 @@ def test_ingest_count_mismatch_raises_and_publishes_nothing(spark, paths, monkey
     monkeypatch.setattr(
         ingest,
         "build_catalog_entries",
-        lambda events, batch_id: real(events, batch_id).where(F.col("source") != "tweets"),
+        lambda *args: [e for e in real(*args) if e.source != "tweets"],
     )
     _write_staging(paths["staging"], _mk_events(10))
     with pytest.raises(ValueError, match=r"landed 10 lake rows but its catalog records 5"):
@@ -989,10 +977,10 @@ def test_ingest_count_mismatch_raises_and_publishes_nothing(spark, paths, monkey
 
 
 def test_ingest_reads_the_staging_files_present_at_its_start(spark, paths, monkeypatch):
-    """Both of ingest's jobs scan one DataFrame, whose file list is
-    fixed when ingest reads the staging path: a blob that lands in
-    staging while the batch is being written reaches neither the lake
-    nor the catalog."""
+    """Ingest's lake write scans a DataFrame whose file list is fixed
+    when ingest reads the staging path: a blob that lands in staging
+    while the batch is being written reaches neither the lake nor the
+    catalog."""
     _write_staging(paths["staging"], _mk_events(10))
     later = _write_staging(paths["staging"] + "-later", _mk_events(7, start_id=100))
     real = lake.write_partitioned
@@ -1028,6 +1016,57 @@ def test_ingest_delivers_the_lake_files(spark, paths):
     for source in ("clicks", "tweets", ingest.QUARANTINE_SOURCE):
         in_lake = digests(paths["lake"], source)
         assert in_lake and digests(paths["delivery"], source) == in_lake, source
+
+
+def test_ingest_runs_only_the_lake_write(spark, paths, monkeypatch):
+    """Ingest parses a blob once: the staged lake write is its only
+    Spark work. The catalog rows come from the files that write left:
+    a source's n_records is the row count in its lake files' footers,
+    and its catalog directory is the lake's own, escaped name, which
+    the catalog reads back as the source."""
+    import pyarrow.parquet as pq
+
+    sc = spark.sparkContext
+    evs = _mk_events(12)
+    for i, e in enumerate(evs):
+        e["event_type"] = ("ads/click", "a:b", "clicks")[i % 3]
+    _write_staging(paths["staging"], evs)
+    real = lake.write_partitioned
+
+    def write_in_its_own_job_group(*args, **kwargs):
+        sc.setJobGroup("lake-write", "the lake write")
+        try:
+            real(*args, **kwargs)
+        finally:
+            sc.setJobGroup("ingest", "the rest of ingest")
+
+    monkeypatch.setattr(lake, "write_partitioned", write_in_its_own_job_group)
+    last = max((j.jobId() for j in _jobs_after(sc, -1)), default=-1)
+    sc.setJobGroup("ingest", "the rest of ingest")
+    try:
+        ingest.ingest_batch(
+            spark, paths["staging"], paths["lake"], paths["catalog"], paths["delivery"], "b0"
+        )
+    finally:
+        _clear_job_group(sc)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    group = sc.statusTracker().getJobIdsForGroup
+    assert [j for j in group("lake-write") if j > last]
+    assert [j for j in group("ingest") if j > last] == []
+    sources = ("ads/click", "a:b", "clicks")
+    footer_rows = {
+        s: sum(
+            pq.read_metadata(f).num_rows
+            for d in lake.source_dirs(paths["lake"], s)
+            for f in lake.data_files(d)
+        )
+        for s in sources
+    }
+    catalog = ingest.read_catalog(spark, paths["catalog"]).collect()
+    assert {r["source"]: r["n_records"] for r in catalog} == footer_rows == dict.fromkeys(sources, 4)
+    assert {r["source"]: r["file_key"] for r in catalog} == {s: f"{s}/b0.parquet" for s in sources}
+    names = {"source=ads%2Fclick", "source=a%3Ab", "source=clicks"}
+    assert set(os.listdir(paths["catalog"])) == set(os.listdir(paths["lake"])) == names
 
 
 def test_replay_into_a_streamed_delivery_root(spark, paths):
@@ -1075,7 +1114,7 @@ def test_streaming_count_mismatch_raises_and_publishes_nothing(spark, paths, mon
     monkeypatch.setattr(
         ingest,
         "build_catalog_entries",
-        lambda events, batch_id: real(events, batch_id).where(F.col("source") != "tweets"),
+        lambda *args: [e for e in real(*args) if e.source != "tweets"],
     )
     _write_staging(paths["staging"], _mk_events(10))
     batch = ingest.with_source(lake.read_json_events(spark, paths["staging"]), "event_type")
