@@ -797,21 +797,22 @@ def scan_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def txlog_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Log-based data skipping ACROSS a partition-layout change: the
-    table's first commit predates partition stats (legacy layout — no
-    per-file metadata), the second commit records file-level
-    event_type values in the log (txlog_write_partitioned). The read
-    prunes the FILE LIST from the log — legacy files are always read
-    (unprunable but correct), statted files only when their value
-    matches — which is Iceberg partition-evolution semantics: old
-    files stay readable under the new spec, new files skip. The
+    table's first commit predates partition values (legacy layout — no
+    per-file metadata), the second commit records each file's
+    event_type value v in the log as the zone map [v, v]
+    (txlog_write_partitioned). The read prunes the FILE LIST from the
+    log — legacy files are always read (unprunable but correct), the
+    others only when their value matches — which is Iceberg
+    partition-evolution semantics: old files stay readable under the
+    new spec, new files skip. The
     residual predicate then enforces exact semantics, so result
     equality against the plain filtered scan (the oracle) proves the
     prune is a sound superset while tests/test_txlog.py asserts it
     actually skips files.
 
     Scale shape: pruning happens at METADATA grain (the log replay) —
-    no data file is opened to decide; at 100 TB the log's stats
-    section is the manifest an object-store reader scans instead of
+    no data file is opened to decide; at 100 TB the log's zone maps
+    are the manifest an object-store reader scans instead of
     listing directories."""
     import uuid as _uuid
 
@@ -825,9 +826,9 @@ def txlog_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "event_type", "value"
     )
     path = _scratch(f"sdlspark_pp_{_uuid.uuid4().hex[:12]}")
-    # generation 1: pre-evolution commit, odd event_ids, NO stats
+    # generation 1: pre-evolution commit, odd event_ids, NO zone maps
     txlog_write(ev.where(F.col("event_id") % 2 == 1), path)
-    # generation 2: per-type files WITH log stats, even event_ids
+    # generation 2: per-type files with [v, v] zone maps, even event_ids
     txlog_write_partitioned(ev.where(F.col("event_id") % 2 == 0), path, "event_type")
     pruned = txlog_read_pruned(spark, path, "event_type", ["purchase", "signup"])
     return (
@@ -962,11 +963,12 @@ def join_dpp_runtime_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def txlog_zonemap_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MIN/MAX zone-map file skipping through the transaction log —
-    the step past txlog_partition_prune's single-value stats: the
-    write clusters rows with repartitionByRange(value), harvests each
-    file's [min, max] from the parquet FOOTERS (no data pages read),
-    and records them in the log entry; a range read then prunes the
-    file list by interval overlap before Spark opens anything. This
+    the step past txlog_partition_prune's single-value [v, v] zone
+    maps: the write clusters rows with repartitionByRange(value),
+    harvests each file's [min, max] from the parquet FOOTERS (no data
+    pages read), and records them in the log entry; a range read then
+    prunes the file list by interval overlap before Spark opens
+    anything. This
     is Delta/Iceberg column-statistics skipping (and the reason
     OPTIMIZE ZORDER exists: clustered layout == tight zone maps ==
     effective skipping). The residual predicate enforces exactness,

@@ -49,18 +49,12 @@ def check_constraints(df: DataFrame, checks: dict[str, str]) -> dict[str, int]:
     return {name: row[name] for name in checks if row[name] > 0}
 
 
-def write_checked(
-    df: DataFrame,
-    path: str,
-    checks: dict[str, str],
-    partition_col: str = "source",
-    order_col: str = "ts",
-    mode: str = "append",
-) -> None:
-    """Validate-then-write: the batch is checked BEFORE the writer
-    runs, so a violating batch leaves the table untouched (no partial
-    files, no cleanup). Raises ConstraintViolation listing every
-    failed constraint with its violating-row count.
+def write_checked(df: DataFrame, path: str, checks: dict[str, str]) -> None:
+    """Validate-then-write: the batch is checked BEFORE
+    ``lake.write_partitioned`` appends it, so a violating batch leaves
+    the table untouched (no partial files, no cleanup). Raises
+    ConstraintViolation listing every failed constraint with its
+    violating-row count.
 
     The validation scan and the write are two passes over the batch;
     at scale the batch is a micro-batch (bounded), and the guarantee —
@@ -77,8 +71,6 @@ def write_checked(
         violations = check_constraints(df, checks)
         if violations:
             raise ConstraintViolation(violations)
-        lake.write_partitioned(
-            df, path, partition_col=partition_col, order_col=order_col, mode=mode
-        )
+        lake.write_partitioned(df, path)
     finally:
         df.unpersist()

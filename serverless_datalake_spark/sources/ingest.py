@@ -190,7 +190,7 @@ def fan_out(events: DataFrame, delivery_root: str) -> None:
 
 def _holds_data(path: str) -> bool:
     """Whether a finished write left a data file under ``path``."""
-    return any(n.endswith(".parquet") for _, _, names in os.walk(path) for n in names)
+    return bool(lake.data_files(path))
 
 
 def ingest_batch(

@@ -11,8 +11,8 @@ The reference stores gzip JSON blobs under one S3 prefix per source
   (``sortWithinPartitions``) so Parquet min/max row-group stats make
   the BETWEEN half a skipping scan — the Spark analog of DynamoDB's
   sort key (SURVEY.md §4);
-* compression is a writer option (GZIP in the reference; snappy
-  default here — better scan speed, similar ratio for Parquet).
+* the files are snappy-compressed (GZIP in the reference; snappy
+  scans faster at a similar ratio for Parquet).
 
 The schema is part of the contract. The engine fixes the shape of its
 own tables (the lake and the delivery root hold ``LAKE_SCHEMA`` rows,
@@ -29,6 +29,7 @@ from __future__ import annotations
 import json as _json
 import os
 import re
+from decimal import Decimal
 
 import pandas as pd  # module-level: pandas-UDF hints resolve from module globals
 
@@ -49,24 +50,18 @@ CORRUPT_RECORD = "_corrupt_record"
 STAGING_JSON_SCHEMA = f"{EVENTS_JSON_SCHEMA}, {CORRUPT_RECORD} STRING"
 
 
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_col: str = "source",
-    order_col: str = "ts",
-    mode: str = "append",
-    compression: str = "snappy",
-) -> None:
-    """Partitioned, sorted, compressed append — R3+R4 in one writer.
+def write_partitioned(df: DataFrame, path: str) -> None:
+    """Partitioned, sorted, snappy-compressed append — R3+R4 in one
+    writer: ``partitionBy("source")``, each file sorted on ``ts``.
 
-    A REBALANCE on ``partition_col``, NOT repartition(partition_col)
-    and NOT repartitionByRange(partition_col, order_col).
+    A REBALANCE on ``source``, NOT repartition("source") and NOT
+    repartitionByRange("source", "ts").
     Range partitioning first runs a sampling job over the input to
     find its bounds: over an uncached input, such as ingest's parse of
     a staging blob, that is a second parse. REBALANCE needs no sample.
     AQE coalesces its small shuffle partitions, so the file count stays
     bounded, and splits one above the advisory size across several
-    tasks by map output, which repartition(partition_col), hashing a
+    tasks by map output, which repartition("source"), hashing a
     source's whole batch to one task, cannot. For a small batch the
     coalescing goes all the way: a 68,000-line staging blob (1.4 MB of
     gzip) is written by ONE reduce task at local[4], which writes
@@ -77,11 +72,11 @@ def write_partitioned(
     for multi-file inputs. The within-partition sort keeps each output
     file's ts min/max tight for row-group skipping."""
     (
-        df.hint("rebalance", partition_col)
-        .sortWithinPartitions(partition_col, order_col)
-        .write.mode(mode)
-        .option("compression", compression)
-        .partitionBy(partition_col)
+        df.hint("rebalance", "source")
+        .sortWithinPartitions("source", "ts")
+        .write.mode("append")
+        .option("compression", "snappy")
+        .partitionBy("source")
         .parquet(path)
     )
 
@@ -126,6 +121,53 @@ def data_files(directory: str) -> list[str]:
         dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
         out += [os.path.join(base, n) for n in names if not n.startswith(("_", "."))]
     return sorted(out)
+
+
+def column_range(footer, col: str):
+    """``(min, max, has_nulls)`` of column ``col`` over every row group
+    of a Parquet footer (``pyarrow.parquet.FileMetaData``), else None:
+    for a file with no row groups, no leaf named ``col``, or a row
+    group whose statistics lack min/max. The one reader of footer
+    statistics (the txlog's zone maps, replay's batch classifier).
+
+    The column is found by its LEAF path, not its Arrow field index: a
+    struct or array column before it makes the two numberings diverge,
+    and the wrong column's range would prune files that hold matching
+    rows. Spark writes a precision <= 18 decimal as INT32/INT64 (larger
+    ones as FIXED_LEN_BYTE_ARRAY), where pyarrow's ``min``/``max``
+    raise; those are decoded from the raw unscaled values. A row group
+    without a null count counts as holding nulls."""
+    leaves = {footer.schema.column(i).path: i for i in range(footer.num_columns)}
+    ci = leaves.get(col)
+    if ci is None or footer.num_row_groups == 0:
+        return None
+    sch_col = footer.schema.column(ci)
+    lo = hi = None
+    has_nulls = False
+    for g in range(footer.num_row_groups):
+        st = footer.row_group(g).column(ci).statistics
+        if st is None or not st.has_min_max:
+            return None
+        try:
+            mn, mx = st.min, st.max
+        except NotImplementedError:
+            lt = sch_col.logical_type
+            if lt is None or lt.type != "DECIMAL":
+                return None
+
+            def dec(raw):
+                unscaled = (
+                    int.from_bytes(bytes(raw), "big", signed=True)
+                    if isinstance(raw, (bytes, bytearray))
+                    else int(raw)
+                )
+                return Decimal(unscaled).scaleb(-sch_col.scale)
+
+            mn, mx = dec(st.min_raw), dec(st.max_raw)
+        lo = mn if lo is None or mn < lo else lo
+        hi = mx if hi is None or mx > hi else hi
+        has_nulls = has_nulls or not st.has_null_count or st.null_count > 0
+    return lo, hi, has_nulls
 
 
 def read_json_events(spark: SparkSession, path: str) -> DataFrame:

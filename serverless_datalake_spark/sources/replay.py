@@ -104,23 +104,14 @@ def _batch_id_keys(catalog_rows: DataFrame) -> DataFrame:
 
 def _sole_batch(footer: pq.FileMetaData) -> str | None:
     """The batch whose rows alone a lake file holds, read off its
-    Parquet footer: every row group's ``batch_id`` statistics have
-    min = max = that id and no nulls. None for a file that mixes
-    batches (compaction output) or has no ``batch_id`` statistics."""
-    leaves = [footer.schema.column(i).path for i in range(footer.num_columns)]
-    if "batch_id" not in leaves:
+    Parquet footer (``lake.column_range``): its ``batch_id`` min equals
+    its max and it has no nulls. None for a file that mixes batches
+    (compaction output) or has no ``batch_id`` statistics."""
+    rng = lake.column_range(footer, "batch_id")
+    if rng is None:
         return None
-    col = leaves.index("batch_id")
-    ids = set()
-    for g in range(footer.num_row_groups):
-        st = footer.row_group(g).column(col).statistics
-        if st is None or not (st.has_min_max and st.has_null_count) or st.null_count:
-            return None
-        ids.update((st.min, st.max))
-    if len(ids) != 1:
-        return None
-    (only,) = ids
-    return only if isinstance(only, str) else None
+    lo, hi, has_nulls = rng
+    return lo if lo == hi and not has_nulls and isinstance(lo, str) else None
 
 
 def replay(

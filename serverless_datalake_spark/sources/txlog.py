@@ -15,11 +15,15 @@ Entry fields (one JSON file per version, named by its 8-digit version):
 
   version, adds, removes   the version and the data files it makes
                            live / retires (removes apply first)
-  stats                    {file: {part_col: value}} — the single
-                           partition value of each added file
-                           (txlog_write_partitioned)
-  zonemaps                 {file: {col: [min, max]}} — each added
-                           file's footer min/max (txlog_write_zonemapped)
+  zonemaps                 {file: {col: [min, max]}} — the one
+                           file-statistics format: each added file's
+                           footer min/max (txlog_write_zonemapped), or
+                           its single partition value v as [v, v]
+                           (txlog_write_partitioned); both prunes
+                           decide through _may_overlap. A `stats`
+                           field a log written by an older version
+                           carries is ignored, so its files are read
+                           unpruned
   batch_id, txn_app        a streaming sink's replay marker; txn_app
                            only for an app-scoped writer
   checkpoint, batch_ids,   a vacuum checkpoint: the squashed history's
@@ -30,7 +34,7 @@ Entry fields (one JSON file per version, named by its 8-digit version):
                            vacuum at its latest value
 
 One replay: `_snapshot` walks the entries to a version and returns
-each live file with the stats and zone maps it was added with;
+each live file with the zone map it was added with;
 live_files, both pruned listings, vacuum's checkpoint and matview's
 file-change feed all read it. A version that a vacuum squashed away
 raises ValueError rather than replaying to an empty set. One commit
@@ -106,19 +110,19 @@ from decimal import Decimal, InvalidOperation
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from serverless_datalake_spark.sources import lake
+
 
 def _stat_repr(v):
-    """Canonical JSON-safe form for a partition-stat value. JSON-native
-    scalars pass through (None stays null — the explicit NULL-partition
-    stat); everything else (date, Decimal, bytes, ...) becomes a
-    deterministic string so _commit's json.dump can never raise after
-    data files are already on disk. Membership checks canonicalize the
-    probe values with the same function, so pruning stays consistent.
-    Decimals get a CANONICAL plain form (1.00 and 1 collapse to "1")
-    so trailing-zero representation differences can never defeat an
-    equality prune; ORDERED comparisons on stats never happen on these
-    strings directly — see _ord_pair, which compares numerics in the
-    Decimal domain ("150" < "99" lexicographically; the round-5
+    """Canonical JSON-safe form for a zone-map bound. JSON-native
+    scalars pass through; everything else (date, Decimal, bytes, ...)
+    becomes a deterministic string so _commit's json.dump can never
+    raise after data files are already on disk. _ord_pair
+    canonicalizes the probe values with the same function, so pruning
+    stays consistent. Decimals get a CANONICAL plain form (1.00 and 1
+    collapse to "1"), but ORDERED comparisons never happen on these
+    strings directly — _ord_pair compares numerics in the Decimal
+    domain ("150" < "99" lexicographically; the round-5
     advisor's zone-map finding)."""
     if v is None or isinstance(v, (bool, int, float, str)):
         return v
@@ -221,36 +225,18 @@ def _ord_pair(stat, probe):
     return None
 
 
-def _stat_matches(stored, probe) -> bool:
-    """Equality for a membership prune: exact canonical-repr match,
-    plus numeric-domain equality so int/float/Decimal flavors of the
-    same value can never cause a false MISS (a false miss silently
-    drops committed data; a false match only reads one extra file).
-    Temporal-shaped strings compare through _temporal_key's canonical
-    datetime form — a DATE probe against a datetime-repr stat (or
-    vice versa) must match its midnight value, and a temporal/plain
-    format mix is ambiguous → treated as a match (file read)."""
-    pr = _stat_repr(probe)
-    if stored == pr:
-        return True
-    if isinstance(stored, str) and isinstance(pr, str):
-        st, pt = _temporal_key(stored), _temporal_key(pr)
-        if st is not None and pt is not None:
-            return st == pt
-        if (st is None) != (pt is None):
-            return True  # mixed formats: ambiguous — keep the file
-    pn = _numview(probe)
-    if pn is None:
-        return False
-    sn = _numview(stored)
-    if sn is None and isinstance(stored, str):
-        try:
-            sn = Decimal(stored)
-        except InvalidOperation:
-            return False
-        if not sn.is_finite():
-            return False  # 'sNaN' == would raise; NaN never equals
-    return sn is not None and sn == pn
+def _may_overlap(zonemap: list, lo, hi) -> bool:
+    """Whether a file whose zone map for a column is `zonemap` ([min,
+    max]) may hold a value in [lo, hi]: False only when _ord_pair can
+    order the file's max below lo or its min above hi. An equality
+    probe is the range [v, v]. Ambiguity keeps the file."""
+    below = _ord_pair(zonemap[1], lo)  # file_max vs query lo
+    above = _ord_pair(zonemap[0], hi)  # file_min vs query hi
+    return not (
+        (below is not None and below[0] < below[1])
+        or (above is not None and above[0] > above[1])
+    )
+
 
 _LOG_DIR = "_txlog"
 # Committed entries are EXACTLY 8-digit names. In-flight temp files
@@ -360,12 +346,12 @@ def _commit(
 
 def _snapshot(
     path: str, version: int | None = None, entries: list[dict] | None = None
-) -> dict[str, dict]:
+) -> dict[str, dict | None]:
     """THE replay: walk the log to `version` (default: head) and return
-    {live file: {"stats": …, "zonemaps": …}} — each file with the
-    partition stats and zone map (None when absent) it was added with,
-    so a remove drops both. Pass `entries` to replay an already-loaded
-    log instead of re-reading every entry file.
+    {live file: zone map} — each file with the {col: [min, max]} it
+    was added with (None when absent), so a remove drops it too. Pass
+    `entries` to replay an already-loaded log instead of re-reading
+    every entry file.
 
     A version in [0, first entry) was squashed by a vacuum: raise
     rather than replay to an empty set, which a reader would take for
@@ -385,9 +371,9 @@ def _snapshot(
             break
         for r in e["removes"]:
             files.pop(r, None)
-        stats, zonemaps = e.get("stats") or {}, e.get("zonemaps") or {}
+        zonemaps = e.get("zonemaps") or {}
         for a in e["adds"]:
-            files[a] = {"stats": stats.get(a), "zonemaps": zonemaps.get(a)}
+            files[a] = zonemaps.get(a)
     return files
 
 
@@ -396,17 +382,6 @@ def live_files(
 ) -> list[str]:
     """The file set of `version` (default: head), sorted; see _snapshot."""
     return sorted(_snapshot(path, version, entries))
-
-
-def _list_parquet(batch_dir: str) -> list[str]:
-    """The adds of one written batch: every *.parquet file under the
-    dir (one contract, shared by every write path)."""
-    return sorted(
-        os.path.join(d, n)
-        for d, _dirs, names in os.walk(batch_dir)
-        for n in names
-        if n.endswith(".parquet")
-    )
 
 
 def _commit_next(
@@ -421,8 +396,9 @@ def _commit_next(
     version. Reads the head, checks `expected_head`, lets
     `write(batch_dir, live)` put the batch's data files under
     data/v{version}-[tag-]<uuid> (`live`: the head's sorted file set;
-    a dict it returns joins the entry, e.g. per-file stats), and
-    publishes one entry adding every parquet file written there.
+    a dict it returns joins the entry, e.g. per-file zone maps), and
+    publishes one entry adding every data file written there
+    (lake.data_files).
     `overwrite` also removes every file live at the head. `write=None`
     is a metadata-only commit."""
     if mode not in ("append", "overwrite"):
@@ -441,7 +417,7 @@ def _commit_next(
         name = f"v{version}-{tag + '-' if tag else ''}{uuid.uuid4().hex[:8]}"
         batch_dir = os.path.join(path, "data", name)
         entry_extra.update(write(batch_dir, live) or {})
-        adds = _list_parquet(batch_dir)
+        adds = lake.data_files(batch_dir)
     _commit(path, version, adds, live if mode == "overwrite" else [], entry_extra)
     return version
 
@@ -672,9 +648,9 @@ def txlog_vacuum(path: str, keep_versions: int = 1) -> list[str]:
     # whose horizon entry lacks the base adds. The checkpoint is
     # replay-equivalent even while older entries still exist: it
     # removes every pre-horizon add that is not in the base set, and
-    # re-adds the base files with the stats and zone maps the replay
-    # kept for them (dropping those disabled skipping for every
-    # surviving file, round-6 review finding).
+    # re-adds the base files with the zone maps the replay kept for
+    # them (dropping those disabled skipping for every surviving file,
+    # round-6 review finding).
     squashed = [e for e in entries if e["version"] <= horizon]
     pre_adds = {a for e in squashed for a in e["adds"]}
     # every later add is live at its own version, so only pre-horizon
@@ -702,16 +678,15 @@ def txlog_vacuum(path: str, keep_versions: int = 1) -> list[str]:
     # refresh again)
     _structural = {
         "version", "adds", "removes", "checkpoint", "batch_id",
-        "batch_ids", "txn_app", "txn_markers", "stats", "zonemaps",
+        "batch_ids", "txn_app", "txn_markers", "zonemaps",
     }
     for e in squashed:  # ascending version order: later wins
         for k, v in e.items():
             if k not in _structural:
                 ck[k] = v
-    for field in ("stats", "zonemaps"):
-        kept = {f: m[field] for f, m in sorted(base.items()) if m[field] is not None}
-        if kept:
-            ck[field] = kept
+    zonemaps = {f: zm for f, zm in sorted(base.items()) if zm is not None}
+    if zonemaps:
+        ck["zonemaps"] = zonemaps
     p0 = os.path.join(_log_path(path), f"{horizon:08d}.json")
     tmp = os.path.join(_log_path(path), f".tmp-ck-{uuid.uuid4().hex}.json")
     with open(tmp, "w") as f:
@@ -776,20 +751,23 @@ def txlog_history(spark: SparkSession, path: str) -> DataFrame:
 def txlog_write_partitioned(
     df: DataFrame, path: str, part_col: str, mode: str = "append"
 ) -> int:
-    """Commit df with FILE-LEVEL PARTITION STATS in the log entry —
+    """Commit df with FILE-LEVEL PARTITION VALUES in the log entry —
     the Delta/Iceberg data-skipping model: files stay anonymous and
-    immutable, but the log records each file's single value of
-    `part_col`, so a reader can prune the file LIST instead of
-    relying on directory layout. Because the stats live per-entry,
-    the partition column can change across commits (partition
+    immutable, but the log records each file's single value v of
+    `part_col` as the zone map [v, v] (a range whose min equals its
+    max), so a reader can prune the file LIST instead of relying on
+    directory layout. Because the zone maps live per-entry, the
+    partition column can change across commits (partition
     EVOLUTION): files committed under an older layout simply carry no
-    stat for the new column and are never pruned — readable, just not
-    skippable, which is exactly Iceberg's evolution semantics.
+    zone map for the new column and are never pruned — readable, just
+    not skippable, which is exactly Iceberg's evolution semantics.
 
     One data dir per distinct value keeps each file single-valued;
-    the per-value loop writes sequentially (fine for low-cardinality
-    partition columns, which is the only kind you should partition
-    by — see audit_partition_skew)."""
+    every file of a value's slice gets its zone map, Spark's empty
+    part file included. A NULL slice gets none, so every pruned read
+    reads it. The per-value loop writes sequentially (fine for
+    low-cardinality partition columns, which is the only kind you
+    should partition by — see audit_partition_skew)."""
 
     def write(batch_dir: str, _live: list[str]) -> dict:
         # PIN the batch across the distinct-collect and the per-value
@@ -801,39 +779,56 @@ def txlog_write_partitioned(
         pinned = df.persist()
         try:
             values = [r[0] for r in pinned.select(part_col).distinct().collect()]
-            stats: dict[str, dict] = {}
+            zonemaps: dict[str, dict] = {}
             for v in sorted(values, key=str):
                 vdir = os.path.join(batch_dir, f"pv-{uuid.uuid4().hex[:8]}")
                 # eqNullSafe so a NULL partition value becomes its own
-                # file with an explicit null stat (Delta/Iceberg route
-                # NULLs to a default partition; dropping them would be
-                # silent data loss).
-                part = pinned.where(pinned[part_col].eqNullSafe(F.lit(v)))
-                part.write.mode("error").parquet(vdir)
-                for fp in _list_parquet(vdir):
-                    stats[fp] = {part_col: _stat_repr(v)}
+                # file (Delta/Iceberg route NULLs to a default
+                # partition; dropping them would be silent data loss).
+                # A NaN slices by isnan: over the persisted frame
+                # `x <=> NaN` matches no row
+                if isinstance(v, float) and math.isnan(v):
+                    in_slice = F.isnan(pinned[part_col])
+                else:
+                    in_slice = pinned[part_col].eqNullSafe(F.lit(v))
+                pinned.where(in_slice).write.mode("error").parquet(vdir)
+                if v is not None:
+                    r = _stat_repr(v)
+                    for fp in lake.data_files(vdir):
+                        zonemaps[fp] = {part_col: [r, r]}
         finally:
             pinned.unpersist()
-        return {"stats": stats}
+        return {"zonemaps": zonemaps}
 
     return _commit_next(path, write, mode)
+
+
+def _pruned(
+    path: str, col: str, ranges: list[tuple], version: int | None
+) -> tuple[list[str], int]:
+    """(files of the replayed snapshot that have no zone map for `col`
+    or whose zone map may overlap one of `ranges`, total_live)."""
+    snap = _snapshot(path, version)
+    keep = [
+        f
+        for f, zms in sorted(snap.items())
+        if (zm := (zms or {}).get(col)) is None
+        or any(_may_overlap(zm, lo, hi) for lo, hi in ranges)
+    ]
+    return keep, len(snap)
 
 
 def live_files_pruned(
     path: str, part_col: str, values: list, version: int | None = None
 ) -> tuple[list[str], int]:
-    """(files of the replayed snapshot whose recorded `part_col` is in
-    `values` PLUS every file with no stat for that column,
-    total_live_count). Unstatted files must be read — pruning is an
-    optimization, never a correctness filter."""
-    snap = _snapshot(path, version)
-    keep = [
-        f
-        for f, meta in sorted(snap.items())
-        if part_col not in (meta["stats"] or {})
-        or any(_stat_matches(meta["stats"][part_col], v) for v in values)
-    ]
-    return keep, len(snap)
+    """(files of the replayed snapshot whose zone map for `part_col`
+    may overlap [v, v] for some v in `values` PLUS every file with no
+    zone map for that column, total_live_count). Files without one
+    must be read — pruning is an optimization, never a correctness
+    filter. So a NULL-slice file (it has none) is read by every pruned
+    read, and _ord_pair's abstention keeps a file whose value is a
+    non-numeric string when probed with a number, and a NaN file."""
+    return _pruned(path, part_col, [(v, v) for v in values], version)
 
 
 def txlog_read_pruned(
@@ -841,10 +836,10 @@ def txlog_read_pruned(
     version: int | None = None,
 ) -> DataFrame:
     """Snapshot read touching only files that can contain
-    `part_col IN values` per the log's file stats (plus unstatted
-    legacy files). Callers still apply the residual predicate — the
-    prune is a superset guarantee, identical to how partition pruning
-    composes with filters in any lakehouse reader."""
+    `part_col IN values` per the log's zone maps (plus files with
+    none, e.g. legacy ones). Callers still apply the residual
+    predicate — the prune is a superset guarantee, identical to how
+    partition pruning composes with filters in any lakehouse reader."""
     return _read_files(
         spark, path, live_files_pruned(path, part_col, values, version)[0], version
     )
@@ -854,83 +849,34 @@ def txlog_write_zonemapped(
     df: DataFrame, path: str, stat_cols: list[str], mode: str = "append"
 ) -> int:
     """Commit df with per-file MIN/MAX ZONE MAPS for `stat_cols` in
-    the log entry — the Delta/Iceberg file-statistics model one step
-    past txlog_write_partitioned's single-value stats: files hold
-    arbitrary value ranges, and a range predicate prunes the file
-    LIST by [min, max] overlap. Stats are harvested from the parquet
-    FOOTERS after the write (pyarrow metadata read — no data pages
-    touched), so the stats are exactly what the files contain
-    regardless of task-level row distribution.
+    the log entry — the Delta/Iceberg file-statistics model: files
+    hold arbitrary value ranges, and a range predicate prunes the
+    file LIST by [min, max] overlap. Zone maps are harvested from the
+    parquet FOOTERS after the write (lake.column_range — no data pages
+    touched), so they are exactly what the files contain regardless of
+    task-level row distribution. A column column_range cannot read
+    (nested, undecodable, no statistics) leaves the file without a
+    zone map for it, so it is always read.
 
     Pair with a repartitionByRange(stat_col) before writing to make
     the zone maps tight (clustered layout == effective skipping —
     the same reason Delta OPTIMIZE ZORDER exists)."""
     import pyarrow.parquet as pq
 
-    def _footer_minmax(st, sch_col):
-        """(min, max) from a column-chunk Statistics, decoding logical
-        types pyarrow's stats cast doesn't implement: Spark writes
-        precision≤18 decimals as INT32/INT64 physical (and larger ones
-        as FLBA) and `st.min` raises ArrowNotImplementedError there —
-        the raw unscaled value is still in min_raw/max_raw. Undecodable
-        stats return (None, None) → file committed unstatted → always
-        read (prune is an optimization, never a correctness filter)."""
-        try:
-            return st.min, st.max
-        except NotImplementedError:
-            pass
-        lt = sch_col.logical_type
-        if lt is not None and lt.type == "DECIMAL":
-
-            def dec(raw):
-                unscaled = (
-                    int.from_bytes(bytes(raw), "big", signed=True)
-                    if isinstance(raw, (bytes, bytearray))
-                    else int(raw)
-                )
-                return Decimal(unscaled).scaleb(-sch_col.scale)
-
-            return dec(st.min_raw), dec(st.max_raw)
-        return None, None
-
     def write(batch_dir: str, _live: list[str]) -> dict:
         df.write.mode("error").parquet(batch_dir)
-        stats: dict[str, dict] = {}
-        for fp in _list_parquet(batch_dir):
-            md = pq.read_metadata(fp)
-            # index by parquet LEAF path, not Arrow top-level field
-            # index: a struct/array column preceding the stat column
-            # makes the two numbering schemes diverge, and
-            # row_group().column(ci) indexes leaves — the wrong column's
-            # min/max would be logged and later prune files that DO
-            # contain matching rows (round-6 review). Top-level scalar
-            # columns have path_in_schema == their name; nested stat
-            # columns simply find no leaf and stay unstatted.
-            leaf_index = {
-                md.schema.column(i).path: i for i in range(md.num_columns)
+        zonemaps: dict[str, dict] = {}
+        for fp in lake.data_files(batch_dir):
+            footer = pq.read_metadata(fp)
+            ranges = {col: lake.column_range(footer, col) for col in stat_cols}
+            zm = {
+                col: [_stat_repr(rng[0]), _stat_repr(rng[1])]
+                for col, rng in ranges.items()
+                if rng is not None
             }
-            fstats: dict[str, list] = {}
-            for col in stat_cols:
-                ci = leaf_index.get(col)
-                if ci is None:
-                    continue
-                lo = hi = None
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(ci).statistics
-                    if st is None or not st.has_min_max:
-                        lo = hi = None
-                        break
-                    mn, mx = _footer_minmax(st, md.schema.column(ci))
-                    if mn is None:
-                        lo = hi = None
-                        break
-                    lo = mn if lo is None or mn < lo else lo
-                    hi = mx if hi is None or mx > hi else hi
-                if lo is not None:
-                    fstats[col] = [_stat_repr(lo), _stat_repr(hi)]
-            if fstats:
-                stats[fp] = fstats
-        return {"zonemaps": stats}
+            if zm:
+                zonemaps[fp] = zm
+        return {"zonemaps": zonemaps}
 
     return _commit_next(path, write, mode)
 
@@ -939,23 +885,10 @@ def live_files_zonemap_pruned(
     path: str, col: str, lo, hi, version: int | None = None
 ) -> tuple[list[str], int]:
     """(files of the replayed snapshot whose [min, max] for `col`
-    OVERLAPS [lo, hi] PLUS every file with no zone map for that
-    column, total_live). Unstatted files must be read — skipping is an
-    optimization, never a correctness filter."""
-    snap = _snapshot(path, version)
-    keep = []
-    for f, meta in sorted(snap.items()):
-        zm = (meta["zonemaps"] or {}).get(col)
-        disjoint = False
-        if zm is not None:
-            below = _ord_pair(zm[1], lo)  # file_max vs query lo
-            above = _ord_pair(zm[0], hi)  # file_min vs query hi
-            disjoint = (below is not None and below[0] < below[1]) or (
-                above is not None and above[0] > above[1]
-            )
-        if not disjoint:
-            keep.append(f)
-    return keep, len(snap)
+    may overlap [lo, hi] PLUS every file with no zone map for that
+    column, total_live). Files without one must be read — skipping is
+    an optimization, never a correctness filter."""
+    return _pruned(path, col, [(lo, hi)], version)
 
 
 def txlog_read_zonemap(
@@ -963,10 +896,10 @@ def txlog_read_zonemap(
     version: int | None = None,
 ) -> DataFrame:
     """Snapshot read touching only files whose zone map can contain
-    `col BETWEEN lo AND hi` (plus unstatted legacy files). Callers
-    still apply the residual predicate — the skip is a superset
-    guarantee, exactly how min/max pruning composes with filters in
-    Delta/Iceberg readers."""
+    `col BETWEEN lo AND hi` (plus files with none, e.g. legacy ones).
+    Callers still apply the residual predicate — the skip is a
+    superset guarantee, exactly how min/max pruning composes with
+    filters in Delta/Iceberg readers."""
     return _read_files(
         spark, path, live_files_zonemap_pruned(path, col, lo, hi, version)[0], version
     )

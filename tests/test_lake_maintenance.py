@@ -11,7 +11,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from serverless_datalake_spark.sources import bucketed, ingest, maintenance
+from serverless_datalake_spark.sources import bucketed, ingest, lake, maintenance
 from serverless_datalake_spark.tables import load_table
 
 
@@ -190,10 +190,13 @@ def test_replay_survives_compaction(spark, tmp_path):
 
     maintenance.compact_partition(spark, lake_path, "clicks")
     footers = {
-        os.path.basename(f): replay._sole_batch(pq.read_metadata(f))
+        os.path.basename(f): pq.read_metadata(f)
         for f in glob.glob(os.path.join(lake_path, "source=clicks", "*.parquet"))
     }
-    assert set(footers.values()) == {None, "b3"}, footers
+    # the compacted file's batch_id range spans b0..b2; b3's is [b3, b3]
+    ranges = {lake.column_range(m, "batch_id") for m in footers.values()}
+    assert ranges == {("b0", "b2", False), ("b3", "b3", False)}, ranges
+    assert {replay._sole_batch(m) for m in footers.values()} == {None, "b3"}
 
     ingest_ts = {
         r["file_key"].split("/")[-1].split(".")[0]: r["ingest_ts"]

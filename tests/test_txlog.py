@@ -584,9 +584,10 @@ def test_partition_stats_survive_removes(spark, sf_dir, tmp_path):
 
 def test_partition_stats_null_and_nonjson_values(spark, tmp_path):
     """NULL partition values must be committed (not silently dropped
-    by null-unsafe equality) with an explicit null stat, and non-JSON
-    partition types (date) must serialize in the log entry without
-    raising after data files are already written."""
+    by null-unsafe equality), with no zone map so every pruned read
+    reads them, and non-JSON partition types (date) must serialize in
+    the log entry without raising after data files are already
+    written."""
     import datetime
 
     from pyspark.sql import functions as F
@@ -604,7 +605,7 @@ def test_partition_stats_null_and_nonjson_values(spark, tmp_path):
     txlog_write_partitioned(df, path, "k")
     # no data loss: NULL-keyed rows are committed
     assert txlog_read(spark, path).count() == 4
-    # the NULL partition prunes like any other value
+    # the NULL slice has no zone map: a pruned read keeps it
     nulls = txlog_read_pruned(spark, path, "k", [None])
     assert sorted(r.id for r in nulls.where(F.col("k").isNull()).collect()) == [2, 4]
 
@@ -616,6 +617,54 @@ def test_partition_stats_null_and_nonjson_values(spark, tmp_path):
     txlog_write_partitioned(dd, path2, "d")  # json.dump must not raise
     got = txlog_read_pruned(spark, path2, "d", [datetime.date(2024, 1, 2)])
     assert [r.id for r in got.where(F.col("d") == "2024-01-02").collect()] == [2]
+
+
+def test_partition_stats_nan_value_round_trips(spark, tmp_path):
+    """A NaN partition value is its own slice: every row is committed
+    (over the persisted batch `x <=> NaN` matches no row, so the slice
+    is taken with isnan), and a pruned read for NaN finds its rows
+    (the file's zone map [NaN, NaN] is ambiguous, so it is kept)."""
+    import math
+
+    from serverless_datalake_spark.sources.txlog import (
+        txlog_read,
+        txlog_read_pruned,
+        txlog_write_partitioned,
+    )
+
+    path = str(tmp_path / "ppnan")
+    df = spark.createDataFrame(
+        [(1, 1.0), (2, float("nan")), (3, 2.0), (4, float("nan"))], "id int, x double"
+    )
+    txlog_write_partitioned(df, path, "x")
+    assert sorted(r.id for r in txlog_read(spark, path).collect()) == [1, 2, 3, 4]
+    got = txlog_read_pruned(spark, path, "x", [math.nan]).where(F.isnan("x"))
+    assert sorted(r.id for r in got.collect()) == [2, 4]
+
+
+def test_entry_with_retired_stats_field_reads_unpruned(spark, tmp_path):
+    """A log written before partition values became zone maps carries
+    them in a `stats` field. That field is ignored, so its files have
+    no zone map: every pruned read keeps them and reads every row."""
+    import json
+
+    path = str(tmp_path / "oldlog")
+    df = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "id int, k string")
+    txlog.txlog_write_partitioned(df, path, "k")
+    entry_path = os.path.join(path, "_txlog", "00000000.json")
+    with open(entry_path) as f:
+        entry = json.load(f)
+    entry["stats"] = {
+        fp: {"k": zm["k"][0]} for fp, zm in entry.pop("zonemaps").items()
+    }
+    with open(entry_path + ".new", "w") as f:
+        json.dump(entry, f)
+    os.replace(entry_path + ".new", entry_path)
+
+    files, total = txlog.live_files_pruned(path, "k", ["a"])
+    assert len(files) == total > 0
+    got = txlog.txlog_read_pruned(spark, path, "k", ["a"])
+    assert sorted(r.id for r in got.collect()) == [1, 2, 3]
 
 
 def test_zonemap_prune_skips_files_and_keeps_rows(spark, sf_dir, tmp_path):
@@ -677,13 +726,16 @@ def test_zonemap_and_membership_ordering_is_type_aware():
     from decimal import Decimal
 
     from serverless_datalake_spark.sources.txlog import (
+        _may_overlap,
         _ord_pair,
-        _stat_matches,
         _stat_repr,
     )
 
     def roundtrip(v):
         return json.loads(json.dumps(_stat_repr(v)))
+
+    def matches(stored, probe):  # a partition value's zone map vs [v, v]
+        return _may_overlap([stored, stored], probe, probe)
 
     # Decimal zone map [100, 150] vs probe range [99, 200]: overlaps
     zlo, zhi = roundtrip(Decimal("100")), roundtrip(Decimal("150"))
@@ -708,16 +760,16 @@ def test_zonemap_and_membership_ordering_is_type_aware():
 
     # membership: trailing-zero Decimal flavors are the same partition
     stored = roundtrip(Decimal("1.0"))
-    assert _stat_matches(stored, Decimal("1.00"))
-    assert _stat_matches(stored, Decimal("1"))
-    assert not _stat_matches(stored, Decimal("1.01"))
+    assert matches(stored, Decimal("1.00"))
+    assert matches(stored, Decimal("1"))
+    assert not matches(stored, Decimal("1.01"))
     # int-stored stat probed with a Decimal (and vice versa)
-    assert _stat_matches(7, Decimal("7"))
-    assert _stat_matches(roundtrip(Decimal("7")), 7)
-    # strings never numerically match a numeric probe's repr... but a
-    # numeric-looking VARCHAR value colliding with a number only KEEPS
-    # a file (conservative), which is the safe direction
-    assert not _stat_matches("abc", Decimal("5"))
+    assert matches(7, Decimal("7"))
+    assert matches(roundtrip(Decimal("7")), 7)
+    # a non-numeric VARCHAR value probed with a number cannot be
+    # ordered against it: the file is KEPT (conservative), which is
+    # the safe direction
+    assert matches("abc", Decimal("5"))
 
 
 def test_ord_pair_temporal_format_normalization():
@@ -929,8 +981,9 @@ def test_vacuum_checkpoint_preserves_zonemaps(spark, tmp_path):
 
 
 def test_vacuum_checkpoint_keeps_stats_and_zonemaps_together(spark, tmp_path):
-    """One checkpoint squashes files with partition stats AND files
-    with zone maps: each keeps its own map, and both prunes still skip."""
+    """One checkpoint squashes files with partition values AND files
+    with footer zone maps: both generations keep their own zone map
+    in its one `zonemaps` field, and both prunes still skip."""
     path = str(tmp_path / "t")
     parted = spark.range(0, 40).select(
         F.col("id"), F.pmod(F.col("id"), F.lit(2)).cast("string").alias("p")
@@ -947,7 +1000,9 @@ def test_vacuum_checkpoint_keeps_stats_and_zonemaps_together(spark, tmp_path):
     zm_before = txlog.live_files_zonemap_pruned(path, "id", 100, 150)
     txlog.txlog_vacuum(path, keep_versions=1)
     ck = txlog._entries(path)[0]
-    assert ck["checkpoint"] and set(ck["stats"]).isdisjoint(ck["zonemaps"])
+    assert ck["checkpoint"] and "stats" not in ck
+    # v0's files carry [p, p], v1's their footer range of id
+    assert {tuple(zm) for zm in ck["zonemaps"].values()} == {("p",), ("id",)}
     assert txlog.live_files_pruned(path, "p", ["0"]) == stats_before
     assert txlog.live_files_zonemap_pruned(path, "id", 100, 150) == zm_before
     assert len(stats_before[0]) < stats_before[1]
@@ -1010,12 +1065,13 @@ def test_temporal_fractional_zeros_canonicalize():
     the Decimal trailing-zero rule: numerically equal instants must
     match the membership prune and order equal in the zone map."""
     from serverless_datalake_spark.sources.txlog import (
+        _may_overlap,
         _ord_pair,
-        _stat_matches,
     )
 
-    assert _stat_matches("2024-01-05 00:00:00", "2024-01-05 00:00:00.000000")
-    assert _stat_matches("2024-01-05 00:00:00.500000", "2024-01-05 00:00:00.5")
+    t0, t5 = "2024-01-05 00:00:00", "2024-01-05 00:00:00.500000"
+    assert _may_overlap([t0, t0], "2024-01-05 00:00:00.000000", "2024-01-05 00:00:00.000000")
+    assert _may_overlap([t5, t5], "2024-01-05 00:00:00.5", "2024-01-05 00:00:00.5")
     p = _ord_pair("2024-01-05 00:00:00", "2024-01-05 00:00:00.000000")
     assert p is not None and p[0] == p[1]
     p2 = _ord_pair("2024-01-05 00:00:00.250000", "2024-01-05 00:00:00.5")

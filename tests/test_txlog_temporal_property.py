@@ -1,9 +1,10 @@
-"""Property tests for the txlog temporal stat comparators: whatever
-mix of date / naive-datetime / tz-aware-datetime / plain-string values
-lands in a zone map or membership stat, ordered and equality prunes
-must NEVER claim disjoint/mismatch when real datetime semantics say
-the file could hold matching rows (a false prune silently drops
-committed data; "ambiguous → keep" is always legal)."""
+"""Property tests for the txlog zone-map comparators: whatever mix of
+date / naive-datetime / tz-aware-datetime / plain-string values lands
+in a zone map, ordered and equality prunes must NEVER claim disjoint
+when real datetime semantics say the file could hold matching rows (a
+false prune silently drops committed data; "ambiguous → keep" is
+always legal). An equality prune is the range prune of a partition
+value's zone map [s, s] against the probe's [v, v]."""
 
 from __future__ import annotations
 
@@ -13,11 +14,17 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from serverless_datalake_spark.sources.txlog import (
+    _may_overlap,
     _ord_pair,
-    _stat_matches,
     _stat_repr,
     _temporal_key,
 )
+
+
+def _member(stored, probe) -> bool:
+    """live_files_pruned's rule for one value: the file's zone map
+    [stored, stored] may overlap [probe, probe]."""
+    return _may_overlap([stored, stored], probe, probe)
 
 # timestamps within a few years, second resolution (what fixtures use)
 _dts = st.datetimes(
@@ -55,10 +62,10 @@ def test_ord_pair_orders_like_real_datetimes(stat, probe):
 @settings(max_examples=300, deadline=None)
 def test_stat_matches_never_false_misses(stat, probe):
     """Membership prune: if the stored value and the probe denote the
-    SAME instant (date == its midnight datetime), _stat_matches must
+    SAME instant (date == its midnight datetime), _member must
     say True — a False here prunes a file that holds matching rows."""
     if _as_dt(stat) == _as_dt(probe):
-        assert _stat_matches(_stat_repr(stat), probe)
+        assert _member(_stat_repr(stat), probe)
 
 
 @given(v=_dts)
@@ -92,10 +99,10 @@ def test_stat_matches_fractional_membership_never_false_misses(stat, probe):
     must hold in BOTH argument orders (a false miss drops committed
     rows — the set-semantics analogue of the round-6 zone-map fix)."""
     if _as_dt(stat) == _as_dt(probe):
-        assert _stat_matches(_stat_repr(stat), probe)
+        assert _member(_stat_repr(stat), probe)
     # symmetric form: the probe's repr stored, the stat used as probe
     if _as_dt(stat) == _as_dt(probe):
-        assert _stat_matches(_stat_repr(probe), stat)
+        assert _member(_stat_repr(probe), stat)
 
 
 @given(t=_temporal_frac, s=st.text(max_size=30))
@@ -107,10 +114,10 @@ def test_stat_matches_mixed_format_keeps_file_both_orders(t, s):
     non-temporal strings."""
     tr = _stat_repr(t)
     if _temporal_key(s) is None:
-        assert _stat_matches(tr, s) is True or s == tr
+        assert _member(tr, s) or s == tr
         # plain string stored, temporal probe → probe repr is temporal-
         # shaped, stored is not: ambiguous, must keep
-        assert _stat_matches(s, t) is True
+        assert _member(s, t)
 
 
 _nums = st.one_of(
@@ -141,18 +148,18 @@ def test_stat_matches_numeric_flavors_never_false_miss(v):
         if abs(i) < 2**53:  # float-exact range
             flavors.append(float(i))
     for flavor in flavors:
-        assert _stat_matches(stored, flavor), (stored, flavor)
+        assert _member(stored, flavor), (stored, flavor)
 
 
 @given(stat=_temporal_frac, probes=st.lists(_temporal_frac, min_size=1, max_size=6))
 @settings(max_examples=200, deadline=None)
 def test_membership_set_semantics_keep_when_any_probe_matches(stat, probes):
-    """live_files_pruned's set form — any(_stat_matches(stored, v)) —
+    """live_files_pruned's set form — any(_member(stored, v)) —
     must keep the file whenever ANY probe denotes the stored instant,
     regardless of which date/datetime flavors the list mixes."""
     stored = _stat_repr(stat)
     if any(_as_dt(stat) == _as_dt(p) for p in probes):
-        assert any(_stat_matches(stored, p) for p in probes)
+        assert any(_member(stored, p) for p in probes)
 
 
 @given(s=st.text(max_size=30), t=_temporal)
@@ -165,4 +172,4 @@ def test_temporal_vs_arbitrary_string_abstains_or_plain(s, t):
     tr = _stat_repr(t)
     if _temporal_key(s) is None:
         assert _ord_pair(tr, s) is None
-        assert _stat_matches(tr, s) is True or s == tr
+        assert _member(tr, s) or s == tr
